@@ -120,8 +120,11 @@ BENCH_NOTES: dict[str, str] = {
         "snappy 3.54/3.47 min vs zstd 3.68/3.76 — the ONE write path "
         "where zstd showed a consistent cost; durable tables/fixtures "
         "keep zstd (measured flat). Also r15: label-vs-star CC A/B "
-        "measured within noise (3.49 vs 3.37 min, labels identical, "
-        "scripts/cc_algo_ab_probe.py) — the auto default stands. "
+        "measured within noise (3.49 vs 3.37 min, labels identical; "
+        "the probe was removed with the algorithm= option) — the "
+        "label-then-star default stands. The gate no longer scopes "
+        "spark.sql.shuffle.partitions to 8 for the call (the knob was "
+        "removed: 8 tied the session default, 2.60 vs 2.58 s median). "
         "PLAN CHANGE in r14 (optimization round): each propagation "
         "round's convergence count now rides the checkpoint write as an "
         "Observation instead of a second agg job re-reading the "

@@ -2,9 +2,13 @@
 
 Everything a large-scale training-data pipeline runs over a corpus —
 deduplication, similarity search, text analysis, multimodal plumbing —
-expressed as pure-Catalyst plans wherever possible (``pyspark.sql.functions``
-higher-order functions keep the hot path JVM-side; Pandas UDFs appear only
-at the multimodal decode boundary where real codecs would live).
+expressed as Catalyst plans wherever possible: string work (tokenizing,
+hashing, joins, aggregation) stays JVM-side. Arrow-batched numpy kernels
+(``pandas_udf`` / ``mapInPandas`` / ``applyInPandas``) carry the numeric
+inner loops — the MinHash and SimHash signatures in ``dedup``, the LSH
+bucket, IVF, PCA and k-means kernels in ``similarity``, a few registry
+entries in ``queries`` — and the multimodal decode boundary where real
+codecs would live. Each kernel has one implementation.
 
 Modules:
 - :mod:`lakeshed.llm.text` — token counts, quality scoring, language ID,

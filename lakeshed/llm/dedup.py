@@ -5,7 +5,7 @@ Scale design (the whole point at 100 TB):
 - **exact**: one hash + one groupBy shuffle on the digest. Never compares
   texts pairwise.
 - **MinHash-LSH**: signatures are a narrow per-row projection (k universal
-  hashes over the token set, all JVM-side higher-order functions); banding
+  hashes over the hashed n-gram set, one Arrow/numpy kernel); banding
   explodes each doc into b band keys and self-joins on (band, band
   signature) — candidates only ever meet inside a bucket, ALL-PAIRS IS
   NEVER FORMED. Candidate pairs are then verified with exact Jaccard.
@@ -29,7 +29,7 @@ import uuid
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from lakeshed.llm._persist import release_persisted, scoped_persist  # noqa: F401
@@ -75,9 +75,8 @@ def shingles(col: Column | str, n: int = 1) -> Column:
 
 
 def hash_shingles(col: Column) -> Column:
-    """xxhash64 of each shingle — materialize this ONCE (as its own column)
-    before computing signatures, so the string hash is paid once per
-    element, not once per permutation."""
+    """xxhash64 of each shingle — the token hashes the SimHash kernel
+    votes over."""
     return F.transform(col, lambda s: F.xxhash64(s))
 
 
@@ -91,64 +90,6 @@ def hash_shingles_md5(col: Column) -> Column:
             F.substring(F.md5(s.cast("binary")), 1, 15), 16, 10
         ).cast("bigint"),
     )
-
-
-def minhash_signature(hashed: Column, params: Column) -> Column:
-    """k-permutation MinHash over a column of already-hashed shingles
-    (see :func:`hash_shingles`): h_i = min((a_i·h + b_i) mod M).
-
-    ``params`` is an array<struct<a,b>> ATTRIBUTE (broadcast one-row
-    frame, :func:`minhash_params_df`) rather than a literal — large
-    constant trees make every Catalyst rule pass crawl. All JVM
-    higher-order functions — no Python, no shuffle; HOFs evaluate
-    interpreted, so keep k modest and partition count high."""
-    return F.transform(
-        params,
-        lambda p: F.array_min(
-            F.transform(
-                hashed,
-                lambda h: F.pmod(p["a"] * h + p["b"], F.lit(_MERSENNE)),
-            )
-        ),
-    )
-
-
-def minhash_params_df(spark, num_hashes: int = 128, seed: int = 42):
-    """One-row frame carrying the (a_i, b_i) permutation parameters —
-    crossJoin(broadcast(...)) it onto the corpus before signing."""
-    a, b = _hash_params(num_hashes, seed)
-    return spark.createDataFrame(
-        [([{"a": a[i], "b": b[i]} for i in range(num_hashes)],)],
-        "__mh_params array<struct<a bigint, b bigint>>",
-    )
-
-
-def minhash_signature_arrow(num_hashes: int = 128, seed: int = 42):
-    """Arrow-batched numpy MinHash kernel over already-hashed shingles.
-
-    The permutation math ((a·h + b) mod M, min per permutation) is pure
-    arithmetic — numpy does the k×|set| grid in one vectorized expression
-    per row, ~10× the interpreted-HOF throughput (the sanctioned Pandas-UDF
-    escape hatch: string hashing stays JVM-side in hash_shingles; only
-    bigint arrays cross the Arrow boundary). int64 wrap-around matches the
-    JVM exactly (two's complement), so results equal the HOF path."""
-    a, b = _hash_params(num_hashes, seed)
-    av = np.asarray(a, dtype=np.int64)[:, None]
-    bv = np.asarray(b, dtype=np.int64)[:, None]
-
-    @F.pandas_udf("array<bigint>")
-    def kernel(hs: pd.Series) -> pd.Series:
-        out = []
-        with np.errstate(over="ignore"):
-            for arr in hs:
-                if len(arr) == 0:
-                    out.append(None)  # array_min of empty → null parity
-                    continue
-                h = np.asarray(arr, dtype=np.int64)[None, :]
-                out.append(((av * h + bv) % _MERSENNE).min(axis=1))
-        return pd.Series(out)
-
-    return kernel
 
 
 # odd 64-bit mixing constant (golden-ratio prime, xxhash's PRIME64_1 kin)
@@ -167,7 +108,8 @@ def minhash_packed_arrow(num_hashes: int = 128, seed: int = 42, n: int = 3):
     positions), deduped with np.unique, and min-hashed in the same numpy
     grid. Exact-Jaccard verification then runs on the hashed sets, which
     are bijective with the string n-gram sets up to 2⁻⁶⁴ collisions —
-    the parity test compares against the string-shingle path end to end.
+    ``test_minhash_lsh_equals_brute_force`` checks the pairs end to end
+    against the all-pairs string-shingle Jaccard.
 
     Short docs (< n tokens) fold only the tokens present — same "one
     partial gram" semantics as :func:`lakeshed.llm.text.ngrams`.
@@ -241,8 +183,7 @@ def simhash_arrow(bits: int = 64):
 
     Replaces the 64-unrolled interpreted-HOF bit-vote (one array pass PER
     BIT) with one (|tokens| × bits) popcount grid per row. Exact integer
-    math — bit-for-bit equal to :func:`simhash_from_hashes`, verified by
-    the parity unit test."""
+    math — bit ``i`` is set iff more than half the tokens have it set."""
     shifts = np.arange(bits, dtype=np.uint64)
 
     @F.pandas_udf("bigint")
@@ -400,8 +341,6 @@ def minhash_lsh_pairs(
     bands: int = 32,
     shingle: int = 1,
     seed: int = 42,
-    use_arrow: bool = True,
-    packed: bool = True,
     signatures=None,
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, exact Jaccard ≥ threshold) via
@@ -413,10 +352,10 @@ def minhash_lsh_pairs(
     which is how incremental dedup of a growing corpus avoids re-hashing
     old documents.
 
-    Plan (packed, the default): repartition (single-file corpora otherwise
-    serialize the signature math onto one core) → xxhash64 each TOKEN
-    (JVM) → one Arrow kernel folds token hashes into hashed n-gram sets +
-    MinHash signatures (:func:`minhash_packed_arrow`) → persist that
+    Plan: repartition (single-file corpora otherwise serialize the
+    signature math onto one core) → xxhash64 each TOKEN (JVM) → one
+    Arrow kernel folds token hashes into hashed n-gram sets + MinHash
+    signatures (:func:`minhash_packed_arrow`) → persist that
     narrow (id, sh, sig) frame so the band self-join and both verify legs
     reuse it instead of recomputing the pipeline per leg → explode b bands
     per doc (×b row blow-up of (id, 8-byte band hash) only — not the
@@ -425,9 +364,6 @@ def minhash_lsh_pairs(
     exact-Jaccard filter. Matches ``MinHashLSH.approxSimilarityJoin``'s
     shape (SURVEY §7.2 step 7) with the banding explicit. Default (b=32,
     r=4): P(candidate)=1-(1-J⁴)³² ≈ 0.9998 at J=0.7, ≈1-1e-30 at J=0.97.
-
-    ``packed=False`` restores the string-shingle pipeline (shingles built
-    JVM-side, Jaccard over string sets) — the parity baseline.
     """
     if bands < 1 or num_hashes % bands:
         # r11 review wave 11: bands > num_hashes made rows = 0, every
@@ -447,8 +383,7 @@ def minhash_lsh_pairs(
         )
         if hasattr(signatures, "properties"):
             _check_sig_props(signatures, num_hashes, seed, shingle)
-        sigs = base
-    elif packed:
+    else:
         base = minhash_signatures(
             df, text_col, id_col, num_hashes, seed, shingle
         )
@@ -457,42 +392,6 @@ def minhash_lsh_pairs(
         # the signature table you'd materialize to storage instead
         # (build_signature_table). Tracked for release_persisted().
         base = scoped_persist("minhash_lsh_pairs", base)
-        sigs = base
-    elif use_arrow:
-        spark = df.sparkSession
-        base = (
-            df.select(
-                F.col(id_col).alias("id"),
-                shingles(text_col, shingle).alias("sh"),
-            )
-            .where(F.size("sh") > 0)
-        )
-        base = spread(base, "id")
-        kernel = minhash_signature_arrow(num_hashes, seed)
-        sigs = base.withColumn("hs", hash_shingles(F.col("sh"))).select(
-            "id", "sh", kernel(F.col("hs")).alias("sig")
-        )
-    else:
-        spark = df.sparkSession
-        base = (
-            df.select(
-                F.col(id_col).alias("id"),
-                shingles(text_col, shingle).alias("sh"),
-            )
-            .where(F.size("sh") > 0)
-        )
-        base = spread(base, "id")
-        sigs = (
-            base.crossJoin(
-                F.broadcast(minhash_params_df(spark, num_hashes, seed))
-            )
-            .withColumn("hs", hash_shingles(F.col("sh")))
-            .select(
-                "id", "sh",
-                minhash_signature(F.col("hs"), F.col("__mh_params"))
-                .alias("sig"),
-            )
-        )
     # band key = xxhash64 of (band index, signature slice) — hashed
     # directly as an array (no stringify), the band INDEX folded into the
     # hash instead of riding as a second join column (r15, guide §2.3:
@@ -501,7 +400,7 @@ def minhash_lsh_pairs(
     # join). A 64-bit collision (within or across bands) only adds a
     # candidate pair, which the exact-Jaccard verify filters, so
     # correctness is unaffected.
-    banded = sigs.select(
+    banded = base.select(
         "id",
         F.explode(
             F.array(*[
@@ -622,6 +521,11 @@ def _cc_cleanup_at_exit() -> None:
 atexit.register(_cc_cleanup_at_exit)
 
 
+# label-propagation rounds dedup_clusters runs before it contracts the
+# graph through the current labels and finishes with star
+_LABEL_ROUNDS = 8
+
+
 def dedup_clusters(
     pairs: DataFrame,
     ids: DataFrame,
@@ -629,9 +533,6 @@ def dedup_clusters(
     id_b: str = "id_b",
     id_col: str = "id",
     max_iter: int = 20,
-    shuffle_partitions: int | None = None,
-    algorithm: str = "auto",
-    switch_after: int = 8,
 ) -> DataFrame:
     """Connected components over near-dup pairs → per-document cluster
     label (the min id in the component). Pair lists alone aren't
@@ -639,71 +540,151 @@ def dedup_clusters(
     ONE cluster so exactly one representative survives; this is the
     canonical post-LSH step.
 
-    Min-label propagation: every node starts labeled with its own id;
-    each round, a node adopts the smallest label among itself and its
-    neighbors; converges in O(component diameter) rounds — near-dup
-    clusters are shallow (diameter ≤ a few hops), so a handful of
-    shuffle-join rounds suffice. Each round's label frame is
-    checkpointed to STORAGE (parquet round-trip): that truncates the
-    plan lineage (an iterative join would otherwise compound the plan
-    exponentially) without leaking cached RDD blocks past the call —
-    and storage checkpoints are the right pattern for iterative jobs at
-    100 TB anyway (executor-memory checkpoints die with their executor;
-    a restarted stage re-reads the file). For adversarial chain-shaped
-    components pass ``algorithm="star"`` — the large-star/small-star
-    escalation below, same checkpoint harness.
+    Min-label propagation first: every node starts labeled with its own
+    id; each round, a node adopts the smallest label among itself and
+    its neighbors. It converges in O(component diameter) rounds, and
+    near-dup clusters are shallow (diameter ≤ a few hops), so on real
+    corpora a handful of shuffle-join rounds finish the job.
 
-    ``algorithm``: ``"auto"`` (default, r10 — VERDICT r9 #8 turned the
-    documented label-vs-star crossover into engine behavior) runs
-    min-label propagation and, if any label still changes after
-    ``switch_after`` rounds (a deep component — the r9 A/B showed label
-    needs O(diameter) rounds where star needs O(log n)), CONTRACTS the
-    graph through the current labels (each edge (u,v) becomes
-    (lbl(u), lbl(v)); a component's min node always keeps its own
-    label, so component minima survive contraction exactly) and
-    finishes with star on the contracted graph — the label rounds'
-    progress collapses the shallow regions, so star runs on a much
-    smaller edge set. ``"label"`` is pure min-label propagation —
-    O(component diameter) rounds. ``"star"`` is the alternating
+    A deep component (labels still moving after ``_LABEL_ROUNDS`` = 8
+    rounds) is finished differently: the graph is CONTRACTED through the
+    current labels (each edge (u,v) becomes (lbl(u), lbl(v)); a
+    component's min node always keeps its own label, so component
+    minima survive contraction exactly) and the alternating
     large-star/small-star algorithm (Kiveris et al., "Connected
-    Components in MapReduce and Beyond"): pointer-doubling-style hops
-    converge in O(log n) rounds even on adversarial chain-shaped
-    components. All produce identical clusters (min id per component).
+    Components in MapReduce and Beyond") runs on the contracted edge
+    set. Its pointer-doubling-style hops converge in O(log n) rounds
+    even on chain-shaped components, and the label rounds' progress has
+    already collapsed the shallow regions. Either way the result is the
+    min id per component.
 
-    ``shuffle_partitions`` scopes the join parallelism to the label
-    frame's size for the iteration's duration (each round is several
-    shuffles; at corpus-sample scale 32-way shuffles are pure overhead,
-    at 100 TB you'd raise it — same lever as state-store sizing). The
-    previous value is restored before returning; the returned frame is
-    checkpointed, so the restore cannot affect it.
+    ``max_iter`` (≥ 1) bounds the rounds of each phase. Star running out
+    of rounds before its fixed point raises ``RuntimeError`` — partial
+    stars are not component labels.
+
+    Each round's frame is checkpointed to STORAGE (parquet round-trip):
+    that truncates the plan lineage (an iterative join would otherwise
+    compound the plan exponentially) without leaking cached RDD blocks
+    past the call — and storage checkpoints are the right pattern for
+    iterative jobs at 100 TB anyway (executor-memory checkpoints die with
+    their executor; a restarted stage re-reads the file). The joins run
+    at the session's own shuffle parallelism; no session config is
+    touched.
 
     Checkpoint lifecycle: intermediate rounds are deleted before
     returning (only the converged frame's files remain; the returned
     DataFrame lazily reads them), and the surviving dir is removed at
     interpreter exit.
     """
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1 (got {max_iter})")
     spark = ids.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions",
-                       str(shuffle_partitions))
-    try:
-        if algorithm == "star":
-            return _star_clusters_impl(
-                pairs, ids, id_a, id_b, id_col, max_iter
-            )[0]
-        if algorithm == "auto":
-            return _dedup_clusters_impl(
-                pairs, ids, id_a, id_b, id_col, max_iter,
-                _switch_after=switch_after,
-            )
-        if algorithm != "label":
-            raise ValueError(f"unknown algorithm {algorithm!r}")
-        return _dedup_clusters_impl(
-            pairs, ids, id_a, id_b, id_col, max_iter
+    ck = _Ckpt(spark, "lakeshed-cc-")
+    edges = pairs.select(
+        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
+    )
+    edges = edges.union(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+    # materialize the edge list ONCE — every propagation round joins it,
+    # and without this each round would re-run the whole upstream pairs
+    # pipeline (LSH banding + verify) from scratch
+    edges = ck.put(edges, "edges")
+    # Iterate ONLY over pair-participating nodes: a doc with no near-dup
+    # edge can never change its label, so carrying it through every round
+    # would re-join and re-checkpoint the whole corpus per round. Near-dup
+    # nodes are a sliver of a 100 TB corpus — iterating the sliver and
+    # left-joining the result back once (singletons label themselves via
+    # coalesce) makes each round O(|edge nodes|), not O(|corpus|). The
+    # star variant below has the same shape.
+    lbl = ck.put(
+        edges.select(F.col("src").alias("id")).distinct()
+        .select("id", F.col("id").alias("lbl")),
+        "labels0",
+    )
+    converged = False
+    for it in range(min(max_iter, _LABEL_ROUNDS)):
+        nbr = (
+            edges.alias("e")
+            .join(lbl.alias("l"), F.col("e.src") == F.col("l.id"))
+            .select(F.col("e.dst").alias("id"), F.col("l.lbl").alias("lbl"))
+            .groupBy("id")
+            .agg(F.min("lbl").alias("nlbl"))
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        # the convergence count rides the checkpoint WRITE as an
+        # Observation (r14 optimization: one action per round instead of
+        # write + a second agg job that re-read the checkpoint; the chg
+        # flag also no longer widens the checkpoint files — each round's
+        # parquet carries only (id, lbl))
+        obs = Observation()
+        stepped = (
+            lbl.alias("c")
+            .join(nbr.alias("n"), F.col("c.id") == F.col("n.id"), "left")
+            .select(
+                F.col("c.id").alias("id"),
+                F.least(
+                    F.col("c.lbl"),
+                    F.coalesce(F.col("n.nlbl"), F.col("c.lbl")),
+                ).alias("lbl"),
+                (
+                    F.coalesce(F.col("n.nlbl"), F.col("c.lbl"))
+                    < F.col("c.lbl")
+                ).cast("int").alias("chg"),
+            )
+        )
+        lbl = ck.put(
+            stepped.observe(obs, F.sum("chg").alias("n"))
+            .select("id", "lbl"),
+            f"labels{it + 1}",
+        )
+        final_name = f"labels{it + 1}"
+        if not obs.get["n"]:
+            converged = True
+            break
+    if not converged:
+        # deep component detected (labels still moving after the cap):
+        # contract the graph through the current labels — every edge
+        # (u, v) becomes (lbl(u), lbl(v)); the shallow regions the label
+        # rounds already collapsed become self-loops and vanish, and a
+        # component's min node always keeps its own label (its closed
+        # neighborhood has no smaller id), so the contracted component's
+        # min IS the true component min. Star then converges in O(log n)
+        # rounds on the residual deep structure, and composing
+        # node → label → star-cluster yields the exact min-id labels.
+        contracted = (
+            edges.alias("e")
+            .join(lbl.alias("a"), F.col("e.src") == F.col("a.id"))
+            .join(lbl.alias("b"), F.col("e.dst") == F.col("b.id"))
+            .select(F.col("a.lbl").alias("src"),
+                    F.col("b.lbl").alias("dst"))
+            .where(F.col("src") != F.col("dst"))
+            .distinct()
+        )
+        cids = lbl.select(F.col("lbl").alias("id")).distinct()
+        star_out, _ = _star_clusters_impl(
+            contracted, cids, "src", "dst", "id", max_iter
+        )
+        lbl = ck.put(
+            lbl.alias("l")
+            .join(star_out.alias("s"), F.col("l.lbl") == F.col("s.id"))
+            .select(F.col("l.id").alias("id"),
+                    F.col("s.cluster").alias("lbl")),
+            "labels_star_composed",
+        )
+        final_name = "labels_star_composed"
+    ck.keep_only(final_name)
+    # assign singletons their own id in ONE pass over the corpus; the
+    # converged label frame is near-dup-nodes-sized, so AQE broadcasts it
+    # when it fits (no unconditional hint — "sliver of the corpus" can
+    # still exceed broadcast limits at 100 TB)
+    return (
+        ids.select(F.col(id_col).alias("id"))
+        .join(lbl.withColumnRenamed("lbl", "__l"), "id", "left")
+        .select(
+            F.col("id").alias(id_col),
+            F.coalesce(F.col("__l"), F.col("id")).alias("cluster"),
+        )
+    )
 
 
 def build_cluster_table(
@@ -718,7 +699,6 @@ def build_cluster_table(
     bands: int = 32,
     shingle: int = 1,
     seed: int = 42,
-    shuffle_partitions: int | None = None,
     mode: str = "error",
 ):
     """Materialize near-dup cluster labels (``id_col``, ``cluster``) to an
@@ -736,10 +716,7 @@ def build_cluster_table(
             docs, text_col=text_col, id_col=id_col, threshold=threshold,
             num_hashes=num_hashes, bands=bands, shingle=shingle, seed=seed,
         )
-        labels = dedup_clusters(
-            pairs, docs.select(id_col), id_col=id_col,
-            shuffle_partitions=shuffle_partitions,
-        )
+        labels = dedup_clusters(pairs, docs.select(id_col), id_col=id_col)
         return catalog.create_table(
             name, labels, mode=mode,
             properties=_cluster_props(
@@ -848,135 +825,6 @@ class _Ckpt:
         self.names = [name]
 
 
-def _dedup_clusters_impl(
-    pairs: DataFrame,
-    ids: DataFrame,
-    id_a: str,
-    id_b: str,
-    id_col: str,
-    max_iter: int,
-    _switch_after: int | None = None,
-) -> DataFrame:
-    spark = ids.sparkSession
-    ck = _Ckpt(spark, "lakeshed-cc-")
-
-    def _materialize(df: DataFrame, name: str) -> DataFrame:
-        return ck.put(df, name)
-
-    edges = pairs.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-    )
-    edges = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    # materialize the edge list ONCE — every propagation round joins it,
-    # and without this each round would re-run the whole upstream pairs
-    # pipeline (LSH banding + verify) from scratch
-    edges = _materialize(edges, "edges")
-    # Iterate ONLY over pair-participating nodes: a doc with no near-dup
-    # edge can never change its label, so carrying it through every round
-    # would re-join and re-checkpoint the whole corpus per round. Near-dup
-    # nodes are a sliver of a 100 TB corpus — iterating the sliver and
-    # left-joining the result back once (singletons label themselves via
-    # coalesce) makes each round O(|edge nodes|), not O(|corpus|). The
-    # star variant below has the same shape.
-    lbl = _materialize(
-        edges.select(F.col("src").alias("id")).distinct()
-        .select("id", F.col("id").alias("lbl")),
-        "labels0",
-    )
-    final_name = "labels0"  # survives max_iter <= 0: identity labels
-    converged = max_iter <= 0  # no rounds requested = nothing to converge
-    rounds_cap = (max_iter if _switch_after is None
-                  else min(max_iter, _switch_after))
-    for it in range(rounds_cap):
-        nbr = (
-            edges.alias("e")
-            .join(lbl.alias("l"), F.col("e.src") == F.col("l.id"))
-            .select(F.col("e.dst").alias("id"), F.col("l.lbl").alias("lbl"))
-            .groupBy("id")
-            .agg(F.min("lbl").alias("nlbl"))
-        )
-        # the convergence count rides the checkpoint WRITE as an
-        # Observation (r14 optimization: one action per round instead of
-        # write + a second agg job that re-read the checkpoint; the chg
-        # flag also no longer widens the checkpoint files — each round's
-        # parquet carries only (id, lbl))
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        stepped = (
-            lbl.alias("c")
-            .join(nbr.alias("n"), F.col("c.id") == F.col("n.id"), "left")
-            .select(
-                F.col("c.id").alias("id"),
-                F.least(
-                    F.col("c.lbl"),
-                    F.coalesce(F.col("n.nlbl"), F.col("c.lbl")),
-                ).alias("lbl"),
-                (
-                    F.coalesce(F.col("n.nlbl"), F.col("c.lbl"))
-                    < F.col("c.lbl")
-                ).cast("int").alias("chg"),
-            )
-        )
-        merged = _materialize(
-            stepped.observe(obs, F.sum("chg").alias("n"))
-            .select("id", "lbl"),
-            f"labels{it + 1}",
-        )
-        n_changed = obs.get["n"] or 0
-        lbl = merged
-        final_name = f"labels{it + 1}"
-        if n_changed == 0:
-            converged = True
-            break
-    if _switch_after is not None and not converged:
-        # deep component detected (labels still moving after the cap):
-        # contract the graph through the current labels — every edge
-        # (u, v) becomes (lbl(u), lbl(v)); the shallow regions the label
-        # rounds already collapsed become self-loops and vanish, and a
-        # component's min node always keeps its own label (its closed
-        # neighborhood has no smaller id), so the contracted component's
-        # min IS the true component min. Star then converges in O(log n)
-        # rounds on the residual deep structure, and composing
-        # node → label → star-cluster yields the exact min-id labels.
-        contracted = (
-            edges.alias("e")
-            .join(lbl.alias("a"), F.col("e.src") == F.col("a.id"))
-            .join(lbl.alias("b"), F.col("e.dst") == F.col("b.id"))
-            .select(F.col("a.lbl").alias("src"),
-                    F.col("b.lbl").alias("dst"))
-            .where(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-        cids = lbl.select(F.col("lbl").alias("id")).distinct()
-        star_out, _ = _star_clusters_impl(
-            contracted, cids, "src", "dst", "id", max_iter
-        )
-        lbl = ck.put(
-            lbl.alias("l")
-            .join(star_out.alias("s"), F.col("l.lbl") == F.col("s.id"))
-            .select(F.col("l.id").alias("id"),
-                    F.col("s.cluster").alias("lbl")),
-            "labels_star_composed",
-        )
-        final_name = "labels_star_composed"
-    ck.keep_only(final_name)
-    # assign singletons their own id in ONE pass over the corpus; the
-    # converged label frame is near-dup-nodes-sized, so AQE broadcasts it
-    # when it fits (no unconditional hint — "sliver of the corpus" can
-    # still exceed broadcast limits at 100 TB)
-    return (
-        ids.select(F.col(id_col).alias("id"))
-        .join(lbl.withColumnRenamed("lbl", "__l"), "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            F.coalesce(F.col("__l"), F.col("id")).alias("cluster"),
-        )
-    )
-
-
 def _star_clusters_impl(
     pairs: DataFrame,
     ids: DataFrame,
@@ -993,7 +841,9 @@ def _star_clusters_impl(
     state is one star per component centered at its minimum id, reached
     in O(log n) rounds even on chain-shaped components where label
     propagation needs O(diameter). Returns (labels, rounds) — rounds is
-    exposed for the convergence-rate test."""
+    exposed for the convergence-rate test. Raises ``RuntimeError`` when
+    ``max_iter`` rounds end before the fixed point: labels read off
+    partial stars are not the component minima."""
     spark = ids.sparkSession
     ck = _Ckpt(spark, "lakeshed-cc-star-")
     e = (
@@ -1003,8 +853,6 @@ def _star_clusters_impl(
     )
     e = ck.put(e, "edges0")
     prev_sig = None
-    rounds = 0
-    final_name = "edges0"
     for it in range(max_iter):
         sym = e.union(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -1035,12 +883,9 @@ def _star_clusters_impl(
             .where(F.col("src") != F.col("dst"))
             .distinct()
         )
-        final_name = f"edges{it + 1}"
         # fixed-point signature rides the checkpoint write (Observation)
         # instead of a second agg job re-reading it (r14 optimization —
         # same change as the label loop above)
-        from pyspark.sql import Observation
-
         obs = Observation()
         e = ck.put(
             sm.observe(
@@ -1048,14 +893,17 @@ def _star_clusters_impl(
                 F.count(F.lit(1)).alias("c"),
                 F.sum(F.xxhash64("src", "dst")).alias("h"),
             ),
-            final_name,
+            f"edges{it + 1}",
         )
-        rounds += 1
         row = obs.get
         sig = (row["c"], row["h"])
         if sig == prev_sig:
             break
         prev_sig = sig
+    else:
+        raise RuntimeError(
+            f"connected components did not converge within "
+            f"max_iter={max_iter} star rounds — raise max_iter")
     # stable stars: every member points at its component's min id;
     # centers and isolated docs label themselves
     members = e.groupBy("src").agg(F.min("dst").alias("lbl"))
@@ -1068,7 +916,7 @@ def _star_clusters_impl(
     ck.keep_only("labels")
     return (
         out.select(F.col("id").alias(id_col), F.col("lbl").alias("cluster")),
-        rounds,
+        it + 1,
     )
 
 
@@ -1147,46 +995,12 @@ def ngram_jaccard_pairs_brute(
     )
 
 
-def simhash_from_hashes(hashed: Column, bits: int = 64) -> Column:
-    """SimHash signature from a column of per-token hashes: each bit votes
-    ±1 across tokens, sign of the vote per position → packed bigint.
-
-    The bit loop unrolls in Python (shift amounts must be literals for the
-    JVM shift functions); vote for bit i = 2·count(bit set) − n → set iff
-    positive. Feed ALREADY-hashed tokens (:func:`hash_shingles`
-    materialized as its own column) — HOFs evaluate interpreted, so the
-    string hash must not be re-paid per bit."""
-    n = F.size(hashed)
-
-    def bit_pred(i: int):
-        # NB: must close over i with a 1-arg lambda — pyspark treats a
-        # 2-arg lambda as (element, index) and would rebind i to a Column
-        return lambda h: F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1
-
-    sig = F.lit(0).cast("bigint")
-    for i in range(bits):
-        set_cnt = F.size(F.filter(hashed, bit_pred(i)))
-        sig = sig + F.when(
-            set_cnt * 2 > n, F.shiftleft(F.lit(1).cast("bigint"), i)
-        ).otherwise(F.lit(0).cast("bigint"))
-    return sig
-
-
-def simhash(col: Column | str, bits: int = 64) -> Column:
-    """SimHash of a text column (convenience form — prefer materializing
-    :func:`hash_shingles` first when computing over a whole corpus)."""
-    return simhash_from_hashes(
-        hash_shingles(F.array_distinct(tokens(col))), bits
-    )
-
-
 def simhash_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
     bits: int = 64,
-    use_arrow: bool = True,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """SimHash near-dup pairs within Hamming distance ``max_hamming``.
@@ -1209,10 +1023,7 @@ def simhash_pairs(
         raise ValueError(
             f"max_hamming + 1 must not exceed bits (got "
             f"max_hamming={max_hamming}, bits={bits})")
-    sig_expr = (
-        simhash_arrow(bits) if use_arrow
-        else lambda c: simhash_from_hashes(c, bits)
-    )
+    kernel = simhash_arrow(bits)
     hasher = hash_shingles_md5 if hash_fn == "md5" else hash_shingles
     sig = (
         spread(df, id_col)
@@ -1226,7 +1037,7 @@ def simhash_pairs(
         # job with an opaque len(None) TypeError). The minhash paths
         # carry the same guard.
         .where(F.size("hs") > 0)
-        .select("id", sig_expr(F.col("hs")).alias("sig"))
+        .select("id", kernel(F.col("hs")).alias("sig"))
     )
     # both legs of the pigeonhole self-join read this; persisting the
     # (id, sig) pair frame halves the signature computation.

@@ -708,10 +708,7 @@ def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup.minhash_lsh_pairs(
         docs, threshold=0.7, num_hashes=128, bands=32, shingle=3
     )
-    return dedup.dedup_clusters(
-        pairs, docs.select("doc_id"), id_col="doc_id",
-        shuffle_partitions=8,
-    )
+    return dedup.dedup_clusters(pairs, docs.select("doc_id"), id_col="doc_id")
 
 
 # md5-bucket of the CLUSTER label (same arithmetic as the samplers, salt
@@ -761,7 +758,6 @@ def llm_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         _CLUSTER_TABLE_CACHE[sf_dir] = dedup.build_cluster_table(
             docs, cat, "default.doc_clusters",
             threshold=0.7, num_hashes=128, bands=32, shingle=3,
-            shuffle_partitions=8,
         )
     labels = _CLUSTER_TABLE_CACHE[sf_dir].read()
     return sampling.leakage_safe_split(
@@ -1299,13 +1295,14 @@ def llm_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     join); the LM frame is vocab²-bounded, tiny next to the corpus.
 
     r15 note (VERDICT r14 #8, attempted and REVERTED): sharing one
-    persisted doc_bigrams frame between the train and score legs
-    measured SLOWER on an interleaved quiet A/B
-    (scripts/lm_grams_ab_probe.py: min 1.127 -> 1.180 s, median 1.18 ->
-    1.31) — materializing the exploded O(total tokens) gram frame costs
-    more than the tokenize it saves, locally AND by the engine's own
-    100 TB space-time convention (the persist_occurrences=False
-    default makes the same call for the substring kernels)."""
+    persisted exploded-bigram frame between the train and score legs
+    measured SLOWER on an interleaved quiet A/B (min 1.127 -> 1.180 s,
+    median 1.18 -> 1.31; recorded in OPTIMIZATION_r15.md) —
+    materializing the exploded O(total tokens) gram frame costs more
+    than the tokenize it saves, locally AND by the engine's own 100 TB
+    space-time convention (the persist_occurrences=False default makes
+    the same call for the substring kernels). The sharing hook was
+    removed as inert API."""
     docs = load_star(spark, sf_dir, "documents")["documents"]
     lm = text.bigram_lm(docs)
     return text.lm_score(docs, lm)

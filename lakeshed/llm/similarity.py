@@ -200,28 +200,6 @@ def _hyperplanes(dim: int, bits: int, tables: int, seed: int = 42
     ]
 
 
-def _all_plane_dots(vec_d: Column, pt: Column, dim: int,
-                    n_planes: int) -> Column:
-    """All plane·vector products in ONE array pass.
-
-    acc[j] += pt[i][j] · v[i] folded over the dimension index — a single
-    interpreted ``aggregate`` with one zip per dimension, instead of one
-    aggregate (and one array alloc) per plane. ``pt`` is the transposed
-    plane matrix as an ATTRIBUTE (broadcast one-row frame), NOT a literal:
-    an 8k-node literal tree makes every Catalyst rule pass crawl — plan
-    analysis, not execution, was the measured bottleneck. (Fully unrolled
-    arithmetic was also tried: OOMs janino codegen.)"""
-    return F.aggregate(
-        F.sequence(F.lit(1), F.lit(dim)),
-        F.array_repeat(F.lit(0.0), n_planes),
-        lambda acc, i: F.zip_with(
-            acc,
-            F.element_at(pt, i),
-            lambda a, c: a + c * F.element_at(vec_d, i),
-        ),
-    )
-
-
 def _bucket_arrow(flat_planes: list[list[float]], bits: int, tables: int):
     """Arrow-batched signature kernel: matmul the plane matrix AND pack the
     per-table sign bits in numpy — one ``(batch × dim) @ (dim × planes)``
@@ -260,16 +238,6 @@ def _bucket_arrow(flat_planes: list[list[float]], bits: int, tables: int):
     return kernel
 
 
-def _pack_bucket(dots: Column, offset: int, bits: int) -> Column:
-    """Sign bits of dots[offset..offset+bits) packed into a bigint."""
-    out = F.lit(0).cast("bigint")
-    for i in range(bits):
-        out = out + F.when(
-            dots[offset + i] >= 0, F.shiftleft(F.lit(1).cast("bigint"), i)
-        ).otherwise(F.lit(0).cast("bigint"))
-    return out
-
-
 def lsh_index(
     df: DataFrame,
     dim: int,
@@ -278,59 +246,26 @@ def lsh_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Precompute the multi-table signature index: one row per (table,
     bucket, id). Persist/bucketBy this by (table, bucket) in production —
     probes then touch single buckets."""
-    planes = _hyperplanes(dim, bits, tables, seed)
-    flat = [p for tbl in planes for p in tbl]
-    n_planes = len(flat)
+    flat = [p for tbl in _hyperplanes(dim, bits, tables, seed) for p in tbl]
+    kernel = _bucket_arrow(flat, bits, tables)
     # a NULL embedding has no geometry: it can never bucket, never pair
     # — drop it here instead of crashing the signature kernel (wave 23)
-    part = spread(df.where(F.col(vec_col).isNotNull()))
-    if use_arrow:
-        kernel = _bucket_arrow(flat, bits, tables)
-        return (
-            part.select(
-                F.col(id_col).alias("id"),
-                F.col(vec_col).alias("v"),
-                kernel(F.col(vec_col)).alias("buckets"),
-            )
-            .select(
-                "id", "v",
-                F.posexplode("buckets").alias("tbl", "bucket"),
-            )
-        )
-    else:
-        # transposed plane matrix as DATA (one broadcast row), not expression
-        transposed = [[float(flat[j][i]) for j in range(n_planes)]
-                      for i in range(dim)]
-        pt_df = df.sparkSession.createDataFrame(
-            [(transposed,)], "pt array<array<double>>"
-        )
-        base = part.crossJoin(F.broadcast(pt_df)).select(
+    return (
+        spread(df.where(F.col(vec_col).isNotNull()))
+        .select(
             F.col(id_col).alias("id"),
             F.col(vec_col).alias("v"),
-            # cast to double ONCE; the dot pass reuses it
-            F.transform(F.col(vec_col), lambda x: x.cast("double"))
-            .alias("vd"),
-            F.col("pt"),
-        ).select(
+            kernel(F.col(vec_col)).alias("buckets"),
+        )
+        .select(
             "id", "v",
-            _all_plane_dots(F.col("vd"), F.col("pt"), dim, n_planes)
-            .alias("dots"),
+            F.posexplode("buckets").alias("tbl", "bucket"),
         )
-    entries = F.array(*[
-        F.struct(
-            F.lit(t).alias("tbl"),
-            _pack_bucket(F.col("dots"), t * bits, bits).alias("bucket"),
-        )
-        for t in range(tables)
-    ])
-    return base.select(
-        "id", "v", F.explode(entries).alias("e")
-    ).select("id", "v", "e.tbl", "e.bucket")
+    )
 
 
 def ann_pairs_lsh(

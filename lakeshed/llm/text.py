@@ -144,38 +144,20 @@ def quality_rules(df: DataFrame, text_col: str = "text",
     )
 
 
-def doc_bigrams(df: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
-    """The exploded per-document bigram frame ``(id_col, gram)`` both
-    :func:`bigram_lm` and :func:`lm_score` consume. Exposed so a caller
-    training the LM on the SAME corpus it scores (the self-scoring
-    quality-filter shape) can tokenize once, persist this frame, and
-    feed it to both legs — otherwise each leg re-tokenizes the corpus
-    (r14 VERDICT #8). The frame is O(total tokens) rows; persist it via
-    ``scoped_persist`` and release with ``release_persisted`` like the
-    other kernel frames."""
-    return df.where(F.size(tokens(text_col)) >= 2).select(
-        F.col(id_col), F.explode(ngrams(tokens(text_col), 2)).alias("gram")
-    )
-
-
-def bigram_lm(df: DataFrame, text_col: str = "text",
-              grams: DataFrame | None = None) -> DataFrame:
+def bigram_lm(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Corpus bigram language model: ``(gram, p)`` with
     P(w2|w1) = c(w1 w2) / Σ_w c(w1 w), the maximum-likelihood conditional
     over observed contexts — the CCNet/KenLM-style LM used to score text
     quality, minus the external model file. One explode+count shuffle
     over the corpus (map-side combining), then a small self-aggregation
     for the context totals; at 100 TB the LM frame is vocabulary²-bounded
-    — tiny next to the corpus — and joins back by gram key.
-
-    ``grams``: optional pre-built gram frame (any frame with a ``gram``
-    column, e.g. a persisted :func:`doc_bigrams`) — identical counts by
-    construction, skips this function's own tokenize+explode pass."""
-    g = (grams.select("gram") if grams is not None
-         else df.where(F.size(tokens(text_col)) >= 2).select(
-             F.explode(ngrams(tokens(text_col), 2)).alias("gram")))
-    counts = g.groupBy("gram").agg(F.count(F.lit(1)).alias("c"))
+    — tiny next to the corpus — and joins back by gram key."""
+    counts = (
+        df.where(F.size(tokens(text_col)) >= 2)
+        .select(F.explode(ngrams(tokens(text_col), 2)).alias("gram"))
+        .groupBy("gram")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
     ctx = (
         counts.select(
             F.split(F.col("gram"), " ").getItem(0).alias("w1"), "c"
@@ -193,23 +175,21 @@ def bigram_lm(df: DataFrame, text_col: str = "text",
 
 
 def lm_score(df: DataFrame, lm: DataFrame, text_col: str = "text",
-             id_col: str = "doc_id",
-             grams: DataFrame | None = None) -> DataFrame:
+             id_col: str = "doc_id") -> DataFrame:
     """Per-document LM quality score: mean ln P(w_i | w_{i-1}) under a
     :func:`bigram_lm` frame — fluent text scores high, shuffled or
     boilerplate text low (the CCNet perplexity-bucket filter shape).
     Docs explode to bigrams and join the LM on the gram key (one shuffle;
     grams unseen by the LM drop out of the inner join — score only what
     the model knows). Sub-2-token docs have no bigrams and are absent
-    from the result.
-
-    ``grams``: optional pre-built ``(id_col, gram)`` frame (a persisted
-    :func:`doc_bigrams`) — same rows by construction, skips this
-    function's own tokenize+explode pass."""
-    grams = grams if grams is not None else doc_bigrams(
-        df, text_col, id_col)
+    from the result."""
     return (
-        grams.join(lm, "gram")
+        df.where(F.size(tokens(text_col)) >= 2)
+        .select(
+            F.col(id_col),
+            F.explode(ngrams(tokens(text_col), 2)).alias("gram"),
+        )
+        .join(lm, "gram")
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),

@@ -102,66 +102,123 @@ def test_exact_dedup_keeps_min_id(spark):
     assert out == {1: 2, 3: 1}
 
 
-def test_arrow_kernels_match_hof_paths(spark):
-    """The Arrow/numpy signature kernels are exact integer math and must be
-    bit-for-bit equal to the interpreted-HOF implementations they replace."""
-    docs = _docs(spark).limit(40)
-    base = docs.select(
-        F.col("doc_id").alias("id"),
-        dedup.hash_shingles(dedup.shingles("text", 3)).alias("hs"),
-    ).where(F.size("hs") > 0)
-
-    hof_sig = {
-        r.id: tuple(r.sig)
-        for r in base.crossJoin(
-            F.broadcast(dedup.minhash_params_df(spark, 32))
-        ).select(
-            "id",
-            dedup.minhash_signature(F.col("hs"), F.col("__mh_params"))
-            .alias("sig"),
-        ).collect()
-    }
-    arrow_sig = {
-        r.id: tuple(r.sig)
-        for r in base.select(
-            "id", dedup.minhash_signature_arrow(32)(F.col("hs")).alias("sig")
-        ).collect()
-    }
-    assert hof_sig == arrow_sig
-
-    hof_sim = {
-        r.id: r.sig
-        for r in base.select(
-            "id", dedup.simhash_from_hashes(F.col("hs")).alias("sig")
-        ).collect()
-    }
-    arrow_sim = {
-        r.id: r.sig
-        for r in base.select(
-            "id", dedup.simhash_arrow()(F.col("hs")).alias("sig")
-        ).collect()
-    }
-    assert hof_sim == arrow_sim
+_U64 = (1 << 64) - 1
 
 
-def test_lsh_index_arrow_matches_hof_buckets(spark):
-    """Arrow matmul plane-dots produce the same (table, bucket) entries as
-    the HOF fold for the fixture vectors (no dots near the sign boundary)."""
-    emb = _emb(spark).limit(50)
-    dim = len(emb.select("embedding").first()[0])
-    a = sorted(
-        (r.id, r.tbl, r.bucket)
-        for r in similarity.lsh_index(
-            emb, dim, bits=4, tables=4, use_arrow=True
-        ).collect()
+def _wrap64(x: int) -> int:
+    """Python int → the int64 two's-complement value the JVM and the numpy
+    kernels hold after overflow."""
+    x &= _U64
+    return x - (1 << 64) if x >> 63 else x
+
+
+def _minhash_oracle(hs, num_hashes: int, seed: int, n: int):
+    """Per-doc reference for ``minhash_packed_arrow``: fold every window
+    of n consecutive token hashes as g = (g·P) ⊕ h (a doc shorter than n
+    folds the tokens it has), dedupe the grams in unsigned order, then
+    sig_i = min over grams of (a_i·g + b_i) mod M with the product and
+    sum wrapping in int64."""
+    h = [x & _U64 for x in hs]
+    prime = int(dedup._GRAM_PRIME)
+    grams = set()
+    for start in range(max(len(h) - n + 1, 1)):
+        g = 0
+        for x in h[start:start + n]:
+            g = ((g * prime) & _U64) ^ x
+        grams.add(g)
+    sh = [_wrap64(g) for g in sorted(grams)]
+    a, b = dedup._hash_params(num_hashes, seed)
+    sig = [min(_wrap64(ai * g + bi) % dedup._MERSENNE for g in sh)
+           for ai, bi in zip(a, b)]
+    return sh, sig
+
+
+def _simhash_oracle(hs, bits: int) -> int:
+    """Per-bit popcount vote: bit i is set iff more than half the token
+    hashes have bit i set."""
+    h = [x & _U64 for x in hs]
+    sig = 0
+    for i in range(bits):
+        if 2 * sum((x >> i) & 1 for x in h) > len(h):
+            sig |= 1 << i
+    return _wrap64(sig)
+
+
+def _hashed_token_docs(spark, distinct: bool):
+    """Fixture docs plus short ones (1 and 2 tokens, fewer than a 3-gram)
+    and a repeated-token doc, with their JVM xxhash64 token hashes."""
+    from lakeshed.llm.text import tokens
+
+    rows = [(r.doc_id, r.text) for r in _docs(spark).limit(40).collect()]
+    rows += [(-1, "one"), (-2, "two words"), (-3, "x x x x x")]
+    toks = tokens("text")
+    if distinct:
+        toks = F.array_distinct(toks)
+    return spark.createDataFrame(rows, "doc_id bigint, text string").select(
+        "doc_id", dedup.hash_shingles(toks).alias("hs")
     )
-    b = sorted(
-        (r.id, r.tbl, r.bucket)
-        for r in similarity.lsh_index(
-            emb, dim, bits=4, tables=4, use_arrow=False
+
+
+def test_minhash_packed_arrow_matches_numpy_oracle(spark):
+    """The batch-vectorized MinHash kernel (n-gram fold, per-doc dedupe,
+    segment minima) returns exactly the per-doc reference's hashed gram
+    set and signature — including docs shorter than n tokens."""
+    base = _hashed_token_docs(spark, distinct=False)
+    for n in (1, 3):
+        kernel = dedup.minhash_packed_arrow(32, 7, n)
+        rows = base.select(
+            "hs", kernel(F.col("hs")).alias("p")
         ).collect()
+        assert len(rows) == 43
+        for r in rows:
+            sh, sig = _minhash_oracle(r.hs, 32, 7, n)
+            assert list(r.p.sh) == sh
+            assert list(r.p.sig) == sig
+
+
+def test_simhash_arrow_matches_numpy_oracle(spark):
+    """The SimHash kernel's popcount grid equals the per-bit vote, at full
+    width and at a narrower signature."""
+    base = _hashed_token_docs(spark, distinct=True)
+    for bits in (64, 16):
+        rows = base.select(
+            "hs", dedup.simhash_arrow(bits)(F.col("hs")).alias("sig")
+        ).collect()
+        assert len(rows) == 43
+        for r in rows:
+            assert r.sig == _simhash_oracle(r.hs, bits)
+
+
+def test_lsh_index_matches_numpy_oracle(spark):
+    """lsh_index entries equal the sign bits of v @ planes from the same
+    seeded hyperplanes, packed per table (bit i of table t ← plane
+    t·bits + i)."""
+    import numpy as np
+
+    src = _emb(spark)
+    emb = spark.createDataFrame(src.limit(50).collect(), src.schema)
+    vecs = {r.vec_id: r.embedding for r in emb.collect()}
+    dim = len(next(iter(vecs.values())))
+    bits, tables = 4, 4
+    planes = np.asarray(
+        [p for tbl in similarity._hyperplanes(dim, bits, tables) for p in tbl]
     )
-    assert a == b
+    ids = sorted(vecs)
+    dots = np.asarray([vecs[i] for i in ids], dtype=np.float64) @ planes.T
+    # the comparison is exact only away from the sign boundary
+    assert np.abs(dots).min() > 1e-9
+    signs = (dots >= 0).reshape(len(ids), tables, bits).astype(np.int64)
+    buckets = signs @ (1 << np.arange(bits))
+    want = sorted(
+        (vid, t, int(buckets[k, t]))
+        for k, vid in enumerate(ids) for t in range(tables)
+    )
+    got = sorted(
+        (r.id, r.tbl, r.bucket)
+        for r in similarity.lsh_index(emb, dim, bits=bits, tables=tables)
+        .collect()
+    )
+    assert got == want
 
 
 def test_ann_pairs_lsh_equals_brute_force(spark):
@@ -426,10 +483,10 @@ def test_pack_tokens_window_arithmetic(spark):
 
 
 def test_dedup_clusters_star_equals_label_and_converges_fast(spark):
-    """large-star/small-star must produce the identical clusters as
-    min-label propagation, and on a deliberately chain-shaped component
-    (50-node path graph) converge in O(log n) rounds where label
-    propagation needs O(diameter)."""
+    """large-star/small-star alone must produce the identical clusters as
+    the public label-then-star path, and on a deliberately chain-shaped
+    component (50-node path graph) converge in O(log n) rounds where
+    label propagation needs O(diameter)."""
     from pyspark.sql import functions as F
 
     from lakeshed.llm import dedup
@@ -453,23 +510,19 @@ def test_dedup_clusters_star_equals_label_and_converges_fast(spark):
     assert got == want
     assert rounds <= 12, f"star took {rounds} rounds on a 50-path"
 
-    lbl = dedup.dedup_clusters(
-        pairs, ids, max_iter=60, algorithm="label"
-    )
-    assert {r.id: r.cluster for r in lbl.collect()} == want
-
-    public = dedup.dedup_clusters(pairs, ids, algorithm="star")
+    public = dedup.dedup_clusters(pairs, ids, max_iter=60)
     assert {r.id: r.cluster for r in public.collect()} == want
 
 
 def test_star_round_count_scales_logarithmically(spark):
-    """When to prefer algorithm='star': round count. On a 200-node path
+    """Why deep components finish with star: round count. On a 200-node path
     (diameter 199 — the adversarial shape for min-label propagation,
     which needs O(diameter) rounds) large-star/small-star must converge
     in O(log n) rounds. 4× the 50-path above, the round count may grow
-    by ~2 (log2 scaling), not ~4× (linear scaling) — documenting the
-    crossover: label for shallow near-dup clusters (diameter ≤ a few
-    hops, fewer shuffles per round), star for chain-shaped components."""
+    by ~2 (log2 scaling), not ~4× (linear scaling) — the crossover
+    dedup_clusters encodes: label for shallow near-dup clusters
+    (diameter ≤ a few hops, fewer shuffles per round), star for
+    chain-shaped components."""
     from lakeshed.llm import dedup
 
     n = 200
@@ -514,7 +567,7 @@ def test_dedup_clusters_checkpoint_lifecycle(spark):
     }
     # star path cleans up the same way
     before = set(dedup._CC_CKPT_DIRS)
-    out = dedup.dedup_clusters(pairs, ids, algorithm="star")
+    out, _ = dedup._star_clusters_impl(pairs, ids, "id_a", "id_b", "id", 20)
     new_dirs = [d for d in dedup._CC_CKPT_DIRS if d not in before]
     kept = [d for d in os.listdir(new_dirs[0]) if not d.startswith(".")]
     assert kept == ["labels"]
@@ -891,17 +944,26 @@ def test_partial_oracle_gate_flags_all_true(spark):
     assert sum(not r.f for r in flipped) > len(flipped) * 0.9
 
 
-def test_dedup_clusters_auto_switches_to_star_on_deep_components(spark):
-    """algorithm='auto' (r10, VERDICT r9 #8): label propagation with a
-    round cap that contracts through the current labels and finishes
-    with star. On a 120-node path (diameter 119) with switch_after=3,
-    pure label at max_iter=30 CANNOT converge (returns partially
-    propagated labels), but auto must return the exact min-id clusters
-    — the contraction keeps the label rounds' progress and star closes
-    the deep residue in O(log n) rounds."""
+def test_dedup_clusters_auto_switches_to_star_on_deep_components(
+        spark, monkeypatch):
+    """Label propagation is capped at _LABEL_ROUNDS (8) rounds; a deeper
+    component is contracted through the current labels and finished with
+    star. On a 120-node path (diameter 119) the default call must take
+    the star phase and still return the exact min-id clusters — the
+    contraction keeps the label rounds' progress and star closes the
+    deep residue in O(log n) rounds."""
     from lakeshed.llm import dedup
 
+    star_calls = []
+    real_star = dedup._star_clusters_impl
+
+    def _spy(*a, **k):
+        star_calls.append(a[-1])
+        return real_star(*a, **k)
+
+    monkeypatch.setattr(dedup, "_star_clusters_impl", _spy)
     n = 120
+    assert n - 1 > dedup._LABEL_ROUNDS
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a bigint, id_b bigint"
     )
@@ -911,24 +973,15 @@ def test_dedup_clusters_auto_switches_to_star_on_deep_components(spark):
     want = {i: 0 for i in range(n)}
     want[500] = 500  # singleton labels itself
 
-    # pure label under the same budget provably does NOT finish —
-    # the auto result below is not just label-in-disguise
-    partial = dedup.dedup_clusters(
-        pairs, ids, max_iter=3, algorithm="label"
-    )
-    assert {r.id: r.cluster for r in partial.collect()} != want
-
-    got = dedup.dedup_clusters(
-        pairs, ids, max_iter=30, algorithm="auto", switch_after=3
-    )
+    got = dedup.dedup_clusters(pairs, ids)
     assert {r.id: r.cluster for r in got.collect()} == want
+    assert star_calls == [20]  # one star phase, with the max_iter budget
 
 
 def test_dedup_clusters_auto_stays_label_on_shallow_components(spark,
                                                                monkeypatch):
-    """auto must NOT pay the star phase when label propagation converges
-    within switch_after rounds (the shape real near-dup corpora have) —
-    the default path is byte-identical to algorithm='label'."""
+    """The star phase must NOT run when label propagation converges
+    within the round cap (the shape real near-dup corpora have)."""
     from lakeshed.llm import dedup
 
     def _boom(*a, **k):  # star must never run
@@ -941,10 +994,61 @@ def test_dedup_clusters_auto_stays_label_on_shallow_components(spark,
     ids = spark.createDataFrame(
         [(i,) for i in (0, 1, 2, 10, 11, 99)], "id bigint"
     )
-    got = dedup.dedup_clusters(pairs, ids)  # default algorithm='auto'
+    got = dedup.dedup_clusters(pairs, ids)
     assert {r.id: r.cluster for r in got.collect()} == {
         0: 0, 1: 0, 2: 0, 10: 10, 11: 10, 99: 99,
     }
+
+
+def test_cc_raises_instead_of_returning_partial_labels(spark):
+    """Connected components never return labels it has not proven: star
+    stopping at max_iter before its fixed point (a 50-node path with one
+    round would label from partial stars) raises naming max_iter, and so
+    does the public call when its star phase runs out; max_iter < 1
+    (formerly identity labels) is rejected up front."""
+    import pytest
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(49)], "id_a bigint, id_b bigint"
+    )
+    ids = spark.createDataFrame([(i,) for i in range(50)], "id bigint")
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        dedup._star_clusters_impl(pairs, ids, "id_a", "id_b", "id", 1)
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        dedup.dedup_clusters(pairs, ids, max_iter=2)
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="max_iter"):
+            dedup.dedup_clusters(pairs, ids, max_iter=bad)
+
+
+def test_cc_never_writes_session_config(spark, monkeypatch, tmp_path):
+    """The near-dup → clusters pipeline must not write session-global
+    config: a library call that sets (even set-and-restores) a conf key
+    races every other thread sharing the SparkSession."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from lakeshed.catalog import Catalog
+
+    writes = []
+    real_set = RuntimeConfig.set
+
+    def _spy(self, key, value):
+        writes.append((key, value))
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", _spy)
+    docs = _docs(spark)
+    pairs = dedup.minhash_lsh_pairs(docs, threshold=0.7, shingle=3)
+    labels = dedup.dedup_clusters(
+        pairs, docs.select("doc_id"), id_col="doc_id"
+    )
+    assert labels.count() == docs.count()
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    t = dedup.build_cluster_table(
+        docs, cat, "default.cl_conf", threshold=0.7, shingle=3
+    )
+    assert t.read().count() == docs.count()
+    assert writes == []
 
 
 def test_wave11_parameter_guards_and_degenerate_inputs(spark):

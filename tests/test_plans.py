@@ -131,7 +131,6 @@ def test_leakage_split_never_scans_corpus_text(spark, tmp_path):
     t = dedup.build_cluster_table(
         docs, cat, "default.doc_clusters",
         threshold=0.7, num_hashes=128, bands=32, shingle=3,
-        shuffle_partitions=8,
     )
     split = sampling.leakage_safe_split(
         t.read(), {"train": 0.8, "val": 0.1, "test": 0.1}
