@@ -1,20 +1,29 @@
 """Benchmark harness — runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 compact JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {top-5 slowest: sec}, "sf": ..., "n_queries": N,
-"detail": <repo file carrying the FULL per-query map>}.
+"queries": {top-5 slowest: sec}, "sf": ..., "n_queries": N, "cpus": ...,
+"default_parallelism": ..., "detail": <repo file carrying the FULL
+per-query record>}.
 
 The driver captures only the LAST 2,000 characters of stdout (r5/r6 both
 came back "parsed": null once the full ~89-query map outgrew that buffer
 and the head of the line — with the headline total — was cut off). The
-stdout line is therefore kept ≲400 chars; the complete per-query timing
-map is written to BENCH_DETAIL_r{N}.json at the repo root for the judge.
+stdout line is therefore kept ≲400 chars; the complete per-query record
+is written to BENCH_DETAIL_r{N}.json at the repo root.
 
-Each query is materialized on the executors via a noop sink (no
-driver-collect transfer in the timing). Every query gets ONE untimed warmup
-execution first, so the reported number is steady-state execution — not
-Catalyst analysis + whole-stage-codegen compile (round-1 VERDICT: the 2.7 s
-"scalar_function_suite" figure was codegen startup on a 25-row input).
+The estimator: one untimed warm-up pass of the suite (plan + codegen +
+parquet footer caches; round-1 VERDICT: the 2.7 s "scalar_function_suite"
+figure was codegen startup on a 25-row input), then ``R`` timed passes.
+Pass k starts the query list at offset k·⌈N/R⌉, so every query runs at a
+different suite position in each pass and a contention wave on one stretch
+of the run hits different queries each time. Every execution — warm-up
+included — is one :func:`timed` call of a noop-sink write: persisted LSH
+frames are released first, so each run re-pays them (r05 honesty fix), and
+the noop sink materializes every row on the executors without
+driver-collect transfer. A query's headline time is the min of its R
+samples; the detail file keeps every sample, the per-query median and the
+per-pass totals (a pass total well above the others marks a pass that
+ran on a busy host). Methodology notes per query live in BENCH_NOTES.md.
 """
 
 from __future__ import annotations
@@ -22,6 +31,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import statistics
 import sys
 import time
 
@@ -32,308 +42,16 @@ from lakeshed import queries as q
 from lakeshed.llm import release_persisted
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+METRIC = "lakeshed_headline_queries_total"
+
+# timed passes over the suite (after one untimed warm-up pass)
+R = 3
 
 # Headline set: every registered query that has an oracle, plus the
 # rows-only extension ops (they register with oracle=None).
 # Skipped: ops documented as oracle-scale-only baselines (O(n²) all-pairs
 # by design — the LSH variants are the benchmarked scale paths).
 SKIP: set[str] = {"llm_embedding_neardup"}
-
-# Methodology disclosures carried into BENCH_DETAIL so per-query numbers
-# stay comparable across rounds (r7 ADVICE: a workload redefinition must
-# be labeled as such, not read as a speedup).
-#
-# DRIFT REVIEW (r14, VERDICT r13 #3): the quiet reference curve for the
-# CURRENT plans is scripts/attribution_r13.json — 5 canary-bracketed
-# full-suite passes at sf0.1 over all 92 entries (all 5 quiet; total
-# band 61.1-69.9 s), measured AFTER the r14 changes (hot-only salted
-# rejoin, span-index ledger, persist knobs), plus persist-off substring
-# variants and an isolated llm_minhash_neardup band. Regress against
-# ITS quiet bands; the per-entry band prose below is historical lineage
-# for entries whose shape changed across rounds.
-BENCH_NOTES: dict[str, str] = {
-    "stream_windowed_rollup": (
-        "Workload change in r11 (review wave 12): the gate's derived "
-        "events parquet now goes through the per-sf fixture cache like "
-        "the other stream gates, so the timed runs no longer pay the "
-        "fixture write. The r10->r11 step (1.10->0.73 s at sf0.1, quiet "
-        "canaries) is setup I/O leaving the measurement, not a plan "
-        "change."
-    ),
-    "stream_sessionization": (
-        "Same r11 fixture-cache change as stream_windowed_rollup "
-        "(review wave 12): 2.60->1.79 s at sf0.1 on a quiet run — below "
-        "the r9 level, which also closes the r10 drift watch item for "
-        "this entry (the r10 sample was contended per "
-        "scripts/attribution_r11.json)."
-    ),
-    "llm_semantic_dedup": (
-        "Workload change in r9 (VERDICT r8 #1): the gated output now "
-        "carries oracle-checkable audit columns — a per-cluster numpy "
-        "gram re-derivation of every keep decision (applyInPandas, one "
-        "extra shuffle on cluster) and an exact-duplicate equality join. "
-        "Cross-round deltas for this entry include that audit cost "
-        "(~+0.6 s at sf0.1); the production dedup itself is unchanged. "
-        "r8-regression attribution (VERDICT r8 #2): 5 quiet-box runs of "
-        "the r8 shape measured 3.22-3.49 s — r7's 3.38 s is in-band, so "
-        "r8's 4.25 s was background contention, not a plan change. "
-        "r14 OPTIMIZATION round: kmeans_fit persists its narrow fit "
-        "input for the fit's duration (init + every Lloyd pass read "
-        "cache instead of re-scanning the source — MLlib's own k-means "
-        "shape). Local wall flat (isolated A/B 3.64 vs 3.64 s — the "
-        "780 KB parquet was page-cached anyway); at corpus scale it is "
-        "iters+1 source scans -> 1. Same change rides "
-        "llm_kmeans_clusters and llm_ivf_topk."
-    ),
-    "table_merge_upsert": (
-        "r8-regression attribution (VERDICT r8 #2): 5 quiet-box runs "
-        "measured 1.26-1.40 s, straddling r7 (1.18) and r8 (1.43) — "
-        "noise. The query calls LakeTable.merge directly, so the r8 "
-        "per-statement pin guards (Catalog._run_dml) are not even in "
-        "its path."
-    ),
-    "llm_kmeans_clusters": (
-        "New in r8 (3 Lloyd's passes + one Arrow assignment pass). "
-        "Workload change in r9: the gated output adds the dist_is_min "
-        "audit (k JVM-HOF distance expressions per row vs the Arrow "
-        "argmin) and an n_clusters aggregate — oracle-checkable flags "
-        "per VERDICT r8 #1."
-    ),
-    "llm_pca_embeddings": (
-        "Workload change in r9 (VERDICT r8 #1): the gated output now "
-        "emits exact norm twins + invariant flags (three JVM-HOF fold "
-        "expressions per row + one 8-column mean aggregate) instead of "
-        "raw c0..c7 loadings. Fit + projection unchanged."
-    ),
-    "llm_ivf_topk": (
-        "New in r9 (VERDICT r8 #4): IVF ANN probe with a 2-round-trained "
-        "coarse quantizer — 2 Lloyd's corpus passes + assignment + probe "
-        "rescore. nprobe=12/16 because the uniform fixture is IVF's "
-        "worst case and the oracle is the exact top-10."
-    ),
-    "llm_dedup_clusters": (
-        "CODEC CHANGE in r15 (VERDICT r14 #1): the per-round CC "
-        "checkpoints write snappy, overriding the session zstd — hot "
-        "ephemeral scratch (written+read once per round, then deleted) "
-        "where codec latency matters and footprint does not. "
-        "Interleaved codec A/B (scripts/codec_ab_probe.py, 7+5 reps): "
-        "snappy 3.54/3.47 min vs zstd 3.68/3.76 — the ONE write path "
-        "where zstd showed a consistent cost; durable tables/fixtures "
-        "keep zstd (measured flat). Also r15: label-vs-star CC A/B "
-        "measured within noise (3.49 vs 3.37 min, labels identical; "
-        "the probe was removed with the algorithm= option) — the "
-        "label-then-star default stands. The gate no longer scopes "
-        "spark.sql.shuffle.partitions to 8 for the call (the knob was "
-        "removed: 8 tied the session default, 2.60 vs 2.58 s median). "
-        "PLAN CHANGE in r14 (optimization round): each propagation "
-        "round's convergence count now rides the checkpoint write as an "
-        "Observation instead of a second agg job re-reading the "
-        "checkpoint (one action per round, chg column no longer "
-        "written). Isolated A/B on the r14 box: 3.92 -> 3.50 s "
-        "(min-of-4, bench method). Labels identical. "
-        "r9-regression attribution (VERDICT r9 #1): 5 quiet-box runs "
-        "(canary 0.06-0.09 s = quiet) measured 3.52-4.36 s — the band "
-        "contains BOTH r8 (3.44) and r9 (4.36); this query has high "
-        "intrinsic variance (multi-round checkpointed label propagation "
-        "= many short stages, scheduling-sensitive). Noise, not a plan "
-        "change; the min (3.52) matches r8. r10: dedup_clusters' default "
-        "algorithm changed label->auto (star fallback after 8 "
-        "non-converged rounds); on this fixture label converges in <8 "
-        "rounds, so the benched plan is unchanged."
-    ),
-    "stream_changelog_upsert": (
-        "r9-regression attribution (VERDICT r9 #1): 5 quiet-box runs "
-        "(canary ~0.05 s = quiet) measured 1.92-2.09 s — the band "
-        "contains r8 (1.99) and sits BELOW r9 (2.44): the r9 sample "
-        "itself was contended. Noise; the canary field now makes this "
-        "class of drift self-documenting."
-    ),
-    "llm_minhash_neardup": (
-        "PLAN CHANGE in r15 (VERDICT r14 #6 / guide §2.3): the band "
-        "index folds INTO the band hash — xxhash64(band, slice) — so "
-        "the banded self-join and candidate exchange carry ONE 8-byte "
-        "key instead of (int band, long bsig), and the generator emits "
-        "plain longs instead of structs (plan: join keys [2] -> [1], "
-        "plans/r15). Interleaved quiet A/B on the gate shape "
-        "(scripts/bandkey_ab_probe.py): 5.50 -> 4.77 s min (0.87x), "
-        "pair set byte-identical. The candidate distinct was ALREADY "
-        "map-side partial-aggregated before its exchange (the other "
-        "VERDICT #6 candidate — no change needed, plan-visible). "
-        "r10-regression attribution (VERDICT r10 #1): 5 quiet-box runs "
-        "(canaries 0.058-0.084 s after the first = quiet) measured "
-        "2.159-2.743 s — the band contains r9 (2.17) and sits BELOW "
-        "r10's 2.87: the r10 sample was contended (its before-canary "
-        "0.217 s was above the 0.15-0.19 quiet band). The banded-LSH "
-        "plan is unchanged. MOREOVER the r02 'baseline' of 1.45 s for "
-        "this entry predates the r5 release_persisted honesty fix: "
-        "r02-r04 timed runs reused WARM persisted LSH signature frames "
-        "(r02 1.454 / r03 1.446 / r04 1.157), while every round since "
-        "r5 re-pays signature materialization per timed run (r07 2.27 "
-        "/ r08 2.44 / r09 2.17). The apparent ~2x vs r02 is an honest-"
-        "vs-warm methodology mismatch on this one entry, not a plan "
-        "regression; the comparable-methodology band has been flat at "
-        "~2.2-2.7 s for four rounds. r13->r14 drift attribution "
-        "(VERDICT r13 #4): the r13 headline sample 2.305 sits INSIDE "
-        "the r12 quiet band (2.058-2.624), and attribution_r13 "
-        "measures in-suite 2.048-2.593 (median 2.368) vs ISOLATED "
-        "suite-free 2.242-2.781 (median 2.356) — in-suite equals "
-        "isolated equals the r12 band, so the +0.26 s was single-"
-        "sample spread, not a plan change or suite-ordering effect. "
-        "Path untouched in r13/r14."
-    ),
-    "stream_sessionization": (
-        "r10-regression attribution (VERDICT r10 #1): 5 quiet-box runs "
-        "(canaries 0.053-0.078 s = quiet) measured 1.825-2.769 s — the "
-        "band contains BOTH r9 (1.94) and r10 (2.60). Stateful "
-        "streaming harness rows have high intrinsic variance (floor "
-        "1.103 s + session-window state store timing); noise, not a "
-        "plan change (path untouched in r10)."
-    ),
-    "stream_stream_join": (
-        "r13 drift attribution: the r13 headline run (quiet canaries "
-        "0.084/0.082) sampled 5.16 s against the r12 quiet band "
-        "2.44-2.63 s; an isolated 5-run attribution pass the same "
-        "session measured 2.43-2.66 s on quiet canaries — in-band. The "
-        "headline sample was a transient the bracketing canaries did "
-        "not catch (stateful stream-stream join, state-store timing); "
-        "the path is untouched in r13."
-    ),
-    "llm_substring_dedup": (
-        "New in r12 (Lee-et-al substring dedup gate). Quiet-band "
-        "reference measured at introduction: 2.00-2.44 s at sf0.1 over "
-        "5 canary-bracketed runs (scripts/attribute_r10.py protocol; "
-        "canaries 0.086-0.093 after the first). Cost profile is stage "
-        "floor (window agg on the span hash + per-doc agg + join + "
-        "sort over ~220k windows), not data volume. PLAN CHANGE in r13 "
-        "(VERDICT r12 #1, the one `weak`): duplicate marking moved from "
-        "a partitionBy(h) window — one exchange, but the hottest "
-        "boilerplate span lands on ONE task at corpus scale — to a "
-        "groupBy(h) partial aggregation SALT-REPLICATE-rejoined on "
-        "(h, salt(id,pos)) — map-side combine collapses hot hashes, the "
-        "salt deterministically pre-splits the hottest span skew_fanout "
-        "ways, and it restores the plan shape AQE's skew-join rule can "
-        "match (scripts/hot_span_probe.py measures all three). Band at "
-        "the r13 plan: ~3.2-4.3 s over three 5-run attribution passes "
-        "on a flapping box (quiet-bracketed samples 3.19-4.29; fully "
-        "contended passes reached 4.85) — the ~+1-1.5 s vs the r12 "
-        "window plan's 2.00-2.44 band is the deliberate price of "
-        "skew-proofing (the occurrence frame is computed for both the "
-        "agg and probe branches, plus the salt exchange), not drift. "
-        "Late r13: the gate turns on persist_occurrences (the space-"
-        "time knob — one tracked materialization of the (id,pos,h) "
-        "frame per run instead of two computations; release_persisted "
-        "re-pays it every timed run), re-measured band 2.71-2.93 s "
-        "quiet (one contended first sample 3.23, canary 0.33). PLAN "
-        "CHANGE in r14 (r13 ADVICE medium): the rejoin salt-splits "
-        "ONLY hot hashes (per-hash width off a broadcast hot list) "
-        "instead of exploding the whole duplicates side across every "
-        "salt — replication volume drops from dup_hashes×fanout to "
-        "one row per cold hash (scripts/salt_volume_probe.py measures "
-        "the A/B). attribution_r13 band at the r14 plan: 2.255-2.565 "
-        "persist-on (FASTER than the r13 blanket shape despite the "
-        "added broadcast branch); persist-off variant 3.057-3.970 "
-        "(VERDICT r13 #6 — the 100 TB default, which pays the occ "
-        "frame twice plus the broadcast barrier). PLAN CHANGE in the "
-        "r14 OPTIMIZATION round: the duplicates-only aggregate is now "
-        "cached inside _salted_rejoin — one agg pass feeds the "
-        "hot-list broadcast AND the explode side (their column pruning "
-        "diverges, so ReuseExchange never deduplicated them); "
-        "persist-off additionally drops one full corpus windowing "
-        "pass. Isolated A/B on the r14 box: 2.05 -> 1.88 s (min-of-4, "
-        "bench method); persist-off kernel flat locally (2.81 vs "
-        "2.82 s) — the saved pass is CPU that only matters at scale."
-    ),
-    "llm_substring_removed": (
-        "New in r13 (VERDICT r12 #3): value-checks the span-REMOVAL "
-        "transform — cleaned-text md5 per document against a full DuckDB "
-        "string replay, on top of r12's span-count gate. Band at "
-        "introduction (salted r13 marking plan): ~3.6-4.5 s at sf0.1 "
-        "across two 5-run attribution passes (quiet samples 3.58-4.00; "
-        "a partially contended pass reached 4.90). Runs the marking "
-        "kernel plus the per-doc cut join, so it sits near "
-        "llm_substring_dedup's band plus the removal join. Late r13: "
-        "with the gate's persist_occurrences on (see "
-        "llm_substring_dedup), re-measured band 2.36-2.69 s quiet. "
-        "r14 (hot-only salted rejoin, see llm_substring_dedup): "
-        "attribution_r13 band 2.250-2.571 persist-on; persist-off "
-        "variant 3.050-3.800 (VERDICT r13 #6). r14 OPTIMIZATION round "
-        "(cached duplicates-only aggregate, see llm_substring_dedup): "
-        "isolated A/B 2.12 -> 1.81 s (min-of-4)."
-    ),
-    "llm_embedding_neardup_lsh": (
-        "PLAN CHANGE in r15 (guide §2.3): ann_pairs_lsh folds the table "
-        "index into the bucket key — xxhash64(tbl, bucket) — so the "
-        "persisted index and the candidate self-join carry ONE 8-byte "
-        "key instead of int tbl + long bucket. Interleaved quiet A/B "
-        "(scripts/lshkey_ab_probe.py): 3.03 -> 2.88 s min (0.95x), "
-        "pair set identical. Collision class: a 64-bit collision only "
-        "adds a candidate the exact-cosine verify re-scores."
-    ),
-    "llm_simhash_neardup": (
-        "PLAN CHANGE in r15 (guide §2.3): the pigeonhole chunk index "
-        "folds into the bucket key — xxhash64(chunk, cval) — ONE 8-byte "
-        "join key instead of int chunk + long cval. Output PROVABLY "
-        "identical: pigeonhole banding is complete, so every pair "
-        "passing the exact-popcount verify was already a candidate. "
-        "r13 wave 24 added the NULL-text guard to the signature path "
-        "(size(hs) > 0 before the Arrow kernel — one NULL document "
-        "used to crash the whole job); the quiet r13 headline sample "
-        "sits ~0.16 s above the r12 quiet_max, which is that filter "
-        "plus single-sample spread, not drift. The same guard class "
-        "(isNotNull on the embedding column) adds ~0.1 s to "
-        "llm_embedding_neardup_lsh."
-    ),
-    "llm_incremental_spans": (
-        "New in r13: incremental substring dedup — marks the odd-id "
-        "half of the corpus against the span INDEX (per-hash partial "
-        "aggregates in an ACID table, built once per sf and cached, "
-        "the signature-table fixture pattern), so the timed path is "
-        "the steady state: batch windowing + index semi-join/fold + "
-        "salted marking join; the stored half's text is never "
-        "re-windowed. Quiet-band reference at introduction: "
-        "1.55-1.80 s at sf0.1 over 5 canary-bracketed runs (canaries "
-        "0.081-0.086 after the first). PLAN CHANGE in r14: the "
-        "marking rejoin salt-splits only hot hashes via a broadcast "
-        "hot list (r13 ADVICE medium) — the broadcast branch is a "
-        "materialization barrier that re-windowed the batch a third "
-        "time (measured +0.8 s pre-fix), so the gate turns on the new "
-        "batch persist_occurrences knob (one windowing feeds probe + "
-        "broadcast + rejoin; release_persisted re-pays it per timed "
-        "run). attribution_r13 band at the shipped shape: "
-        "1.690-1.939 — the ~+0.1 s over the r13 intro band is the "
-        "residual broadcast barrier, the price of the scale-correct "
-        "replication volume. r14 OPTIMIZATION round (cached "
-        "duplicates-only aggregate in _salted_rejoin, see "
-        "llm_substring_dedup): isolated A/B 1.43 -> 1.29 s (min-of-4)."
-    ),
-    "llm_weighted_sample": (
-        "New in r13 (tail-born): quality-weighted deterministic "
-        "resampling — one narrow md5-bucket filter against a per-row "
-        "threshold, no shuffle. Quiet-band reference at introduction: "
-        "0.72-0.87 s at sf0.1 over 5 canary-bracketed runs (canaries "
-        "0.096-0.142 after the first)."
-    ),
-    "llm_decontaminate": (
-        "PLAN CHANGE in the r14 OPTIMIZATION round: n-grams collapse "
-        "to xxhash64 BEFORE the explode and broadcast (same documented "
-        "collision class as the substring kernels) — 8 bytes per gram "
-        "through the broadcast eval set and the corpus-side generator "
-        "instead of the 5-token string. Local wall unchanged (isolated "
-        "A/B 1.19 vs 1.23 s — within noise); the win is broadcast/"
-        "generator bytes at corpus scale. Output value-identical "
-        "(parity gate green)."
-    ),
-    "llm_leakage_safe_split": (
-        "Times the split projection over a cluster-labels table "
-        "materialized ONCE at warmup (the production shape: clustering is "
-        "paid at corpus landing, not per split). The one-time LSH + "
-        "connected-components build cost is NOT in this number; it is "
-        "benchmarked separately as llm_dedup_clusters. r6 and earlier "
-        "rounds timed the full recompute here — cross-round deltas for "
-        "this entry are a workload redefinition, not a plan speedup."
-    ),
-}
-
 
 # Measured micro-batch floors (SCALING.md §streaming, r10): fixed
 # per-QUERY harness cost — trigger scheduling + checkpoint filesystem
@@ -350,119 +68,88 @@ STREAM_FLOORS: dict[str, float] = {
     "stream_changelog_upsert": 2.05,   # merge-shaped (foreachBatch)
 }
 
-# Quiet-box canary bands (same-position comparison; documented with the
-# canary below). A sample outside its band marks the round CONTENDED and
-# triggers the self-serve drift re-run (VERDICT r10 #2).
-CANARY_QUIET_BEFORE_MAX = 0.19
-CANARY_QUIET_AFTER_MAX = 0.10
 
-
-def _prior_detail(repo: str, rnd: int,
-                  cpus: int | None) -> tuple[int | None, dict, bool]:
-    """(round, per-query timings, that round's contended flag) from the
-    newest readable BENCH_DETAIL_r{M}.json with M < rnd — the comparison
-    base for contended-round re-runs. The round number and flag are
-    recorded into the artifact so a reader can validate the base (r11
-    review: a silently-skipped corrupt file or an itself-contended base
-    would otherwise be invisible).
-
-    r15 (VERDICT r14 #3): a detail is only a valid base when it was
-    measured at the SAME core count — the r14 judge's 8-core scaling run
-    left an 8-core detail file that would have silenced the 32-core
-    steal-retry trigger (8c times are 1-3x larger, so a stolen 32c
-    sample never reaches 3x of them). Details that do not record "cpus"
-    (pre-r15, including that 8-core file) are skipped for the same
-    reason: their core count is unknowable from the artifact."""
-    best: tuple[int, dict] | None = None
-    for f in os.listdir(repo):
-        m = re.match(r"BENCH_DETAIL_r(\d+)\.json$", f)
-        if not m or int(m.group(1)) >= rnd:
-            continue
-        if best is not None and int(m.group(1)) <= best[0]:
-            continue
-        try:
-            with open(os.path.join(repo, f)) as fh:
-                d = json.load(fh)
-        except (OSError, json.JSONDecodeError):
-            continue
-        if d.get("cpus") != cpus:
-            continue
-        best = (int(m.group(1)), d)
-    if best is None:
-        return None, {}, False
-    return best[0], best[1].get("queries", {}), bool(
-        best[1].get("contended"))
-
-
-def _time_query(spark, fn) -> float:
-    """THE per-query method, shared by the suite and the contended
-    re-run so the two never diverge methodologically (r11 review: the
-    re-run first copy-pasted this minus the warmup, so rerun_sec could
-    include compile cost and read as residual drift — the exact false
-    signal it exists to rule out). One untimed warmup (plan + codegen +
-    parquet footer caches), then min-of-2 timed noop-sink executions
-    with release_persisted() before each so persisted LSH frames are
-    re-materialized per timed run (r05 honesty fix), and once after to
-    keep storage flat."""
-    fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-    best = None
-    for _ in range(2):
-        release_persisted()
-        t0 = time.perf_counter()
-        # noop sink materializes every column of every row on the
-        # executors without paying driver-collect transfer — measures
-        # the plan itself.
-        fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        best = dt if best is None else min(best, dt)
+def timed(run) -> float:
+    """THE timing primitive, shared by the suite passes and every script:
+    seconds for ONE call of the zero-argument ``run``, taken after
+    ``release_persisted()`` so frames a previous run persisted are
+    re-materialized instead of read warm."""
     release_persisted()
-    return best
+    t0 = time.perf_counter()
+    run()
+    return time.perf_counter() - t0
 
 
-def _min2(fn):
-    """The probe scripts' shared timing primitive (warm shapes assumed;
-    take the min of 2 executions). ONE definition — r14 review wave 31
-    found three byte-identical copies across scripts/, where a future
-    protocol change would silently fork the measurement method."""
-    best = None
-    for _ in range(2):
-        t0 = time.perf_counter()
-        fn()
-        dt = time.perf_counter() - t0
-        best = dt if best is None else min(best, dt)
-    return round(best, 2)
+def noop_sink(spark, fn):
+    """Zero-argument execution of the query ``fn(spark, sf_dir)`` builds
+    at SF_DIR: the noop sink materializes every column of every row on
+    the executors without paying driver-collect transfer — it measures
+    the plan itself."""
+    return lambda: fn(spark, SF_DIR).write.format("noop") \
+        .mode("overwrite").save()
 
 
-def _canary(spark) -> float:
-    """Fixed CPU-bound probe (no I/O, no repo code): median-of-3 timing of
-    a 20M-row hash-sum over ``spark.range``. Identical work every round, so
-    its time moves ONLY with box contention — the denominator the judge can
-    use to normalize cross-round totals instead of re-litigating ±16%
-    drift every round (VERDICT r9 #1). Runs before AND after the suite;
-    the pair brackets contention during the run."""
-    from pyspark.sql import functions as F
+def rotations(names: list[str], r: int = R) -> list[list[str]]:
+    """The ``r`` pass orders: pass k is ``names`` rotated to start at
+    offset k·⌈N/r⌉. For N > (r−1)² every query sits at a different
+    position in each pass."""
+    step = -(-len(names) // r)
+    return [names[k * step:] + names[:k * step] for k in range(r)]
 
-    # untimed warmup: the first execution pays codegen/JIT for the probe
-    # plan itself, which would inflate the before-suite sample relative to
-    # the after-suite one and masquerade as contention
-    spark.range(20_000_000).select(
-        F.sum(F.xxhash64("id")).alias("h")
-    ).write.format("noop").mode("overwrite").save()
-    runs = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        spark.range(20_000_000).select(
-            F.sum(F.xxhash64("id")).alias("h")
-        ).write.format("noop").mode("overwrite").save()
-        runs.append(time.perf_counter() - t0)
-    return round(sorted(runs)[1], 3)
+
+def resolved_cpus() -> int:
+    """Core count of this run: $SPARK_GRAFT_CPUS (what local[] uses), else
+    the cores this process may run on — os.cpu_count() would report host
+    cores regardless of taskset/cgroup affinity (ADVICE r15 low)."""
+    try:
+        return int(os.environ.get("SPARK_GRAFT_CPUS", ""))
+    except ValueError:
+        return len(os.sched_getaffinity(0))
+
+
+def summary_line(timings: dict[str, float], sf, cpus: int,
+                 default_parallelism: int, detail: str | None) -> str:
+    """The one stdout line (≲400 chars, so a capture that keeps only the
+    last 2,000 characters of stdout holds the WHOLE line): headline total
+    + the 5 slowest queries only; everything else lives in the detail
+    file."""
+    top5 = dict(
+        sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:5]
+    )
+    return json.dumps(
+        {
+            "metric": METRIC,
+            "value": round(sum(timings.values()), 3),
+            "unit": "sec",
+            "queries": top5,
+            "sf": sf,
+            "n_queries": len(timings),
+            "cpus": cpus,
+            "default_parallelism": default_parallelism,
+            "detail": detail,
+        },
+        separators=(",", ":"),
+    )
+
+
+def _round_stamp(repo: str) -> int:
+    """Explicit $SPARK_GRAFT_ROUND when set (tolerant parse: "8", "r8",
+    "round-8"); otherwise the BENCH_r{N}.json result files already in the
+    repo count, and this run is round N+1. Strict ^BENCH_r<N>.json$ (r15,
+    VERDICT r14 #3): auxiliary artifacts such as BENCH_r14_c8.json (an
+    8-core scaling run) must not inflate the count."""
+    m = re.search(r"\d+", os.environ.get("SPARK_GRAFT_ROUND", ""))
+    if m:
+        return int(m.group())
+    return 1 + sum(
+        1 for f in os.listdir(repo) if re.match(r"BENCH_r\d+\.json$", f))
 
 
 def main() -> None:
     # The driver records bench output from a BOUNDED tail capture of this
     # process's stdout; r5's artifact came back "parsed": null because JVM
     # console noise (progress-bar \r spam) pushed the JSON line out of the
-    # buffer. Defense in depth: (a) the session now sets
+    # buffer. Defense in depth: (a) the session sets
     # spark.ui.showConsoleProgress=false, (b) while queries run, fd 1 is
     # redirected into fd 2 so ANY JVM/py4j stdout goes to stderr, and the
     # real stdout is restored only for the single final JSON print.
@@ -470,256 +157,63 @@ def main() -> None:
     sys.stdout.flush()
     os.dup2(2, 1)
 
-    spark = get_spark("lakeshed-bench")
+    # The warm-up pass only warms codegen if every query's compiled
+    # classes survive until its timed runs: one suite pass compiles ~1,000
+    # classes, and at Spark's default cache of 100 entries each timed pass
+    # recompiled ~1,150 of them (sf0.01, 4 cores: passes 78-86 s vs 56-58 s
+    # with this cache, 4-8 compiles per pass).
+    spark = get_spark(
+        "lakeshed-bench",
+        extra_conf={"spark.sql.codegen.cache.maxEntries": "4096"})
     spark.sparkContext.setLogLevel("ERROR")
 
-    def _run_suite() -> tuple[dict[str, float], float, float]:
-        cb = _canary(spark)
-        t: dict[str, float] = {}
-        for name, fn in q.spark_queries().items():
-            if name in SKIP:
-                continue
-            # min of two timed runs after an untimed warmup
-            # (_time_query): this box shows multi-x background
-            # contention spikes; the min is the faithful steady-state
-            # cost of the plan (standard noisy-neighbor practice)
-            t[name] = round(_time_query(spark, fn), 3)
-        return t, cb, _canary(spark)
+    suite = {name: noop_sink(spark, fn)
+             for name, fn in q.spark_queries().items() if name not in SKIP}
+    for run in suite.values():  # untimed warm-up pass
+        timed(run)
+    samples: dict[str, list[float]] = {name: [] for name in suite}
+    pass_totals: list[float] = []
+    for order in rotations(list(suite)):
+        for name in order:
+            samples[name].append(round(timed(suite[name]), 3))
+        pass_totals.append(round(sum(samples[n][-1] for n in order), 3))
+    release_persisted()
 
-    timings, canary_before, canary_after = _run_suite()
-
+    timings = {name: min(s) for name, s in samples.items()}
     try:
         sf = float(SF_DIR.rstrip("/").split("sf")[-1])
     except ValueError:
         sf = None
+    cpus = resolved_cpus()
+    default_parallelism = spark.sparkContext.defaultParallelism
 
-    # Full-suite contended retry (VERDICT r12 #5): two consecutive
-    # rounds' headline runs were canary-flagged contended and had to be
-    # absorbed via the quiet-band protocol. When the FIRST pass's
-    # canaries fall outside the quiet band, re-run the entire suite
-    # once (~3 min at sf0.1 — budget-bounded, sf0.1 only, and
-    # disableable via BENCH_NO_RETRY=1). If the retry brackets quiet,
-    # ITS timings become the headline (the first pass is preserved in
-    # the detail file); if the retry is also contended, the first pass
-    # stays the headline and the detail documents that both passes saw
-    # a busy box. Per-query methodology is unchanged either way
-    # (untimed warmup + min-of-2 per query), so retry numbers stay
-    # cross-round comparable.
-    first_pass = None
-    contended = (canary_before > CANARY_QUIET_BEFORE_MAX
-                 or canary_after > CANARY_QUIET_AFTER_MAX)
-    if (contended and sf == 0.1
-            and os.environ.get("BENCH_NO_RETRY", "") != "1"):
-        t2, cb2, ca2 = _run_suite()
-        retry_quiet = (cb2 <= CANARY_QUIET_BEFORE_MAX
-                       and ca2 <= CANARY_QUIET_AFTER_MAX)
-        # promote the retry only when it is quiet AND actually better
-        # (r14 optimization round, measurement-bug fix): this host
-        # shows steal waves the bracketing canaries miss entirely — a
-        # quiet-canaried retry once totaled 94.9 s against a 66.6 s
-        # first pass (BENCH_DETAIL, contended_first_pass). A quiet
-        # canary no longer certifies the suite; the lower total is the
-        # faithful sample of the two (same min-estimator philosophy as
-        # _time_query), and both passes stay in the artifact.
-        retry_better = sum(t2.values()) < sum(timings.values())
-        first_pass = {
-            "timings": timings,
-            "total": round(sum(timings.values()), 3),
-            "canary": {"before_sec": canary_before,
-                       "after_sec": canary_after},
-            "promoted_retry": retry_quiet and retry_better,
-        }
-        if retry_quiet and retry_better:
-            timings, canary_before, canary_after = t2, cb2, ca2
-            contended = False
-        else:
-            first_pass["retry"] = {
-                "total": round(sum(t2.values()), 3),
-                "canary": {"before_sec": cb2, "after_sec": ca2},
-                **({"rejected": "quiet canaries but higher total "
-                                "(mid-suite steal)"}
-                   if retry_quiet and not retry_better else {}),
-            }
-
-    # Round stamp: explicit $SPARK_GRAFT_ROUND when set; fallback counts
-    # the driver's prior BENCH_r{N}.json artifacts (this run is round
-    # N+1). Local verify runs at other scale factors (the verify recipe
-    # uses sf0.01) must NOT leave a wrongly-stamped detail file behind —
-    # only the headline sf writes.
-    repo = os.path.dirname(os.path.abspath(__file__))
-    rnd_env = os.environ.get("SPARK_GRAFT_ROUND", "")
-    m = re.search(r"\d+", rnd_env)
-    if m:  # tolerant parse ("8", "r8", "round-8"): a malformed env var
-        rnd = int(m.group())  # must never crash the run after the queries
-    else:
-        # strict ^BENCH_r<N>.json$ (r15, VERDICT r14 #3): the driver's
-        # auxiliary artifacts (BENCH_r14_c8.json, the 8-core scaling
-        # run) must not inflate the round count and shift which detail
-        # file this run writes / compares against
-        prior = [
-            f for f in os.listdir(repo)
-            if re.match(r"BENCH_r\d+\.json$", f)
-        ]
-        rnd = len(prior) + 1
-    detail_name = f"BENCH_DETAIL_r{rnd:02d}.json"
-
-    # Resolved core count for this run — recorded in the detail artifact
-    # and used to select a same-cpus prior (VERDICT r14 #3: the judge's
-    # 8-core scaling pass wrote a detail file that must never become a
-    # 32-core run's comparison base, and vice versa).
-    try:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", ""))
-    except ValueError:
-        cpus = os.cpu_count()
-
-    # Canary-blind steal retry (r14 optimization round, measurement-bug
-    # fix — disclosed here and in OPTIMIZATION_r14.md): this box shows
-    # HOST-level CPU-steal waves that hit one query mid-suite while both
-    # bracketing canaries read quiet (r13 already documented the same
-    # failure mode on stream_stream_join: a 5.16 s headline sample
-    # against a 2.4-2.6 quiet band with quiet canaries; r14 saw
-    # llm_substring_removed at 7.59 s and llm_dedup_clusters at 7.65 s
-    # in back-to-back otherwise-quiet runs, each re-measuring in-band
-    # minutes later while the guest showed zero load and zero PSI).
-    # When a quiet-canary suite has a query at >=3x its prior-round
-    # detail time, re-run JUST that query once with THE IDENTICAL
-    # per-query method (_time_query) and take min(suite, rerun) — the
-    # bench's own estimator ("the min is the faithful steady-state cost
-    # of the plan", _time_query docstring) over two more trials of the
-    # same protocol. Both samples are recorded under steal_retries; a
-    # genuine >=3x plan regression is never masked (its re-run is just
-    # as slow, so the min stays slow and the artifact shows both).
-    # Bounded at 5 queries; sf0.1 only (prior detail exists only
-    # there). The >=3x trigger keeps this from systematically
-    # re-sampling ordinary variance — only steal-shaped outliers
-    # qualify.
-    steal_retries: dict = {}
-    fast_vs_prior: dict = {}
-    if sf == 0.1 and not contended:
-        prior_rnd_s, prior_t_s, _ = _prior_detail(repo, rnd, cpus)
-        outliers = sorted(
-            (n for n, t in timings.items()
-             if prior_t_s.get(n, 0) >= 0.3 and t / prior_t_s[n] >= 3.0),
-            key=lambda n: timings[n] / prior_t_s[n], reverse=True)[:5]
-        reg_s = q.spark_queries()
-        for name in outliers:
-            rerun = round(_time_query(spark, reg_s[name]), 3)
-            entry = {
-                "suite_sec": timings[name],
-                "prior_sec": prior_t_s[name],
-                "rerun_sec": rerun,
-                "promoted": bool(rerun < timings[name]),
-            }
-            timings[name] = min(timings[name], rerun)
-            steal_retries[name] = entry
-        if outliers:
-            steal_retries["_meta"] = {
-                "prior_round": prior_rnd_s,
-                "rerun_canary_sec": _canary(spark),
-            }
-        # Symmetric disclosure (r14 ADVICE low): the steal-retry only
-        # heals queries that got >=3x SLOWER, a one-sided correction.
-        # Queries that came in suspiciously FASTER than the same prior
-        # (<=1/3x) are flagged here — never altered, just recorded — so
-        # cross-round comparisons can see both tails of the noise.
-        fast_vs_prior = {
-            n: {"suite_sec": t, "prior_sec": prior_t_s[n]}
-            for n, t in timings.items()
-            if prior_t_s.get(n, 0) >= 0.3 and t / prior_t_s[n] <= 1 / 3.0
-        }
-
-    total = round(sum(timings.values()), 3)
-
-    # Contended-round self-attribution (VERDICT r10 #2): when either
-    # canary sample falls outside its quiet band (and the full-suite
-    # retry above didn't produce a quiet pass), automatically re-run
-    # the worst drifters vs the PRIOR round's detail file after the
-    # suite and record both samples — the "attribute last round's
-    # drift" task becomes an artifact instead of next round's homework.
-    # The headline total keeps the in-suite samples (methodology
-    # unchanged); re-runs are extra evidence, not replacements.
-    reruns: dict = {}
-    if contended and sf == 0.1:
-        prior_rnd, prior_t, prior_contended = _prior_detail(repo, rnd, cpus)
-        drifters = sorted(
-            (n for n, t in timings.items()
-             # >=0.3 s floor: tiny queries drift multiplicatively on
-             # scheduler jitter alone and would crowd out real signal
-             if prior_t.get(n, 0) >= 0.3 and t / prior_t[n] > 1.15),
-            key=lambda n: timings[n] / prior_t[n], reverse=True)[:5]
-        reg = q.spark_queries()
-        for name in drifters:
-            reruns[name] = {
-                "suite_sec": timings[name],
-                "prior_sec": prior_t[name],
-                "rerun_sec": round(_time_query(spark, reg[name]), 3),
-            }
-        if drifters:
-            # provenance + self-certification (r11 review): which round
-            # the baseline came from, whether THAT round was contended,
-            # and a canary sample taken right after the re-runs — so a
-            # reader can tell "rerun confirms drift" from "rerun
-            # measured the same background noise"
-            reruns["_meta"] = {
-                "prior_round": prior_rnd,
-                "prior_contended": prior_contended,
-                "rerun_canary_sec": _canary(spark),
-            }
+    # Local verify runs at other scale factors (the verify recipe uses
+    # sf0.01) must NOT leave a wrongly-stamped detail file behind — only
+    # the headline sf writes.
+    detail_name = None
     if sf == 0.1:
+        repo = os.path.dirname(os.path.abspath(__file__))
+        detail_name = f"BENCH_DETAIL_r{_round_stamp(repo):02d}.json"
         with open(os.path.join(repo, detail_name), "w") as fh:
             json.dump(
                 {
-                    "metric": "lakeshed_headline_queries_total",
-                    "value": total,
+                    "metric": METRIC,
+                    "value": round(sum(timings.values()), 3),
                     "unit": "sec",
+                    # per query: min of the R rotated-pass samples
                     "queries": timings,
                     "sf": sf,
-                    # resolved core count of this run (r15, VERDICT r14
-                    # #3): details from a different core count are never
-                    # used as a steal-retry/drift comparison base
                     "cpus": cpus,
-                    # fixed 20M-row hash-sum probe, median-of-3 after one
-                    # untimed warmup, timed before/after the suite — the
-                    # contention denominator. JVM JIT keeps tiering the
-                    # probe down over many executions, so the before
-                    # sample runs on a colder JIT than the after sample:
-                    # compare SAME-POSITION samples across rounds
-                    # (before vs before, after vs after). Quiet-box
-                    # reference at 32 threads: before ~0.15-0.19 s,
-                    # after ~0.05-0.10 s; a 2x canary means the round
-                    # ran ~2x contended.
-                    "canary": {
-                        "before_sec": canary_before,
-                        "after_sec": canary_after,
-                    },
-                    # True when a canary sample fell outside its quiet
-                    # band (before > 0.19 s / after > 0.10 s) — read
-                    # per-query swings this round with suspicion and
-                    # check contended_reruns for the post-suite samples
-                    "contended": contended,
-                    "contended_reruns": reruns,
-                    # canary-blind steal retries (see the comment above
-                    # the block): suite + re-run samples for any
-                    # quiet-canary query at >=3x its prior-round time;
-                    # "promoted": true means the re-run (same per-query
-                    # method) replaced the stolen suite sample in
-                    # `queries`/`value`
-                    **({"steal_retries": steal_retries}
-                       if steal_retries else {}),
-                    # informational only (r14 ADVICE low, symmetry): the
-                    # queries that ran <=1/3x of the same-cpus prior —
-                    # the fast tail of the same noise the steal-retry
-                    # heals on the slow tail. Values are NOT adjusted.
-                    **({"fast_vs_prior": fast_vs_prior}
-                       if fast_vs_prior else {}),
-                    # present only when the first pass was contended and
-                    # the full suite re-ran (VERDICT r12 #5): the first
-                    # pass's timings/canaries, whether the retry was
-                    # promoted to headline, and — when the retry was
-                    # ALSO contended — its total/canaries (box reality
-                    # documented)
-                    **({"contended_first_pass": first_pass}
-                       if first_pass else {}),
+                    "default_parallelism": default_parallelism,
+                    "passes": R,
+                    # sum of each timed pass, in pass order — the
+                    # contention signal: a pass well above the others ran
+                    # on a busy box
+                    "pass_totals": pass_totals,
+                    "median": {name: statistics.median(s)
+                               for name, s in samples.items()},
+                    # samples[name][k] is the sample from pass k
+                    "samples": samples,
                     # bench minus the measured per-shape micro-batch
                     # floor (SCALING.md §streaming): the data-dependent
                     # part of each stream row; |residual drift| ≤0.15 s
@@ -728,40 +222,14 @@ def main() -> None:
                         n: round(timings[n] - f, 3)
                         for n, f in STREAM_FLOORS.items() if n in timings
                     },
-                    "notes": BENCH_NOTES,
+                    "notes": "BENCH_NOTES.md",
                 },
                 fh,
                 indent=1,
             )
             fh.write("\n")
-    else:
-        detail_name = None
 
-    # Compact stdout line (≲400 chars so the driver's 2,000-char stdout
-    # tail buffer holds the WHOLE line): headline total + the 5 slowest
-    # queries only; everything else lives in the detail file above.
-    top5 = dict(
-        sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:5]
-    )
-    line = json.dumps(
-        {
-            "metric": "lakeshed_headline_queries_total",
-            "value": total,
-            "unit": "sec",
-            "queries": top5,
-            "sf": sf,
-            "n_queries": len(timings),
-            "canary": [canary_before, canary_after],
-            **({"contended": True} if contended else {}),
-            **({"retried": True} if first_pass else {}),
-            **({"steal_retried": sum(
-                1 for v in steal_retries.values()
-                if isinstance(v, dict) and v.get("promoted"))}
-               if steal_retries else {}),
-            "detail": detail_name,
-        },
-        separators=(",", ":"),
-    )
+    line = summary_line(timings, sf, cpus, default_parallelism, detail_name)
     # Restore the real stdout and emit the JSON line as this process's ONLY
     # stdout (newline-terminated, explicitly flushed).
     sys.stdout.flush()

@@ -661,8 +661,10 @@ def dedup_clusters(
             .distinct()
         )
         cids = lbl.select(F.col("lbl").alias("id")).distinct()
+        # star writes its rounds into THIS call's checkpoint dir, so the
+        # keep_only below removes them with the label rounds
         star_out, _ = _star_clusters_impl(
-            contracted, cids, "src", "dst", "id", max_iter
+            contracted, cids, "src", "dst", "id", max_iter, ck=ck
         )
         lbl = ck.put(
             lbl.alias("l")
@@ -832,6 +834,7 @@ def _star_clusters_impl(
     id_b: str,
     id_col: str,
     max_iter: int,
+    ck: _Ckpt | None = None,
 ) -> tuple[DataFrame, int]:
     """Alternating large-star/small-star connected components (Kiveris
     et al. 2014). Each round: large-star attaches every strictly-larger
@@ -843,9 +846,14 @@ def _star_clusters_impl(
     propagation needs O(diameter). Returns (labels, rounds) — rounds is
     exposed for the convergence-rate test. Raises ``RuntimeError`` when
     ``max_iter`` rounds end before the fixed point: labels read off
-    partial stars are not the component minima."""
-    spark = ids.sparkSession
-    ck = _Ckpt(spark, "lakeshed-cc-star-")
+    partial stars are not the component minima.
+
+    Given a caller's ``ck``, the rounds are checkpointed there and the
+    caller's ``keep_only`` deletes them; otherwise the call owns its
+    checkpoint dir and keeps only the returned ``labels``."""
+    own = ck is None
+    if own:
+        ck = _Ckpt(ids.sparkSession, "lakeshed-cc-star-")
     e = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .where(F.col("src") != F.col("dst"))
@@ -913,7 +921,8 @@ def _star_clusters_impl(
         .select("id", F.coalesce("lbl", F.col("id")).alias("lbl"))
     )
     out = ck.put(lbl, "labels")
-    ck.keep_only("labels")
+    if own:
+        ck.keep_only("labels")
     return (
         out.select(F.col("id").alias(id_col), F.col("lbl").alias("cluster")),
         it + 1,

@@ -4,8 +4,9 @@ two-column key via a struct explode; r15 folds the band index into the
 hash — xxhash64(band, slice) — so the explode emits plain longs and the
 self-join + candidate exchange carry ONE 8-byte key. OLD shape
 reconstructed inline (the r14 banding over the same persisted signature
-frame); NEW shape is the current minhash_lsh_pairs. Interleaved reps,
-bench.py's exact per-query method, plus value-identity of the pair set.
+frame); NEW shape is the current minhash_lsh_pairs. Interleaved reps
+after one untimed warm-up per shape, each rep one bench.timed noop-sink
+execution, plus value-identity of the pair set.
 
 Usage: python scripts/bandkey_ab_probe.py [N]
 """
@@ -91,16 +92,15 @@ def main() -> None:
          for r in old_shape(spark, sf).collect()}
     b = {(r.id_a, r.id_b, r.jaccard)
          for r in new_shape(spark, sf).collect()}
-    from lakeshed.llm import release_persisted
-    release_persisted()
-    print(f"canary_before={bench._canary(spark)}", flush=True)
+    runs = {"old": bench.noop_sink(spark, old_shape),
+            "new": bench.noop_sink(spark, new_shape)}
+    for run in runs.values():
+        bench.timed(run)  # untimed warm-up
     samples = {"old": [], "new": []}
     for i in range(n):
         order = ("old", "new") if i % 2 == 0 else ("new", "old")
         for shape in order:
-            fn = old_shape if shape == "old" else new_shape
-            samples[shape].append(round(bench._time_query(spark, fn), 3))
-    print(f"canary_after={bench._canary(spark)}", flush=True)
+            samples[shape].append(round(bench.timed(runs[shape]), 3))
     print(json.dumps({
         **samples,
         "min_old": min(samples["old"]),

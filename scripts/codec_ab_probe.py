@@ -8,9 +8,9 @@ plan-visible change. This probe settles it with the strongest protocol
 the host allows: INTERLEAVED per-repetition A/B inside one session —
 codec is a runtime SQL conf, so each repetition times the same gate
 under both codecs back-to-back within one box state; a steal wave hits
-both arms or neither. min-of-N per arm, bench.py's exact per-query
-method (_time_query: untimed warmup + min-of-2 noop-sink +
-release_persisted).
+both arms or neither. min-of-N per arm after one untimed warm-up
+execution, each sample one bench.timed noop-sink execution
+(release_persisted, then the write).
 
 Usage: python scripts/codec_ab_probe.py [gate,gate,...] [N]
 """
@@ -43,10 +43,10 @@ def main() -> None:
     spark = get_spark("lakeshed-codec-ab")
     spark.sparkContext.setLogLevel("ERROR")
     reg = q.spark_queries()
-    print(f"canary_before={bench._canary(spark)}", flush=True)
     out: dict[str, dict] = {}
     for name in gates:
-        fn = reg[name]
+        run = bench.noop_sink(spark, reg[name])
+        bench.timed(run)  # untimed warm-up
         samples: dict[str, list[float]] = {"snappy": [], "zstd": []}
         for i in range(n):
             # alternate which codec goes first so per-position bias
@@ -54,7 +54,7 @@ def main() -> None:
             order = ("snappy", "zstd") if i % 2 == 0 else ("zstd", "snappy")
             for codec in order:
                 spark.conf.set("spark.sql.parquet.compression.codec", codec)
-                samples[codec].append(round(bench._time_query(spark, fn), 3))
+                samples[codec].append(round(bench.timed(run), 3))
         spark.conf.set("spark.sql.parquet.compression.codec", "zstd")
         out[name] = {
             "snappy": samples["snappy"],
@@ -65,7 +65,6 @@ def main() -> None:
                 min(samples["zstd"]) / min(samples["snappy"]), 3),
         }
         print(f"{name}: {json.dumps(out[name])}", flush=True)
-    print(f"canary_after={bench._canary(spark)}", flush=True)
     print(json.dumps(out, indent=1))
 
 

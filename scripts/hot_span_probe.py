@@ -15,8 +15,7 @@ windows stay linear) with ONE CONSTANT 16-token line appended to every
 document — a single span hash whose multiplicity equals n_docs. Ladder
 1→64 copies (64x reaches past the fixed-overhead regime, VERDICT r12
 #8; multiplicity 320k at the top rung). Per rung it times, bench-method
-(untimed warmup of both plan shapes once, min-of-2 per timed point,
-canary-bracketed):
+(untimed warmup of both plan shapes once, min-of-2 per timed point):
 
   - ``group_t``: the ENGINE plan (groupBy(h) partial agg + rejoin) —
     map-side combine collapses the hot hash to one row per task before
@@ -60,7 +59,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -156,7 +154,10 @@ def _join_shape(df) -> str:
 def main() -> None:
     spark = get_spark("hot-span-probe")
     spark.sparkContext.setLogLevel("ERROR")
-    from bench import _canary, _min2
+    from bench import timed
+
+    def best2(run):  # min of 2 executions, warm shapes assumed
+        return round(min(timed(run), timed(run)), 2)
 
     warm = load_star(spark, SF_DIR, "documents")["documents"] \
         .select("doc_id", "text").limit(500)
@@ -168,15 +169,14 @@ def main() -> None:
     for c in COPIES:
         docs = _docs_at(spark, c)
         n_docs = docs.count()
-        can = _canary(spark)
         spans = dedup.duplicate_spans(docs, window=16)
-        group_t = _min2(spans.count)
+        group_t = best2(spans.count)
         occ_rows = spans.count()
         hot_mult = spans.agg(F.max("occurrences")).first()[0]
-        window_t = _min2(_window_spans(docs).count)
+        window_t = best2(_window_spans(docs).count)
         rows.append(dict(c=c, n_docs=n_docs, occ_rows=occ_rows,
                          hot_mult=hot_mult, group_t=group_t,
-                         window_t=window_t, canary=round(can, 3)))
+                         window_t=window_t))
         print(json.dumps(rows[-1]), file=sys.stderr)
         docs.unpersist()
         release_persisted()
@@ -208,12 +208,11 @@ def main() -> None:
         ).alias("text"),
     ).repartition(32).persist()
     spread_docs.count()
-    skew_can = _canary(spark)
-    skew_group_t = _min2(dedup.duplicate_spans(skew_docs, window=16).count)
-    skew_window_t = _min2(_window_spans(skew_docs).count)
-    spread_group_t = _min2(
+    skew_group_t = best2(dedup.duplicate_spans(skew_docs, window=16).count)
+    skew_window_t = best2(_window_spans(skew_docs).count)
+    spread_group_t = best2(
         dedup.duplicate_spans(spread_docs, window=16).count)
-    spread_window_t = _min2(_window_spans(spread_docs).count)
+    spread_window_t = best2(_window_spans(spread_docs).count)
     spread_docs.unpersist()
 
     # (a) session defaults: what does AQE make of the rejoin?
@@ -272,17 +271,16 @@ def main() -> None:
         f"span multiplicity {rows[-1]['hot_mult']}). A/B: the engine's "
         "groupBy(h)-partial-agg+rejoin plan vs a frozen replica of the "
         "r12 partitionBy(h) window plan, bench method (warm shapes, "
-        "min-of-2), canary-bracketed.",
+        "min-of-2).",
         "",
         "| copies | docs | dup-occ rows | hot multiplicity | "
-        "groupBy t (s) | window t (s) | canary (s) |",
-        "|---|---|---|---|---|---|---|",
+        "groupBy t (s) | window t (s) |",
+        "|---|---|---|---|---|---|",
     ]
     for r in rows:
         lines.append(
             f"| {r['c']} | {r['n_docs']} | {r['occ_rows']} | "
-            f"{r['hot_mult']} | {r['group_t']} | {r['window_t']} | "
-            f"{r['canary']} |")
+            f"{r['hot_mult']} | {r['group_t']} | {r['window_t']} |")
     lines += [
         "",
         f"- groupBy-plan wall slope vs n_docs: first→last "
@@ -303,8 +301,8 @@ def main() -> None:
         f"Boilerplate-DOMINANT fixture ({SKEW_DOCS} docs of nothing but "
         "a unique token + the hot line — the hot key is ~half of all "
         "occurrence rows), plus a CONCENTRATION CONTROL with identical "
-        "row count but 32 distinct hot lines (multiplicity n/32 each; "
-        f"canary {round(skew_can, 3)} s):",
+        "row count but 32 distinct hot lines (multiplicity n/32 "
+        "each):",
         "",
         f"- window plan: **{skew_window_t} s** at 1 hot key vs "
         f"**{spread_window_t} s** at 32 spread keys — the delta is "

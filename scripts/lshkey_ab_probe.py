@@ -3,8 +3,9 @@ ann_pairs_lsh candidate self-join used int tbl + long bucket as a
 two-column key; r15 folds them into one xxhash64 long before the
 persist. OLD shape reconstructed inline (the same lsh_index + two-key
 join the r14 code shipped); NEW shape is the current ann_pairs_lsh.
-Both run in one session, interleaved per repetition, bench.py's exact
-per-query method. Also value-compares the two outputs.
+Both run in one session, interleaved per repetition after one untimed
+warm-up per shape, each rep one bench.timed noop-sink execution. Also
+value-compares the two outputs.
 
 Usage: python scripts/lshkey_ab_probe.py [N]
 """
@@ -96,14 +97,15 @@ def main() -> None:
     # value-identity first (cheap corpus): same pair set either way
     a = {(r.id_a, r.id_b) for r in old_shape(spark, sf).collect()}
     b = {(r.id_a, r.id_b) for r in new_shape(spark, sf).collect()}
-    print(f"canary_before={bench._canary(spark)}", flush=True)
+    runs = {"old": bench.noop_sink(spark, old_shape),
+            "new": bench.noop_sink(spark, new_shape)}
+    for run in runs.values():
+        bench.timed(run)  # untimed warm-up
     samples = {"old": [], "new": []}
     for i in range(n):
         order = ("old", "new") if i % 2 == 0 else ("new", "old")
         for shape in order:
-            fn = old_shape if shape == "old" else new_shape
-            samples[shape].append(round(bench._time_query(spark, fn), 3))
-    print(f"canary_after={bench._canary(spark)}", flush=True)
+            samples[shape].append(round(bench.timed(runs[shape]), 3))
     print(json.dumps({
         **samples,
         "min_old": min(samples["old"]),

@@ -1,8 +1,8 @@
-"""Isolated per-query timing with bench.py's EXACT per-query method
-(_time_query: untimed warmup + min-of-2 noop-sink, release_persisted per
-timed run), repeated N times in one session — the round's within-session
-A/B instrument (OPTIMIZATION_r14.md: cross-session bands are unusable
-this session because the box itself shifted ~1.45x).
+"""Isolated per-query timing with bench.py's per-execution method
+(bench.timed over bench.noop_sink: release_persisted, then one noop-sink
+write): one untimed warm-up execution, then N timed executions in one
+session — the within-session A/B instrument (OPTIMIZATION_r14.md:
+cross-session bands are unusable when the box itself shifts ~1.45x).
 
 Usage: python scripts/qtime.py <query>[,<query>...] [N]
 Prints one line per query: name, N samples, min/median.
@@ -17,22 +17,21 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
 from lakeshed import queries as q
+from lakeshed.session import get_spark
 
 
 def main() -> None:
     names = sys.argv[1].split(",")
     n = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-    spark = __import__("lakeshed.session", fromlist=["get_spark"]).get_spark(
-        "lakeshed-qtime")
+    spark = get_spark("lakeshed-qtime")
     spark.sparkContext.setLogLevel("ERROR")
     reg = q.spark_queries()
-    print(f"canary_before={bench._canary(spark)}", flush=True)
     for name in names:
-        fn = reg[name]
-        samples = [round(bench._time_query(spark, fn), 3) for _ in range(n)]
+        run = bench.noop_sink(spark, reg[name])
+        bench.timed(run)  # untimed warm-up
+        samples = [round(bench.timed(run), 3) for _ in range(n)]
         print(f"{name}: {samples} min={min(samples)} "
               f"median={statistics.median(samples)}", flush=True)
-    print(f"canary_after={bench._canary(spark)}", flush=True)
 
 
 if __name__ == "__main__":

@@ -20,8 +20,7 @@ still splits genuine hot keys.
 
 Measures, per shape: the exploded agg-side row count (the replication
 volume that crosses the rejoin exchange) and the end-to-end
-duplicate-marking wall (bench method: warm shapes, min-of-2),
-canary-bracketed. The r13 shape runs as a frozen inline replica —
+duplicate-marking wall (bench method: warm shapes, min-of-2). The r13 shape runs as a frozen inline replica —
 the shipped kernel no longer contains it.
 
 Appends a section to SCALING.md. Keep the box idle.
@@ -32,7 +31,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -96,11 +94,13 @@ def _exploded_rows(dup, fanout, per_hash: bool) -> int:
 def main() -> None:
     spark = get_spark("salt-volume-probe")
     spark.sparkContext.setLogLevel("ERROR")
-    from bench import _canary, _min2
+    from bench import timed
+
+    def best2(run):  # min of 2 executions, warm shapes assumed
+        return round(min(timed(run), timed(run)), 2)
 
     docs = _pair_corpus(spark, PAIR_DOCS)
     n_docs = docs.count()
-    can0 = _canary(spark)
 
     occ = dedup._span_occurrences(docs, WINDOW, "text", "doc_id")
     dup = dedup._span_agg(occ, "doc_id").where(F.col("occurrences") > 1)
@@ -130,10 +130,9 @@ def main() -> None:
     mark_hot()
     mark_blanket()
     mark_hot_persist()
-    hot_t = _min2(mark_hot)
-    blanket_t = _min2(mark_blanket)
-    hot_persist_t = _min2(mark_hot_persist)
-    can1 = _canary(spark)
+    hot_t = best2(mark_hot)
+    blanket_t = best2(mark_blanket)
+    hot_persist_t = best2(mark_hot_persist)
 
     # planted hot line on top of the pair corpus: the per-hash shape
     # must still split a genuinely hot key (width > 1) while leaving
@@ -160,7 +159,6 @@ def main() -> None:
         blanket_t=blanket_t, hot_only_t=hot_t,
         hot_only_persist_t=hot_persist_t,
         hot_fixture_width_hist=width_hist,
-        canaries=[round(can0, 3), round(can1, 3)],
     )
     print(json.dumps(out), file=sys.stderr)
 

@@ -66,17 +66,16 @@ def main() -> None:
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     a = {tuple(r) for r in old_shape(spark, sf).collect()}
     b = {tuple(r) for r in new_shape(spark, sf).collect()}
-    from lakeshed.llm import release_persisted
-    release_persisted()
     print(f"rows_identical={a == b} n={len(a)}", flush=True)
-    print(f"canary_before={bench._canary(spark)}", flush=True)
+    runs = {"old": bench.noop_sink(spark, old_shape),
+            "new": bench.noop_sink(spark, new_shape)}
+    for run in runs.values():
+        bench.timed(run)  # untimed warm-up
     samples = {"old": [], "new": []}
     for i in range(n):
         order = ("old", "new") if i % 2 == 0 else ("new", "old")
         for shape in order:
-            fn = old_shape if shape == "old" else new_shape
-            samples[shape].append(round(bench._time_query(spark, fn), 3))
-    print(f"canary_after={bench._canary(spark)}", flush=True)
+            samples[shape].append(round(bench.timed(runs[shape]), 3))
     print(json.dumps({
         **samples,
         "min_old": min(samples["old"]),

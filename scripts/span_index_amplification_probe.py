@@ -22,7 +22,7 @@ measure the mark wall (bench method: warm shapes, min-of-2) and the
 index row/file counts, then ``compact_span_index`` and re-measure —
 same mark semantics (the fold is associative), one row per hash.
 
-Appends a section to SCALING.md. Canary-bracketed; keep the box idle.
+Appends a section to SCALING.md. Keep the box idle.
 """
 
 from __future__ import annotations
@@ -32,7 +32,6 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -94,7 +93,10 @@ def _build_at(spark, docs, b: int):
 def main() -> None:
     spark = get_spark("span-amp-probe")
     spark.sparkContext.setLogLevel("ERROR")
-    from bench import _canary, _min2
+    from bench import timed
+
+    def best2(run):  # min of 2 executions, warm shapes assumed
+        return round(min(timed(run), timed(run)), 2)
 
     docs = _corpus(spark).persist()
     docs.count()
@@ -121,7 +123,6 @@ def main() -> None:
     rows = []
     for b in BATCHES:
         tbl, wh = _build_at(spark, docs, b)
-        can = _canary(spark)
         idx_rows = tbl.read().count()
         n_files = len(tbl._state(tbl.head())[1])
         mark = lambda: dedup.batch_duplicate_spans(
@@ -132,18 +133,17 @@ def main() -> None:
             .agg(F.sum("occurrences").alias("o"),
                  F.min(F.struct("first_id", "first_pos")).alias("f"))
             .where(F.col("o") > 1).count())
-        fold_before = _min2(fold)
-        mark_before = _min2(mark)
+        fold_before = best2(fold)
+        mark_before = best2(mark)
         dedup.compact_span_index(tbl)
         idx_rows_after = tbl.read().count()
-        fold_after = _min2(fold)
-        mark_after = _min2(mark)
+        fold_after = best2(fold)
+        mark_after = best2(mark)
         rows.append(dict(
             b=b, idx_rows=idx_rows, files=n_files,
             fold_before=fold_before, mark_before=mark_before,
             idx_rows_compact=idx_rows_after,
-            fold_after=fold_after, mark_after=mark_after,
-            canary=round(can, 3)))
+            fold_after=fold_after, mark_after=mark_after))
         print(json.dumps(rows[-1]), file=sys.stderr)
         shutil.rmtree(wh, ignore_errors=True)
     probe_h.unpersist()
@@ -172,19 +172,18 @@ def main() -> None:
         f"end-to-end `batch_duplicate_spans` of a fixed {PROBE_DOCS}-"
         "doc probe (its ~constant windowing/job overhead dominates at "
         "local scale until B is large). Bench method (warm shapes, "
-        "min-of-2), canary-bracketed.",
+        "min-of-2).",
         "",
         "| ingests B | index rows | files | fold t (s) | mark t (s) | "
-        "rows after compact | fold t after (s) | mark t after (s) | "
-        "canary (s) |",
-        "|---|---|---|---|---|---|---|---|---|",
+        "rows after compact | fold t after (s) | mark t after (s) |",
+        "|---|---|---|---|---|---|---|---|",
     ]
     for r in rows:
         lines.append(
             f"| {r['b']} | {r['idx_rows']} | {r['files']} | "
             f"{r['fold_before']} | {r['mark_before']} | "
             f"{r['idx_rows_compact']} | {r['fold_after']} | "
-            f"{r['mark_after']} | {r['canary']} |")
+            f"{r['mark_after']} |")
     lines += [
         "",
         f"- append-only FOLD cost grows **{fold_ratio}×** from "

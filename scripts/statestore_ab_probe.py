@@ -57,21 +57,23 @@ def main() -> None:
     reg = q.spark_queries()
     default_provider = spark.conf.get(PROVIDER_KEY)
     print(f"default_provider={default_provider}", flush=True)
-    print(f"canary_before={bench._canary(spark)}", flush=True)
+    providers = {"hdfs": default_provider, "rocksdb": ROCKSDB}
 
     out: dict[str, dict] = {}
     for name in GATES:
-        fn = reg[name]
+        run = bench.noop_sink(spark, reg[name])
         samples: dict[str, list[float]] = {"hdfs": [], "rocksdb": []}
+        # one untimed warm-up per provider (RocksDB loads its native
+        # library on first use)
+        for provider in providers.values():
+            spark.conf.set(PROVIDER_KEY, provider)
+            bench.timed(run)
         for i in range(n):
             order = ("hdfs", "rocksdb") if i % 2 == 0 else (
                 "rocksdb", "hdfs")
             for prov in order:
-                spark.conf.set(
-                    PROVIDER_KEY,
-                    default_provider if prov == "hdfs" else ROCKSDB)
-                samples[prov].append(
-                    round(bench._time_query(spark, fn), 3))
+                spark.conf.set(PROVIDER_KEY, providers[prov])
+                samples[prov].append(round(bench.timed(run), 3))
         spark.conf.set(PROVIDER_KEY, default_provider)
         out[name] = {
             **samples,
@@ -137,7 +139,6 @@ def main() -> None:
         decomp.append({"batchId": p["batchId"],
                        "numInputRows": p["numInputRows"],
                        "durationMs": p["durationMs"]})
-    print(f"canary_after={bench._canary(spark)}", flush=True)
     print(json.dumps({"ab": out, "ssj_decomposition": decomp}, indent=1))
 
 

@@ -572,6 +572,22 @@ def test_dedup_clusters_checkpoint_lifecycle(spark):
     kept = [d for d in os.listdir(new_dirs[0]) if not d.startswith(".")]
     assert kept == ["labels"]
     assert out.count() == 6
+    # a 31-node path outlasts the label-round cap, so the public call
+    # takes the star phase: its rounds land in the call's own dir and
+    # only the composed labels survive (no second, dead star dir)
+    n = 31
+    assert n - 1 > dedup._LABEL_ROUNDS
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "id_a bigint, id_b bigint"
+    )
+    path_ids = spark.createDataFrame([(i,) for i in range(n)], "id bigint")
+    before = set(dedup._CC_CKPT_DIRS)
+    out = dedup.dedup_clusters(path, path_ids)
+    new_dirs = [d for d in dedup._CC_CKPT_DIRS if d not in before]
+    assert len(new_dirs) == 1, new_dirs
+    kept = [d for d in os.listdir(new_dirs[0]) if not d.startswith(".")]
+    assert kept == ["labels_star_composed"], kept
+    assert {r.cluster for r in out.collect()} == {0}
 
 
 def test_pca_matches_numpy_reference(spark):
