@@ -157,14 +157,9 @@ def main() -> None:
     sys.stdout.flush()
     os.dup2(2, 1)
 
-    # The warm-up pass only warms codegen if every query's compiled
-    # classes survive until its timed runs: one suite pass compiles ~1,000
-    # classes, and at Spark's default cache of 100 entries each timed pass
-    # recompiled ~1,150 of them (sf0.01, 4 cores: passes 78-86 s vs 56-58 s
-    # with this cache, 4-8 compiles per pass).
-    spark = get_spark(
-        "lakeshed-bench",
-        extra_conf={"spark.sql.codegen.cache.maxEntries": "4096"})
+    # The warm-up pass warms codegen because the session's codegen cache
+    # (lakeshed.session._DEFAULT_CONF) holds every query's classes.
+    spark = get_spark("lakeshed-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     suite = {name: noop_sink(spark, fn)

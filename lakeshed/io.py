@@ -62,6 +62,16 @@ def _normalize_timestamps(df: DataFrame) -> DataFrame:
     return df
 
 
+def _has_nanos(path: str) -> bool:
+    """Whether the parquet footer at ``path`` holds a TIMESTAMP(NANOS)
+    column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    return any(pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+               for f in pq.read_schema(path))
+
+
 def load_star(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
     """Load driver test tables from ``sf_dir`` as DataFrames keyed by name.
 
@@ -71,20 +81,21 @@ def load_star(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFr
     - naive ``timestamp[us]`` columns (current testdata) → cast NTZ→LTZ
       via :func:`_normalize_timestamps`;
     - legacy TIMESTAMP(NANOS) events (earlier testdata generations) would
-      be rejected outright (PARQUET_TYPE_ILLEGAL), so ``nanosAsLong`` is
-      set at runtime before the read and the resulting bigint is truncated
-      to µs — the same truncation DuckDB applies.
+      be rejected outright (PARQUET_TYPE_ILLEGAL), so when the footer holds
+      NANOS ``nanosAsLong`` is set at runtime before the read and the
+      resulting bigint is truncated to µs — the same truncation DuckDB
+      applies. µs events leave the session config untouched.
     """
     use = names or STAR_TABLES
     out: dict[str, DataFrame] = {}
     for name in use:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if name == "events":
-            # nanosAsLong is SQLConf-runtime-settable and consulted at
-            # action time; it is intentionally NOT restored — a restore
-            # would break the lazy frames returned from here. With µs
-            # testdata it has no effect.
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            if _has_nanos(path):
+                # nanosAsLong is SQLConf-runtime-settable and consulted at
+                # action time; it is intentionally NOT restored — a
+                # restore would break the lazy frames returned from here.
+                spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
             df = spark.read.parquet(path)
             if dict(df.dtypes).get("ts") == "bigint":
                 # integer div: ts is ~1.7e18, float division loses precision

@@ -43,10 +43,6 @@ def tokens(col: Column | str) -> Column:
     return F.split(normalize(col), " ")
 
 
-def token_count(col: Column | str) -> Column:
-    return F.size(tokens(col))
-
-
 def bpe_token_count(col: Column | str) -> Column:
     """Count of BPE-ish pre-tokens — the 'how many tokens will the model
     see' estimator."""

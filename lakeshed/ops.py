@@ -3,7 +3,7 @@
 Most of the reference's relational surface maps 1:1 onto DataFrame calls and
 needs no wrapper; this module holds the few composite operators the
 reference expresses ad hoc (histogram binning, z-score outlier filter,
-latest-row-per-key dedup, top-k) as reusable, scale-aware plans.
+skew-salted join) as reusable, scale-aware plans.
 
 Everything here is pure Catalyst — no UDFs, no collect-driven loops — so
 plans stay inside whole-stage codegen and scale with partition count.
@@ -11,7 +11,7 @@ plans stay inside whole-stage codegen and scale with partition count.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -68,28 +68,6 @@ def zscore_filter(df: DataFrame, col: str, z: float = 3.0) -> DataFrame:
         .where(F.abs((F.col(col) - F.col("__mu")) / F.col("__sigma")) < z)
         .drop("__mu", "__sigma")
     )
-
-
-def latest_by_key(df: DataFrame, keys: list[str], order_col: str) -> DataFrame:
-    """W6 dedup core — last row per key by ``order_col`` (reference semantics:
-    Paimon ``'merge-engine'='deduplicate'`` PaimonStream.java:91).
-
-    ``row_number`` over (key, order desc) = 1: one shuffle on the key, no
-    driver involvement; AQE handles skewed keys.
-    """
-    w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
-def top_k(df: DataFrame, order_by: Column | str, k: int) -> DataFrame:
-    """O1+O2 — global top-k. Spark turns orderBy+limit into TakeOrderedAndProject
-    (per-partition heap + driver merge of k rows) — no full sort at scale."""
-    col = F.col(order_by) if isinstance(order_by, str) else order_by
-    return df.orderBy(col.desc()).limit(k)
 
 
 def salted_join(left: DataFrame, right: DataFrame, on: str,

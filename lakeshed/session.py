@@ -11,6 +11,15 @@ tuned for Spark-first execution:
 - Arrow on for any pandas interchange (SURVEY §2.10 C3).
 - Session timezone pinned to UTC (SURVEY §7.3 timestamp semantics — the
   reference mixes tz/naive timestamps; the DuckDB oracle also runs UTC).
+- Python workers fork from :mod:`lakeshed._daemon`
+  (``spark.python.daemon.module``): the stock ``pyspark.daemon`` except
+  that the ``importlib.invalidate_caches()`` PySpark runs before every task
+  no longer makes each cached zipimporter re-read its archive (hundreds of
+  ms of CPU per task on CPython 3.11). Because Spark starts that module
+  before any ``addPyFile`` ships, :func:`get_spark` prepends the directory
+  holding the ``lakeshed`` package to ``spark.executorEnv.PYTHONPATH``
+  (keeping any value the caller passed), so workers find it whatever the
+  driver's cwd or ``PYTHONPATH``.
 """
 
 from __future__ import annotations
@@ -18,6 +27,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Directory holding the lakeshed package: the workers' import root.
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Defaults chosen for the local[] test harness; on a real cluster the same
 # keys hold, only master/memory change. shuffle.partitions matters little
@@ -42,7 +54,8 @@ _DEFAULT_CONF: dict[str, str] = {
     # which vanilla Spark rejects; read nanos as bigint (io.load_star
     # converts to µs). Current testdata is already µs — this conf is then
     # inert, kept for older fixture sets. io.load_star also sets it at
-    # runtime so gate queries survive on a vanilla (non-lakeshed) session.
+    # runtime, but only when the events footer really holds NANOS, so
+    # gate queries survive on a vanilla (non-lakeshed) session.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
     # zstd for everything the engine WRITES (guide §6: smaller than
@@ -54,6 +67,14 @@ _DEFAULT_CONF: dict[str, str] = {
     # min-of-3 A/B at sf0.1): DML/stream gates within noise of snappy.
     "spark.sql.parquet.compression.codec": "zstd",
     "spark.sql.files.maxPartitionBytes": "128MB",
+    # One pass over the 92 bench queries compiles ~1,000 classes; at
+    # Spark's default cache of 100 entries a long-lived session cycling
+    # through them recompiled ~1,150 classes per pass (bench.py rotated
+    # passes, sf0.01, 4 cores: 78-86 s per pass vs 56-58 s at 4096).
+    "spark.sql.codegen.cache.maxEntries": "4096",
+    # Python workers fork from lakeshed._daemon: pyspark.daemon minus the
+    # per-task re-read of every cached zipimporter (see that module).
+    "spark.python.daemon.module": "lakeshed._daemon",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.ui.enabled": "false",
     # Console progress bars write \r-spam to the terminal; in captured-output
@@ -127,6 +148,9 @@ def get_spark(
     conf = dict(_DEFAULT_CONF)
     if extra_conf:
         conf.update(extra_conf)
+    # the daemon module is imported before any pyFile reaches the worker
+    py_path = "spark.executorEnv.PYTHONPATH"
+    conf[py_path] = os.pathsep.join(filter(None, (_ROOT, conf.get(py_path))))
     if derby_home is not None:
         conf["spark.driver.extraJavaOptions"] = (
             conf.get("spark.driver.extraJavaOptions", "")
