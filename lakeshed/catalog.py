@@ -8,10 +8,13 @@ The reference's catalog is a REST/Hive service resolving
 ``Catalog.sql`` is the engine's analog of the reference's ``%%sql`` magic
 (``spark/ipython/startup/00-prettytables.py:60-81``): the lakehouse DDL/DML
 statements the notebooks use (CREATE DATABASE, CREATE/DROP/TRUNCATE TABLE,
-UPDATE, DELETE, DESCRIBE, CALL procedures) are routed to the table layer;
-SELECTs resolve ``db.table`` (and ``db.table.snapshots``-style metadata
-relations, S7) as temp views and run on stock Spark SQL — Catalyst stays
-the optimizer for every query (SURVEY §4: zero custom rules).
+UPDATE, DELETE, DESCRIBE, CALL procedures) are routed to the table layer.
+Queries and MERGE take their table references from Spark's own SQL parser
+(``sqlParser().parsePlan``): each ``db.table`` it finds (and the
+``db.table.snapshots``-style metadata relations, S7, branches and time
+travel) reads through a temp view spliced in at the parsed span, and the
+query runs on stock Spark SQL — Catalyst stays the optimizer for every
+query (SURVEY §4: zero custom rules).
 """
 
 from __future__ import annotations
@@ -20,6 +23,8 @@ import os
 import re
 from datetime import datetime, timezone
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession
 
 from lakeshed.table import MAIN, BranchExistsError, LakeTable, TableError
@@ -34,10 +39,8 @@ class Catalog:
                  name: str = "demo"):
         self.spark = spark
         # the catalog's own name (Iceberg catalogs are named; the
-        # reference notebooks use ``demo``). Only THIS literal is
-        # stripped as a catalog qualifier in SELECT rewriting — a
-        # generic \w+ strip would mangle alias- or struct-qualified
-        # expressions like ``s.nyc.permits`` into table reads
+        # reference notebooks use ``demo``): the one leading qualifier
+        # a table name may carry
         self.name = name
         self.warehouse = os.path.abspath(
             warehouse
@@ -90,12 +93,9 @@ class Catalog:
             # tables as ``demo.nyc.taxis_sample`` (``spark.sql("CREATE
             # TABLE demo.nyc.taxis_sample ...")`` in Table Maintenance
             # Spark Procedures.ipynb); this Catalog instance IS the
-            # catalog, so the leading part must NAME it — accepting any
-            # qualifier here while the SELECT rewriter strips only
-            # self.name would let writes land under a qualifier reads
-            # can't resolve
-            # case-insensitive like every other identifier (the SELECT
-            # rewriter strips the name under IGNORECASE too)
+            # catalog, so the leading part must NAME it (case-
+            # insensitively, as reads resolve it) — accepting any
+            # qualifier would let writes land where reads can't resolve
             if parts[0].lower() != self.name.lower():
                 raise TableError(
                     f"unknown catalog {parts[0]!r} in table name "
@@ -341,7 +341,7 @@ class Catalog:
         # wave-14 DESCRIBE fix to every route): `low`'s whitespace
         # collapse would let a `--` comment swallow the statement tail,
         # and comments inside keyword gaps would break every \s+ in the
-        # statement-head regexes and the VERSION AS OF rewrites.
+        # statement-head regexes.
         # _strip_comments blanks comments to spaces and is string-
         # literal- and backtick-aware; stock spark.sql fall-throughs see
         # semantically identical text.
@@ -826,63 +826,43 @@ class Catalog:
         sink (``IcebergStream.java:116-120``) to. Routes to
         :meth:`lakeshed.table.LakeTable.merge`; conditional UPDATE
         compiles each assignment to ``CASE WHEN cond THEN expr ELSE
-        t.col END`` so it rides the same rewrite projection."""
-        m = re.match(
-            r"merge\s+into\s+((?:`[\w.]+`|\w+)(?:\.(?:`[\w.]+`|\w+))*)"
-            r"(?:\s+(?:as\s+)?(?!using\b)(\w+))?"
-            r"\s+using\s+", s, re.IGNORECASE,
-        )
-        if not m:
-            raise TableError(f"cannot parse MERGE INTO: {s[:80]!r}")
-        tbl = m.group(1).replace("`", "")
-        talias = m.group(2) or tbl
-        rest = s[m.end():].lstrip()
+        t.col END`` so it rides the same rewrite projection.
 
-        # source: balanced-paren subquery or a [db.]table / temp-view name
-        if rest.startswith("("):
-            depth, i = 0, 0
-            # depth counted on the full scan mask — string literals
-            # (r11 wave 6) AND backticked identifiers (r11 wave 8: a
-            # paren inside `a(b` desynced the count and swallowed the
-            # ON/WHEN tail into the subquery) are blanked; hints are
-            # blanked too, which is paren-neutral (their parens are
-            # balanced and both get blanked)
-            for i, ch in enumerate(_bt_masks(_mask_quotes(rest))[1]):
-                depth += ch == "("
-                depth -= ch == ")"
-                if depth == 0:
-                    break
-            src_df = self.sql(rest[1:i].strip())
-            rest = rest[i + 1:].lstrip()
-            salias = "s"
-        else:
-            mm = re.match(
-                r"((?:`[\w.]+`|\w+)(?:\.(?:`[\w.]+`|\w+))*)", rest)
-            if not mm:
-                raise TableError(
-                    f"cannot parse MERGE source: {rest[:60]!r}")
-            src_name = mm.group(1).replace("`", "")
-            if "`" in mm.group(1):
-                rest = rest[:mm.end()] + _sub_outside_quotes(
-                    re.escape(mm.group(1)), src_name, rest[mm.end():])
+        Everything comes off Spark's own ``MergeIntoTable`` node: the
+        target and source (a name or a subquery, each with its alias),
+        the ON equalities and each WHEN action's kind, condition and
+        assignments. Column references are renamed by position to the
+        ``t.``/``s.`` prefixes ``merge()`` evaluates against."""
+        plan = self._parse(s)
+        if plan is None or plan.nodeName() != "MergeIntoTable":
+            raise TableError(f"cannot parse MERGE INTO: {s[:80]!r}")
+        talias, trel = _unalias(plan.targetTable())
+        salias, src = _unalias(plan.sourceTable())
+        if trel.nodeName() != "UnresolvedRelation":
+            raise TableError(f"cannot parse MERGE target: {s[:80]!r}")
+        tparts = _flat(_parts(trel.multipartIdentifier()))
+        sparts: list[str] = []
+        if src.nodeName() == "UnresolvedRelation":
+            sparts = _flat(_parts(src.multipartIdentifier()))
+            src_name = ".".join(sparts)
             if self._exists(src_name):
                 # the pins redirect catalog-table SOURCE reads exactly
                 # like plain SELECTs (a subquery source routed through
-                # self.sql already does)
+                # _run_select already does)
                 t_src = self.table(src_name)
-                src_df = t_src.read(
-                    version=self._dml_read_version(t_src)
-                )
+                src_df = t_src.read(version=self._dml_read_version(t_src))
             else:
                 src_df = self.spark.table(src_name)
-            rest = rest[mm.end():].lstrip()
-            salias = src_name  # unaliased: conditions use the name itself
-        mm = re.match(r"(?:as\s+)?(?!on\b)(\w+)\s+", rest, re.IGNORECASE)
-        if mm:
-            salias = mm.group(1)
-            rest = rest[mm.end():].lstrip()
+        else:
+            # a subquery source: its text is the union of its nodes' spans
+            rels, nodes = _plan_walk(src)
+            spans = [sp for sp in map(_span, [n for _, n in nodes]
+                                      + [r for r, _, _ in rels]) if sp]
+            src_df = self._run_select(
+                s[min(a for a, _ in spans):max(b for _, b in spans)])
+            salias = salias or "s"
 
-        t_obj, xbr = self._dml_target(tbl)
+        t_obj, xbr = self._dml_target(".".join(tparts))
         # validate/expand against the schema the merge will WRITE — a
         # pinned branch, explicit .branch_<name> target, or staged
         # wap-id chain may have evolved past main
@@ -892,495 +872,386 @@ class Catalog:
                 version=self._write_schema_version(t_obj, xbr))
         ]
 
-        # Normalize EQUIVALENT spellings of the target in the ON/WHEN
-        # tail to the FULL as-written name, so unaliased references
-        # reach the clause parsers (which only recognize talias) in one
-        # canonical form. Scoped to the tail AFTER the source clause
-        # (r11 wave 8: rewriting the whole statement hijacked identifiers
-        # inside the USING subquery that merely SPELL the target name,
-        # e.g. SELECT k AS `nyc.fz`). Every pattern carries the
-        # (?<![\w.`]) lookbehind so a spelling preceded by a qualifier
-        # is never rewritten in place (r11 wave 6: splicing the full
-        # name into demo.`nyc.m3`.k produced demo.demo.nyc.m3.k) and a
-        # (?![\w`]) boundary so `db`.t never eats a prefix of `db`.tx;
-        # a ref under an unknown catalog (other.`t`) is left alone to
-        # fail loudly in the clause parser. Each alternation pattern
-        # covers every per-part tick combination in ONE pass (r11 wave
-        # 8: the 2^n enumeration built up to ~14 full-tail scans).
-        def _alt(p: str) -> str:
-            e = re.escape(p)
-            return f"(?:`{e}`|{e})"
+        # The qualifiers that name each side: its alias, or — unaliased —
+        # its name with or without this catalog's prefix. A name-spelled
+        # qualifier whose LEADING part is a target or source column is a
+        # struct path (nyc.m3.f can be column nyc's field m3.f), not a
+        # side reference, and is left as written.
+        cat = self.name.lower()
 
-        spellings: list[tuple[str, str]] = []  # (leading ident, pattern)
-        parts = tbl.split(".")
-        has_tick = "`" in rest
-        if has_tick:
-            # all per-part tick combinations of the as-written name
-            # (the all-plain combination rewrites to itself — a no-op)
-            # plus the whole-ticked `db.t` form
-            spellings.append(
-                (parts[0], r"\.".join(_alt(p) for p in parts)))
-            spellings.append((tbl, _alt(tbl)))
-        # alternate QUALIFICATIONS run unconditionally (r11 wave 7:
-        # ticked nyc.m3 refs worked on a demo.nyc.m3 target while the
-        # plain equivalent errored): the catalog-less tail of a 3-part
-        # target and the catalog-qualified form of a 2-part one
-        if len(parts) == 3:
-            cl = ".".join(parts[1:])
-            if has_tick:
-                spellings.append(
-                    (parts[1], r"\.".join(_alt(p) for p in parts[1:])))
-                # whole-ticked ONLY: _alt(cl)'s plain alternative would
-                # re-admit plain nyc.m3 under the WRONG guard lead (the
-                # dotted whole name instead of parts[1] — r11 wave 9:
-                # that bypassed the column-shadow guard whenever the
-                # tail contained any backtick); the plain form is
-                # already covered above with the correct lead
-                spellings.append((cl, re.escape(f"`{cl}`")))
-                spellings.append(
-                    (parts[0],
-                     _alt(parts[0]) + r"\." + re.escape(f"`{cl}`")))
-            else:
-                spellings.append((parts[1], re.escape(cl)))
-        elif has_tick:
-            spellings.append(
-                (self.name,
-                 _alt(self.name) + r"\."
-                 + r"\.".join(_alt(p) for p in parts)))
-        else:
-            spellings.append(
-                (self.name, re.escape(f"{self.name}.{tbl}")))
-        # column-shadow guard (r11 wave 8): a spelling whose LEADING
-        # identifier names a target or source column is a struct path /
-        # column ref, not a table ref (nyc.m3.f can be column nyc's
-        # field m3.f) — skip the rewrite; an actually-intended table
-        # ref under a shadowing column then fails loudly in the clause
-        # parser instead of silently reading the wrong column.
-        shadowed = (
-            {c.lower() for c in target_cols}
-            | {c.lower() for c in src_df.columns}
-        )
-        for lead, pat in spellings:
-            if lead.lower() in shadowed:
-                continue
-            rest = _sub_outside_quotes(
-                r"(?<![\w.`])" + pat + r"(?![\w`])", tbl, rest)
+        def forms(alias: str | None, parts: list[str]) -> set[tuple]:
+            if alias is not None:
+                return {(alias.lower(),)}
+            p = tuple(x.lower() for x in parts)
+            return {p, p[1:] if len(p) > 2 and p[0] == cat else (cat,) + p}
 
-        mm = re.match(
-            r"on\s+(.+?)\s+(when\s+(?:not\s+)?matched\b.*)$", rest,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if not mm:
-            raise TableError("MERGE INTO needs ON ... WHEN [NOT] MATCHED")
-        on_cond, when_text = mm.group(1), mm.group(2)
+        sides = (("t", forms(talias, tparts), talias is None),
+                 ("s", forms(salias, sparts), salias is None))
+        shadowed = ({c.lower() for c in target_cols}
+                    | {c.lower() for c in src_df.columns})
 
-        # single simultaneous substitution: sequential replaces would
-        # cascade when one side's alias is literally "t" or "s" (the
-        # other side's canonical prefix)
-        alias_pat = re.compile(
-            rf"\b(?:{re.escape(talias)}|{re.escape(salias)})\.",
-            re.IGNORECASE,
-        )
+        def side(parts: list[str]) -> tuple[str | None, list[str]]:
+            for sd, fm, named in sides:
+                if named and parts[0].lower() in shadowed:
+                    continue
+                for i in range(len(parts) - 1, 0, -1):
+                    if tuple(x.lower() for x in _flat(parts[:i])) in fm:
+                        return sd, parts[i:]
+            return None, parts
 
-        def norm(expr: str) -> str:
-            return alias_pat.sub(
-                lambda mm: "t."
-                if mm.group(0)[:-1].lower() == talias.lower() else "s.",
-                expr,
-            )
+        def text(e, bare: bool = False) -> str:
+            """An expression's text with each side-qualified column
+            renamed to ``t.col``/``s.col``. ``bare`` (WHEN NOT MATCHED BY
+            SOURCE, evaluated on target-only rows): to ``col``, and a
+            source column raises — there is no source row to read."""
+            span = _span(e)
+            if span is None:
+                return e.sql()
+            edits = []
+            for leaf in _seq(e.collectLeaves()):
+                if leaf.nodeName() != "UnresolvedAttribute":
+                    continue
+                parts = _parts(leaf.nameParts())
+                sd, rest = side(parts)
+                sp = _span(leaf)
+                if sd is None or not sp or not _spells(s[sp[0]:sp[1]],
+                                                       parts):
+                    continue
+                if bare and sd == "s":
+                    raise TableError("WHEN NOT MATCHED BY SOURCE cannot "
+                                     "reference source columns")
+                edits.append((sp[0] - span[0], sp[1] - span[0],
+                              ("" if bare else sd + ".")
+                              + ".".join(map(_ident, rest))))
+            return _splice(s[span[0]:span[1]], edits)
+
+        def cond(action, bare: bool = False) -> str | None:
+            c = action.condition()
+            return text(c.get(), bare) if c.isDefined() else None
+
+        # Spark resolves identifiers case-insensitively — canonicalize
+        # assignment targets to the schema's casing so `SET t.V = ...`
+        # hits column `v`; a typo'd column raises instead of being
+        # silently dropped by merge()'s projection
+        target_ci = {c.lower(): c for c in target_cols}
+
+        def assignments(action, bare: bool = False) -> dict[str, str]:
+            out = {}
+            for a in _seq(action.assignments()):
+                col = _parts(a.key().nameParts())[-1]
+                col = target_ci.get(col.lower(), col)
+                if col not in target_cols:
+                    raise TableError(
+                        f"unknown column {col!r} in MERGE UPDATE SET "
+                        f"(target has {target_cols})")
+                out[col] = text(a.value(), bare)
+            return out
 
         keys: list[str] = []
-        for part in re.split(r"(?i)\s+and\s+", norm(on_cond)):
-            km = re.match(
-                r"\s*([ts])\.`?(\w+)`?\s*=\s*([ts])\.`?(\w+)`?\s*$", part
-            )
-            if (not km or km.group(1) == km.group(3)
-                    or km.group(2).lower() != km.group(4).lower()):
+        todo = [plan.mergeCondition()]
+        while todo:
+            e = todo.pop()
+            kind = e.nodeName()
+            if kind == "And":
+                todo.extend(reversed(_seq(e.children())))
+                continue
+            ops = [side(_parts(o.nameParts())) for o in _seq(e.children())
+                   if o.nodeName() == "UnresolvedAttribute"]
+            if (kind != "EqualTo" or len(ops) != 2
+                    or {ops[0][0], ops[1][0]} != {"t", "s"}
+                    or len(ops[0][1]) != 1 or len(ops[1][1]) != 1
+                    or ops[0][1][0].lower() != ops[1][1][0].lower()):
                 raise TableError(
-                    f"MERGE ON must be t.col = s.col equalities, got {part!r}"
-                )
-            keys.append(km.group(2))
+                    f"MERGE ON must be t.col = s.col equalities, "
+                    f"got {text(e)!r}")
+            keys.append(ops[0][1][0])
 
-        upd: dict[str, str] | str | None = None
-        dele: str | None = None
-        ins: str | None = None
-        bysrc: str | None = None
-        bysrc_upd: dict[str, str] | None = None
-        bysrc_upd_cond: str | None = None
-        # Spark resolves identifiers case-insensitively (and every
-        # keyword regex here is IGNORECASE) — canonicalize assignment
-        # targets to the schema's casing so `SET t.V = ...` hits column
-        # `v` instead of being rejected or silently dropped
-        target_cols_ci = {c.lower(): c for c in target_cols}
-        for cm in re.finditer(
-            r"when\s+(not\s+)?matched(\s+by\s+(?:source|target))?"
-            r"(?:\s+and\s+(.+?))?\s+then\s+"
-            r"(update\s+set\s+.+?|delete|insert\s+.+?)\s*"
-            r"(?=when\s+(?:not\s+)?matched\b|$)",
-            when_text, re.IGNORECASE | re.DOTALL,
-        ):
-            unmatched, by_source, cond, action = cm.groups()
-            if by_source and by_source.split()[-1].lower() == "target":
-                # WHEN NOT MATCHED BY TARGET ≡ WHEN NOT MATCHED (Spark 4
-                # spells the source-only clause both ways)
-                by_source = None
-            cond = norm(cond.strip()) if cond else None
-            act = " ".join(action.lower().split())
-            if by_source:
-                # Spark 4 / Delta: WHEN NOT MATCHED BY SOURCE acts on
-                # TARGET-only rows; conditions and assignments may
-                # reference target columns only (there is no source row
-                # to read). merge() evaluates them on target-only frames
-                # with bare column names — strip the normalized prefix.
-                if not unmatched or (
-                    act != "delete" and not act.startswith("update set")
-                ):
-                    raise TableError(
-                        "WHEN NOT MATCHED BY SOURCE supports THEN "
-                        "DELETE / THEN UPDATE SET only"
-                    )
-                if cond and re.search(r"\bs\.", cond):
-                    raise TableError(
-                        "NOT MATCHED BY SOURCE condition cannot "
-                        "reference source columns"
-                    )
-                bare = (
-                    lambda e: re.sub(r"\bt\.", "", e) if e else e
-                )
-                if act == "delete":
-                    bysrc = bare(cond) or "true"
-                else:
-                    assigns = {}
-                    body = re.sub(r"(?is)^update\s+set\s*", "",
-                                  action.strip())
-                    for a in _split_top(body):
-                        col, _, expr = a.partition("=")
-                        expr = norm(expr.strip())
-                        if re.search(r"\bs\.", expr):
-                            raise TableError(
-                                "NOT MATCHED BY SOURCE assignment cannot "
-                                "reference source columns"
-                            )
-                        col = col.strip().split(".")[-1].strip("`")
-                        col = target_cols_ci.get(col.lower(), col)
-                        if col not in target_cols:
-                            # update() raises for unknown columns; a
-                            # silent no-op assignment would hide a typo
-                            raise TableError(
-                                f"unknown column {col!r} in NOT MATCHED "
-                                "BY SOURCE UPDATE"
-                            )
-                        assigns[col] = bare(expr)
-                    bysrc_upd = assigns
-                    bysrc_upd_cond = bare(cond)
-            elif unmatched:
-                if act not in ("insert *", "insert row"):
-                    raise TableError(
-                        "only WHEN NOT MATCHED THEN INSERT * is supported"
-                    )
-                ins = cond or "*"
-            elif act == "delete":
-                dele = cond or "true"
-            elif act.startswith("update set"):
-                body = re.sub(r"(?is)^update\s+set\s*", "",
-                              action.strip()).strip()
-                if body == "*":
-                    upd = "*" if cond is None else {
-                        c: f"CASE WHEN {cond} THEN s.`{c}` ELSE t.`{c}` END"
-                        for c in target_cols if c in src_df.columns
-                    }
-                else:
-                    assigns: dict[str, str] = {}
-                    for a in _split_top(body):
-                        col, _, expr = a.partition("=")
-                        # alias first, THEN backticks: t.`active` must
-                        # yield "active", not "`active"
-                        col = col.strip().split(".")[-1].strip("`")
-                        col = target_cols_ci.get(col.lower(), col)
-                        if col not in target_cols:
-                            # mirror the NOT MATCHED BY SOURCE UPDATE
-                            # check — a typo'd column must raise, not be
-                            # silently dropped by merge()'s projection
-                            raise TableError(
-                                f"MERGE UPDATE SET references unknown "
-                                f"column {col!r} (target has "
-                                f"{target_cols})"
-                            )
-                        expr = norm(expr.strip())
-                        assigns[col] = expr if cond is None else (
-                            f"CASE WHEN {cond} THEN {expr} ELSE t.`{col}` END"
-                        )
-                    upd = assigns
+        # merge() arguments; absent clauses must be None, not its defaults
+        args: dict = {"when_matched_update": None,
+                      "when_not_matched_insert": None}
+        for action in _seq(plan.matchedActions()):
+            kind, c = action.nodeName(), cond(action)
+            if kind == "DeleteAction":
+                args["when_matched_delete"] = c or "true"
+            elif kind == "UpdateStarAction":
+                args["when_matched_update"] = "*" if c is None else {
+                    col: f"CASE WHEN {c} THEN s.`{col}` ELSE t.`{col}` END"
+                    for col in target_cols if col in src_df.columns
+                }
             else:
-                raise TableError(f"unsupported MERGE action {action!r}")
+                args["when_matched_update"] = {
+                    col: e if c is None
+                    else f"CASE WHEN {c} THEN {e} ELSE t.`{col}` END"
+                    for col, e in assignments(action).items()
+                }
+        for action in _seq(plan.notMatchedActions()):
+            # WHEN NOT MATCHED BY TARGET is the same clause
+            if action.nodeName() != "InsertStarAction":
+                raise TableError(
+                    "only WHEN NOT MATCHED THEN INSERT * is supported")
+            args["when_not_matched_insert"] = cond(action) or "*"
+        for action in _seq(plan.notMatchedBySourceActions()):
+            # Spark 4 / Delta: acts on TARGET-only rows
+            c = cond(action, bare=True)
+            if action.nodeName() == "DeleteAction":
+                args["when_not_matched_by_source_delete"] = c or "true"
+            else:
+                args["when_not_matched_by_source_update"] = assignments(
+                    action, bare=True)
+                args["when_not_matched_by_source_condition"] = c
         # D14 — MERGE respects the wap pins like every other DML
-        # statement (reads the pinned state, stages/commits accordingly)
+        # statement (reads the pinned state, stages/commits accordingly).
+        # Standard SQL MERGE scope: matched-clause conditions never apply
+        # to unmatched rows (the changelog netting default would
+        # silently drop an unmatched row satisfying the DELETE condition
+        # instead of inserting it).
         self._run_dml(t_obj, lambda **kw: t_obj.merge(
-            src_df, keys,
-            when_matched_update=upd,
-            when_matched_delete=dele,
-            when_not_matched_insert=ins,
-            # standard SQL MERGE scope: matched-clause conditions never
-            # apply to unmatched rows (the changelog netting default
-            # would silently drop an unmatched row satisfying the
-            # DELETE condition instead of inserting it)
-            net_unmatched_deletes=False,
-            when_not_matched_by_source_delete=bysrc,
-            when_not_matched_by_source_update=bysrc_upd,
-            when_not_matched_by_source_condition=bysrc_upd_cond,
-            **kw,
+            src_df, keys, net_unmatched_deletes=False, **args, **kw,
         ), explicit_branch=xbr)
 
+    # ------------------------------------------------------------ SELECT
+
+    def _parse(self, s: str):
+        """Spark's own parse of ``s`` — a JVM ``LogicalPlan`` whose nodes
+        carry every relation and column name with the exact span of
+        text it was read from — or None when Spark's grammar rejects
+        the text."""
+        try:
+            return (self.spark._jsparkSession.sessionState().sqlParser()
+                    .parsePlan(s))
+        except (CapturedException, Py4JJavaError):
+            return None
+
+    def _lake_rel(self, parts: list[str]):
+        """``(table, key, suffix)`` when a relation name reads a lakeshed
+        table — ``[<catalog>.]db.t``, optionally followed by a metadata
+        relation (``.snapshots``, S7) or ``.branch_<b>`` (S6) — else None.
+        ``key`` is the lower-cased ``(db, t[, suffix])`` the name
+        resolved to. Quoting carries no information (lakeshed names are
+        \\w-only), so a whole-ticked `nyc.t` reads like nyc.t."""
+        flat = _flat(parts)
+        cands = [flat]
+        if len(flat) > 2 and flat[0].lower() == self.name.lower():
+            cands.insert(0, flat[1:])
+        for c in cands:
+            suffix = c[2] if len(c) == 3 else None
+            if len(c) not in (2, 3) or not (
+                    suffix is None or suffix.lower() in _META_TABLES
+                    or suffix.lower().startswith("branch_")):
+                continue
+            t = LakeTable(self.spark, os.path.join(self.warehouse, *c[:2]))
+            if t.exists():
+                return t, tuple(x.lower() for x in c), suffix
+        return None
+
+    def _view(self, t: LakeTable, suffix: str | None, travel, text: str,
+              made: set[str]) -> str:
+        """The temp view one lakeshed relation reads through: the table
+        (D14: at the ``spark.wap.branch`` head when pinned), a metadata
+        relation, a ``.branch_<b>`` head, or a ``VERSION``/``TIMESTAMP
+        AS OF`` pin (D20/S6; ``travel`` is Spark's RelationTimeTravel
+        node, ``text`` the relation's text through its AS OF clause).
+        Created once per statement."""
+        db, tbl = t.path.split(os.sep)[-2:]
+        view, read = f"__lakeshed_{db}_{tbl}", t.read
+        if travel is not None and suffix is not None:
+            raise TableError(
+                f"time travel reads a table, not {db}.{tbl}.{suffix}")
+        if travel is None and suffix is None:
+            # D14 — spark.wap.branch redirects plain READS too
+            # (WAP...ipynb cells 18-26); tables without that branch read
+            # main. One resolver serves SELECTs, MERGE sources, and
+            # INSERT schema alignment.
+            pin = {"version": self._dml_read_version(t)}
+        elif suffix is not None and suffix.lower() in _META_TABLES:
+            view = f"{view}_{suffix.lower()}"
+            read, pin = getattr(t, suffix.lower()), {}
+        elif suffix is not None:
+            branch = suffix[len("branch_"):]
+            view, pin = f"{view}_br_{branch}", {"branch": branch}
+        elif travel.version().isDefined():
+            tag = travel.version().get()
+            view = f"{view}_v_{tag}"
+            pin = ({"branch": tag} if text[-1] in "'\""  # AS OF '<b>'
+                   else {"version": int(tag)})
+        else:
+            # TIMESTAMP AS OF <epoch-ms | 'ISO datetime'>, resolved
+            # against the commit log's timestamp_ms
+            ts = travel.timestamp().get()
+            lit = ts.value() if ts.nodeName() == "Literal" else None
+            if lit is None:
+                raise TableError(
+                    "TIMESTAMP AS OF takes epoch ms or a quoted "
+                    f"timestamp, got {ts.sql()!r}")
+            ms = lit if isinstance(lit, int) else _ts_ms(str(lit))
+            view, pin = f"{view}_ts_{ms}", {"as_of_ms": ms}
+        if view not in made:
+            read(**pin).createOrReplaceTempView(view)
+            made.add(view)
+        return view
+
     def _run_select(self, s: str) -> DataFrame:
-        for db in self.databases():
-            for tbl in self.tables(db):
-                base = f"{db}.{tbl}"
-                t = self.table(base)
-                # backtick-quoted relation spellings (`nyc.taxis`,
-                # `nyc`.`taxis`) normalize to the plain spelling FIRST so
-                # every rewrite below (whose (?<![\w.`]) lookbehind would
-                # otherwise skip them) sees the canonical form — works in
-                # every relation position (FROM lists, JOIN, USING,
-                # qualified column prefixes). Two exclusions keep quoted
-                # identifiers that merely SPELL a table name intact: an
-                # output alias (``AS `nyc.bt```) and a dot-qualified
-                # member (``t.`nyc.bt``` — a struct/column path).
-                # Backticks are not string-literal quotes to
-                # _quoted_spans, so _unquoted_matches applies here.
-                def _norm_backticks(pat: str) -> None:
-                    nonlocal s
-                    if not re.search(pat, s, re.IGNORECASE):
-                        return  # this table is not spelled here at all
-                    ms = _mask_quotes(s)
-                    # one-pass comment+identifier classification: mcs
-                    # blanks comments (identifiers intact — alias
-                    # detection reads it), mscan blanks both (all
-                    # position/keyword scanning reads it; a stop-word
-                    # inside `nyc.order` must not steer detection)
-                    mcs, mscan = _bt_masks(ms)
-                    # a statement that DEFINES this spelling as an alias
-                    # (``... AS `nyc.bt```) uses it as an identifier, not
-                    # a relation — suppress prefix rewrites for it
-                    defines_alias = bool(re.search(
-                        rf"\bas\s+`{re.escape(base)}`", mcs,
-                        re.IGNORECASE
-                    )) if pat == rf"`{re.escape(base)}`" else False
-                    repls = []
-                    prefix_repls = []
-                    for m in re.finditer(pat, s, re.IGNORECASE):
-                        # inside a string literal/comment the masked char
-                        # differs from the original (match starts on a
-                        # backtick or identifier char — never a space, so
-                        # equality is an exact outside-literal test; the
-                        # mixed-spelling patterns start on a word char,
-                        # which the old literal-backtick guard rejected)
-                        if mcs[m.start()] != s[m.start()]:
-                            continue
-                        j = _bt_skip_back(mscan, m.start() - 1)
-                        if j >= 0 and mscan[j] == ".":
-                            # dot-qualified: a catalog-qualified relation
-                            # (demo.`nyc.bt` or `demo`.`nyc.bt` — strip
-                            # the qualifier AND normalize, mirroring the
-                            # plain-spelling catalog strip below) vs an
-                            # alias/struct member path (t.`nyc.bt` —
-                            # leave quoted)
-                            k = j - 1
-                            if k >= 0 and mcs[k] == "`":
-                                o = mcs.rfind("`", 0, k)
-                                if (o >= 0 and mcs[o + 1:k].lower()
-                                        == self.name.lower()
-                                        and (o == 0
-                                             or mcs[o - 1] not in ".`")):
-                                    repls.append((o, m.end()))
-                                continue
-                            while k >= 0 and (mscan[k].isalnum()
-                                              or mscan[k] == "_"):
-                                k -= 1
-                            if (mscan[k + 1:j].lower()
-                                    == self.name.lower()
-                                    and (k < 0 or mscan[k] not in ".`")):
-                                repls.append((k + 1, m.end()))
-                            continue
-                        n = m.end()
-                        while n < len(mscan) and mscan[n] in " \t\r\n":
-                            n += 1
-                        if n < len(mscan) and mscan[n] == ".":
-                            # qualified-column prefix (`nyc.bt`.k)
-                            # references the relation wherever it appears
-                            # (SELECT list, GROUP BY, WHERE, ...) —
-                            # UNLESS the statement used this spelling as
-                            # an identifier somewhere (explicit AS alias,
-                            # implicit alias, BY-reference), which
-                            # shadows the table. Detection is statement-
-                            # global: a subquery-scoped alias suppresses
-                            # outer-scope prefixes too — proper scoping
-                            # needs a real parser; shadowing errs on the
-                            # side of not hijacking the user's alias.
-                            prefix_repls.append((m.start(), m.end()))
-                            continue
-                        # BARE occurrence: a relation only in relation
-                        # position — directly after a relation-introducing
-                        # keyword, after a FROM-list comma (depth-aware
-                        # scan above), or after a paren whose own context
-                        # is relation position. Everything else (AS
-                        # alias, implicit alias, BY/HAVING references to
-                        # an alias that merely spells a table name) stays
-                        # a quoted identifier. Full alias tracking needs
-                        # a real parser; the router is deliberately
-                        # regex-level.
-                        while j >= 0 and mscan[j] == "(":
-                            j = _bt_skip_back(mscan, j - 1)
-                        if j >= 0 and mscan[j] == ",":
-                            if _bt_comma_in_from_list(mscan, j):
-                                repls.append((m.start(), m.end()))
-                            continue
-                        k = j
-                        while k >= 0 and (mscan[k].isalnum()
-                                          or mscan[k] == "_"):
-                            k -= 1
-                        prev_word = mscan[k + 1:j + 1].lower()
-                        # no 'using': MERGE routes to _merge_into before
-                        # any SELECT rewriting, and JOIN ... USING (cols)
-                        # is a COLUMN list (r10 wave 11)
-                        if prev_word in ("from", "join", "into", "update",
-                                         "table", "lateral"):
-                            repls.append((m.start(), m.end()))
+        """Run a query on stock Spark SQL with each lakeshed relation it
+        reads spliced out for a temp view. Spark's own parser finds the
+        relations — in FROM/JOIN, subqueries, CTE bodies, time travel
+        and hint arguments — so a name inside a string literal, a
+        comment or a column alias is never one. Qualified column
+        prefixes (``nyc.taxis.fare``) follow the relation only where it
+        is read unaliased; a struct path that merely spells a table name
+        stays as written. Text Spark cannot parse goes to ``spark.sql``
+        unchanged, which raises Spark's own error."""
+        plan = self._parse(s)
+        if plan is None:
+            return self.spark.sql(s)
+        rels, nodes = _plan_walk(plan)
+        edits: list[tuple[int, int, str]] = []
+        made: set[str] = set()
+        views: dict[tuple, str] = {}      # relation key -> view
+        unaliased: dict[tuple, str] = {}  # the same, read without alias
+        for rel, travel, aliased in rels:
+            parts = _parts(rel.multipartIdentifier())
+            hit = self._lake_rel(parts)
+            span = hit and _span(rel)
+            if not span or not _spells(s[span[0]:span[1]], parts):
+                continue
+            t, key, suffix = hit
+            a, b = span
+            if travel is not None:
+                b = _span(travel)[1]
+            view = self._view(t, suffix, travel, s[a:b], made)
+            edits.append((a, b, view))
+            views.setdefault(key, view)
+            if not aliased:
+                unaliased.setdefault(key, view)
+
+        def qualified(parts: list[str], keys: dict, whole: bool = False):
+            """(view, rest) when a leading run of ``parts`` (``whole``:
+            all of them) names a relation in ``keys``, catalog prefix
+            optional."""
+            for i in [len(parts)] if whole else range(len(parts) - 1, 0, -1):
+                k = tuple(x.lower() for x in _flat(parts[:i]))
+                if k not in keys and len(k) > 2 and k[0] == self.name.lower():
+                    k = k[1:]
+                if k in keys:
+                    return keys[k], parts[i:]
+            return None
+
+        # a qualified reference to a relation must spell its name, so the
+        # expressions are walked only when a name recurs outside the
+        # relation spans (hint arguments are relation names too)
+        rest = list(s.lower())
+        for a, b, _ in edits:
+            rest[a:b] = " " * (b - a)
+        rest = "".join(rest)
+        if any(k[-1] in rest for k in views):
+            for kind, node in nodes:
+                hint = kind == "UnresolvedHint"
+                for e in _seq(node.expressions()):
+                    for leaf in _seq(e.collectLeaves()):
+                        lk = leaf.nodeName()
+                        if lk == "UnresolvedAttribute":
+                            parts = _parts(leaf.nameParts())
+                        elif (lk == "UnresolvedStar"
+                              and leaf.target().isDefined()):
+                            parts = _parts(leaf.target().get()) + ["*"]
                         else:
-                            # a bare occurrence OUTSIDE relation position
-                            # is an identifier use (implicit alias, alias
-                            # reference): it shadows the table for
-                            # qualified-prefix rewrites
-                            defines_alias = True
-                    if not defines_alias:
-                        repls.extend(prefix_repls)
-                    repls.sort()
-                    for a, b in reversed(repls):
-                        s = s[:a] + base + s[b:]
+                            continue
+                        # a hint argument may name the relation itself,
+                        # aliased or not (BROADCAST(nyc.t))
+                        m = ((hint and qualified(parts, views, whole=True))
+                             or qualified(parts, unaliased))
+                        span = m and _span(leaf)
+                        if not span or not _spells(s[span[0]:span[1]],
+                                                   parts):
+                            continue
+                        a, b = span
+                        view, tail = m
+                        edits.append((a, b, ".".join(
+                            [view] + [p if p == "*" else _ident(p)
+                                      for p in tail])))
+        return self.spark.sql(_splice(s, edits))
 
-                if "`" in s:  # backtick-free statements skip the
-                    # masking + scan entirely (the common case)
-                    _norm_backticks(
-                        rf"`{re.escape(db)}`\.`{re.escape(tbl)}`")
-                    _norm_backticks(rf"`{re.escape(base)}`")
-                    # mixed spellings nyc.`taxis` / `nyc`.taxis (r10
-                    # ADVICE: these bypassed normalization and hit raw
-                    # spark.sql). The plain-start pattern forbids a
-                    # preceding word char/backtick but ALLOWS a dot so
-                    # demo.nyc.`taxis` still reaches the catalog-strip
-                    # branch; the plain-end pattern carries a word
-                    # boundary so `nyc`.taxis never eats `nyc`.taxis2.
-                    _norm_backticks(
-                        rf"(?<![\w`]){re.escape(db)}\.`{re.escape(tbl)}`")
-                    _norm_backticks(
-                        rf"`{re.escape(db)}`\.{re.escape(tbl)}(?![\w`])")
-                # catalog-qualified reads — strip a single leading
-                # ``<self.name>.`` segment so ``SELECT ... FROM
-                # demo.nyc.taxis_sample`` resolves like the write path's
-                # 3-part handling in _path. ONLY the configured catalog
-                # name is stripped (matching it literally): a generic
-                # identifier strip would turn an alias/struct reference
-                # like ``s.nyc.permits`` into a read of nyc.permits
-                s = _sub_outside_quotes(
-                    rf"(?<![\w.`]){re.escape(self.name)}"
-                    rf"\.(?={re.escape(base)}\b)", "", s,
-                )
-                # (?<![\w.`]) on every rewrite below: a dot-qualified
-                # occurrence like ``s.nyc.permits`` is an alias/struct
-                # column path, not a relation reference — the legit
-                # catalog qualifier was already stripped above
-                unqual = r"(?<![\w.`])"
-                # D20/S6 — time travel: FROM t VERSION AS OF <id|'branch'>
-                # (WAP...ipynb:272 uses a branch name; Iceberg also takes
-                # snapshot ids). The travel literal itself is quoted, so
-                # the pattern must run on the ORIGINAL text — quote
-                # safety comes from _unquoted_matches (a match starting
-                # inside a string literal is data, not a relation) and
-                # positional splicing (s.replace would rewrite identical
-                # text inside literals too).
-                def _travel(pattern: str, resolve) -> None:
-                    nonlocal s
-                    repls = []
-                    for m in _unquoted_matches(pattern, s):
-                        repls.append((m.start(), m.end(), resolve(m)))
-                    for a, b, view in reversed(repls):
-                        s = s[:a] + view + s[b:]
 
-                def _v_view(m) -> str:
-                    if m.group(2):
-                        pinned = t.read(branch=m.group(2))
-                        tag = m.group(2)
-                    else:
-                        pinned = t.read(version=int(m.group(1)))
-                        tag = m.group(1)
-                    view = f"__lakeshed_{db}_{tbl}_v_{tag}"
-                    pinned.createOrReplaceTempView(view)
-                    return view
+def _parts(seq) -> list[str]:
+    """A JVM ``Seq[String]`` of name parts as a list (one round trip)."""
+    return seq.mkString("\x1f").split("\x1f")
 
-                _travel(
-                    rf"{unqual}{re.escape(base)}\s+version\s+as\s+of\s+"
-                    r"(\d+|'(\w+)')", _v_view,
-                )
 
-                # timestamp-pinned travel: FROM t TIMESTAMP AS OF
-                # <epoch-ms | 'ISO datetime'> — resolved against the commit
-                # log's timestamp_ms (Iceberg SQL surface)
-                def _ts_view(m) -> str:
-                    ts_ms = (int(m.group(1)) if m.group(1)
-                             else _ts_ms(m.group(2)))
-                    view = f"__lakeshed_{db}_{tbl}_ts_{ts_ms}"
-                    t.read(as_of_ms=ts_ms).createOrReplaceTempView(view)
-                    return view
+def _flat(parts: list[str]) -> list[str]:
+    """Name parts with dotted parts split — `nyc.t`.k ≡ nyc.t.k."""
+    return [p for part in parts for p in part.split(".")]
 
-                _travel(
-                    rf"{unqual}{re.escape(base)}\s+timestamp\s+as\s+of\s+"
-                    r"(?:(\d+)|'([^']+)')", _ts_view,
-                )
-                # S6 — branch-suffix relation: FROM nyc.permits.branch_etl_job_42
-                # (WAP...ipynb:294); resolves to a branch-pinned read.
-                # Detection runs on the quote-masked text: a literal
-                # mentioning '.branch_x' is data and must not trigger a
-                # branch read (which would error on unknown branches).
-                for m in re.finditer(
-                    rf"{unqual}{re.escape(base)}\.branch_(\w+)",
-                    _mask_quotes(s), re.IGNORECASE,
-                ):
-                    branch = m.group(1)
-                    view = f"__lakeshed_{db}_{tbl}_br_{branch}"
-                    t.read(branch=branch).createOrReplaceTempView(view)
-                    s = _sub_outside_quotes(
-                        rf"{unqual}{re.escape(base)}"
-                        rf"\.branch_{re.escape(branch)}",
-                        view, s,
-                    )
-                for meta in _META_TABLES:
-                    dotted = f"{base}.{meta}"
-                    if re.search(
-                        rf"{unqual}{re.escape(dotted)}", s, re.IGNORECASE
-                    ):
-                        view = f"__lakeshed_{db}_{tbl}_{meta}"
-                        getattr(t, meta)().createOrReplaceTempView(view)
-                        s = _sub_outside_quotes(
-                            rf"{unqual}{re.escape(dotted)}", view, s
-                        )
-                if re.search(
-                    rf"{unqual}{re.escape(base)}\b", s, re.IGNORECASE
-                ):
-                    view = f"__lakeshed_{db}_{tbl}"
-                    # D14 — spark.wap.branch redirects plain READS too
-                    # (WAP...ipynb cells 18-26: with the pin set, SELECT
-                    # FROM nyc.permits shows the staged branch); tables
-                    # without that branch read main as usual. One
-                    # resolver serves SELECTs, MERGE sources, and INSERT
-                    # schema alignment.
-                    t.read(
-                        version=self._dml_read_version(t)
-                    ).createOrReplaceTempView(view)
-                    # quote-aware: a table name inside a string literal
-                    # (WHERE src = 'nyc.taxis') is DATA, not a relation
-                    s = _sub_outside_quotes(
-                        rf"{unqual}{re.escape(base)}\b", view, s
-                    )
-        return self.spark.sql(s)
+
+def _seq(seq) -> list:
+    """The elements of a JVM ``Seq``."""
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def _span(node) -> tuple[int, int] | None:
+    """``[start, end)`` of the text a parsed node was read from; None
+    for the shared constants (``true``, ``false``) the parser reuses."""
+    o = node.origin()
+    a = o.startIndex()
+    return (a.get(), o.stopIndex().get() + 1) if a.isDefined() else None
+
+
+def _spells(text: str, parts: list[str]) -> bool:
+    """Whether ``text`` spells the name ``parts`` (quoting and spacing
+    aside) — the guard before a span is spliced: some parsed names carry
+    their whole clause's span (LATERAL VIEW and UNPIVOT output columns,
+    MERGE SET targets)."""
+    def norm(x: str) -> str:
+        return "".join(x.split()).replace("`", "").lower()
+    return norm(text) == norm(".".join(parts))
+
+
+def _ident(part: str) -> str:
+    """One name part as SQL: bare when the lexer reads it as an
+    identifier, else backticked."""
+    if part.isascii() and part.isidentifier():
+        return part
+    return "`" + part.replace("`", "``") + "`"
+
+
+def _splice(s: str, edits: list[tuple[int, int, str]]) -> str:
+    """``s`` with each ``(start, end, text)`` span replaced."""
+    out, pos = [], 0
+    for a, b, text in sorted(edits):
+        out += [s[pos:a], text]
+        pos = b
+    out.append(s[pos:])
+    return "".join(out)
+
+
+def _unalias(node):
+    """``(alias or None, relation)`` for a MERGE target/source node."""
+    if node.nodeName() == "SubqueryAlias":
+        return node.alias(), node.child()
+    return None, node
+
+
+def _plan_walk(plan):
+    """Every relation (or command target) a parsed plan names — in the
+    main tree, in Spark's ``innerChildren`` (subquery expressions, CTE
+    bodies) and under EXPLAIN — as ``(relation, RelationTimeTravel or
+    None, aliased)``, and every other plan node as ``(kind, node)``."""
+    rels, nodes = [], []
+    todo = [(plan, False)]
+    while todo:
+        node, aliased = todo.pop()
+        kind = node.nodeName()
+        if kind in ("UnresolvedRelation", "UnresolvedTableOrView"):
+            rels.append((node, None, aliased))
+        elif kind == "RelationTimeTravel":
+            rels.append((node.relation(), node, aliased))
+        elif kind == "ExplainCommand":
+            todo.append((node.logicalPlan(), False))
+        else:
+            nodes.append((kind, node))
+            todo += [(c, kind == "SubqueryAlias")
+                     for c in _seq(node.children())]
+            todo += [(c, False) for c in _seq(node.innerChildren())]
+    return rels, nodes
 
 
 def _ts_ms(literal: str) -> int:
@@ -1690,77 +1561,6 @@ def _bt_masks(ms: str) -> tuple[str, str]:
         else:
             i += 1
     return "".join(mcs), "".join(mscan)
-
-
-_BT_CLAUSE_STOP = frozenset((
-    "select", "where", "group", "order", "having", "by",
-    "when", "set", "values", "limit", "union",
-    "intersect", "except", "partition", "over",
-))
-
-
-def _bt_skip_back(ms: str, j: int) -> int:
-    """Index of the last code char before ``j`` in a masked text
-    (whitespace only — comments/identifiers are already spaces in the
-    scan mask)."""
-    while j >= 0 and ms[j] in " \t\r\n":
-        j -= 1
-    return j
-
-
-def _bt_comma_in_from_list(ms: str, j: int) -> bool:
-    """Whether the comma at ``j`` separates items of a FROM-like list
-    (vs a SELECT/BY/expression list): scan backward at paren depth 0
-    for the owning clause keyword. ``ms`` must have string literals,
-    comments AND backticked identifiers masked to spaces — a stop-word
-    inside a quoted identifier must not end the hunt."""
-    depth = 0
-    k = j - 1
-    while k >= 0:
-        c = ms[k]
-        if c == ")":
-            depth += 1
-        elif c == "(":
-            if depth == 0:
-                return False  # inside a call/IN list
-            depth -= 1
-        elif depth == 0 and (c.isalnum() or c == "_"):
-            e = k
-            while k >= 0 and (ms[k].isalnum() or ms[k] == "_"):
-                k -= 1
-            w = ms[k + 1:e + 1].lower()
-            if w in ("from", "join", "using", "lateral"):
-                return True
-            if w in _BT_CLAUSE_STOP:
-                return False
-            continue  # alias/identifier/ON operand
-        k -= 1
-    return False
-
-
-def _unquoted_matches(pattern: str, s: str):
-    """Matches of ``pattern`` (IGNORECASE) whose START lies outside every
-    quoted literal — for rewrites whose pattern legitimately CONTAINS a
-    quoted literal (``VERSION AS OF 'branch'``), where masking or
-    _sub_outside_quotes would never match."""
-    spans = _quoted_spans(s)
-    for m in re.finditer(pattern, s, re.IGNORECASE):
-        if any(a <= m.start() < b for a, b in spans):
-            continue
-        yield m
-
-
-def _sub_outside_quotes(pattern: str, repl: str, s: str) -> str:
-    """``re.sub(..., flags=IGNORECASE)`` applied ONLY to the segments of
-    ``s`` outside quoted literals — a table name inside a string literal
-    is data, not a relation reference."""
-    out, pos = [], 0
-    for a, b in _quoted_spans(s):
-        out.append(re.sub(pattern, repl, s[pos:a], flags=re.IGNORECASE))
-        out.append(s[a:b])
-        pos = b
-    out.append(re.sub(pattern, repl, s[pos:], flags=re.IGNORECASE))
-    return "".join(out)
 
 
 def _split_where(s: str) -> tuple[str, str | None]:

@@ -159,3 +159,15 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def session_with(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
+    """A clone of ``spark`` (its SQL conf and temp views, sharing the
+    SparkContext) with ``conf`` set on the clone only: how the engine
+    plans one query under settings of its own without writing the
+    caller's session conf, which other threads may be planning on."""
+    clone = SparkSession(spark.sparkContext,
+                         spark._jsparkSession.cloneSession())
+    for key, value in conf.items():
+        clone.conf.set(key, value)
+    return clone

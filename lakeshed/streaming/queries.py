@@ -24,7 +24,6 @@ from __future__ import annotations
 import os
 import tempfile
 import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -32,6 +31,7 @@ from pyspark.sql import functions as F
 from lakeshed.catalog import Catalog
 from lakeshed.io import load_star
 from lakeshed.queries import qdef
+from lakeshed.session import session_with
 from lakeshed.streaming.changelog import (
     changelog_upsert,
     diff_versions,
@@ -103,25 +103,39 @@ def _is_socket_transport_failure(e: BaseException) -> bool:
     return bool(_re.search(r"(?m)^\s*at\s+\S*TextSocket", text))
 
 
-def _run_to_memory(spark: SparkSession, df: DataFrame, mode: str,
-                   ckpt: str, prefix: str) -> DataFrame:
+def _run_to_memory(df: DataFrame, mode: str, ckpt: str,
+                   prefix: str) -> DataFrame:
     """THE memory-sink runner every streaming gate shares (r11 review
     wave 12: five verbatim writeStream blocks differing only in output
     mode were one awaitTermination tweak away from diverging) — one
-    availableNow pass under the shared state-partition sizing, read back
-    from the named in-memory table."""
+    availableNow pass on ``df``'s session (a :func:`_state_session` for
+    the stateful gates), read back from the named in-memory table."""
     name = prefix + uuid.uuid4().hex[:12]
-    with _state_partitions(spark):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    q = (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return df.sparkSession.table(name)
+
+
+def _state_session(spark: SparkSession) -> SparkSession:
+    """The session a stateful gate builds and starts its stream on: a
+    clone of the caller's with 8 shuffle partitions, so the caller's conf
+    is never written — a thread planning on the caller's session
+    meanwhile keeps its own partition count. Each stateful operator commits one
+    state store PER shuffle partition PER micro-batch, so state
+    partitions are sized to state volume, not to the session's compute
+    parallelism — at these gates' state sizes, 32 partitions spent
+    multiples of the query's wall time on store commits (measured:
+    stream-stream join 7.7 s → 2.6 s). At 100 TB you'd raise the number
+    to spread state; same lever. The checkpoint pins the count after the
+    first start."""
+    return session_with(spark, {"spark.sql.shuffle.partitions": "8"})
 
 
 def _fixture_dir(kind: str, sf_dir: str, write) -> str:
@@ -140,25 +154,6 @@ def _fixture_dir(kind: str, sf_dir: str, write) -> str:
         write(path)
         _FIXTURE_CACHE[key] = path
     return _FIXTURE_CACHE[key]
-
-
-@contextmanager
-def _state_partitions(spark: SparkSession, n: int = 8):
-    """Pin the shuffle-partition count for a stateful streaming query's
-    lifetime: each stateful operator commits one state store PER shuffle
-    partition PER micro-batch, so state partitions are sized to state
-    volume, not to the session's compute parallelism — at these gates'
-    state sizes, 32 partitions spent multiples of the query's wall time
-    on store commits (measured: stream-stream join 7.7 s → 2.6 s). At
-    100 TB you'd raise the number to spread state; same lever. The conf
-    is read at query START and pinned by the checkpoint afterwards, so
-    the temporary set + restore cannot leak into other queries."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 @qdef(
@@ -393,14 +388,15 @@ def stream_windowed_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite").parquet(p))
 
     stream = (
-        spark.readStream.schema("ts timestamp, event_type string")
+        _state_session(spark).readStream
+        .schema("ts timestamp, event_type string")
         .parquet(src_dir)
     )
     rolled = windowed_rollup(
         stream, ts_col="ts", key_col="event_type", window="1 hour"
     )
     return _run_to_memory(
-        spark, rolled, "complete", os.path.join(tmp, "ckpt"), "swr_")
+        rolled, "complete", os.path.join(tmp, "ckpt"), "swr_")
 
 
 @qdef(
@@ -449,12 +445,13 @@ def stream_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite").parquet(p))
 
     stream = (
-        spark.readStream.schema("user_id bigint, ts timestamp")
+        _state_session(spark).readStream
+        .schema("user_id bigint, ts timestamp")
         .parquet(src_dir)
     )
     sessions = sessionize_stream(stream, gap_minutes=720)
     return _run_to_memory(
-        spark, sessions, "append", os.path.join(tmp, "ckpt"), "sess_")
+        sessions, "append", os.path.join(tmp, "ckpt"), "sess_")
 
 
 @qdef(
@@ -492,14 +489,15 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     views_dir = _fixture_dir("ssj-views", sf_dir, _write_side("view"))
     buys_dir = _fixture_dir("ssj-buys", sf_dir, _write_side("purchase"))
 
+    ss = _state_session(spark)
     views = (
-        spark.readStream.schema("user_id bigint, ts timestamp")
+        ss.readStream.schema("user_id bigint, ts timestamp")
         .parquet(views_dir)
         .select("user_id", F.col("ts").alias("view_ts"))
         .withWatermark("view_ts", "2 hours")
     )
     buys = (
-        spark.readStream.schema("user_id bigint, ts timestamp")
+        ss.readStream.schema("user_id bigint, ts timestamp")
         .parquet(buys_dir)
         .select(F.col("user_id").alias("b_user"),
                 F.col("ts").alias("purchase_ts"))
@@ -515,7 +513,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("user_id", "view_ts", "purchase_ts")
 
     return _run_to_memory(
-        spark, joined, "append", os.path.join(tmp, "ckpt"), "ssj_")
+        joined, "append", os.path.join(tmp, "ckpt"), "ssj_")
 
 
 @qdef(
@@ -548,7 +546,7 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _fixture_dir("dedup-ev", sf_dir, _write)
     stream = (
-        spark.readStream
+        _state_session(spark).readStream
         .schema("event_id bigint, user_id bigint, ts timestamp")
         .parquet(src)
     )
@@ -556,7 +554,7 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["event_id"])
     tmp = tempfile.mkdtemp(prefix="lakeshed-sde-")
     return _run_to_memory(
-        spark, deduped, "append", os.path.join(tmp, "ckpt"), "sde_")
+        deduped, "append", os.path.join(tmp, "ckpt"), "sde_")
 
 
 @qdef(
@@ -626,7 +624,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         _run_to_memory(
-            spark, enriched, "append", os.path.join(tmp, "ckpt"), "sse_")
+            enriched, "append", os.path.join(tmp, "ckpt"), "sse_")
         .groupBy("segment", "event_type")
         .agg(
             F.count(F.lit(1)).alias("cnt"),

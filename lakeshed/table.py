@@ -52,6 +52,8 @@ from typing import Any, Iterable
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from lakeshed.session import session_with
+
 _LOG_DIR = "_lakeshed_log"
 _REFS = "_refs.json"
 # persistent max-allocated-version hint (no .json suffix: _versions()'s
@@ -2584,7 +2586,20 @@ class LakeTable:
         if zorder_by is not None:
             zcols = [zorder_by] if isinstance(zorder_by, str) \
                 else list(zorder_by)
-            base = self._read_files(live, head_commit)
+            # The file bounds are quantiles of Spark's RangePartitioner
+            # sample, which is seeded by the input RDD's id: at Spark's
+            # default of 100 samples per file the same table z-ordered
+            # into different files depending on how many RDDs the session
+            # had made (a 10%-range probe on the first column read 5 to 7
+            # of 12 files). A hint of rows/files samples every row —
+            # Spark caps the sample at 1e6 — so a table that size gets
+            # its exact quantiles. Set on a clone: the caller's session
+            # conf is never written.
+            rows = sum(a.rows for a in live)
+            base = LakeTable(session_with(self.spark, {
+                "spark.sql.execution.rangeExchange.sampleSizePerPartition":
+                    str(max(100, -(-rows // n)))}),
+                self.path)._read_files(live, head_commit)
             df = (
                 base.withColumn("__z", self._zorder_column(base, zcols))
                 .repartitionByRange(n, "__z")

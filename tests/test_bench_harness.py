@@ -1,10 +1,12 @@
 """bench.py harness contracts that need no Spark session: the rotated pass
-orders, the one-line stdout summary, and the names scripts/ import from
-bench.py."""
+orders, the one-line stdout summary, and the names scripts/ use from
+bench.py and from lakeshed."""
 
 from __future__ import annotations
 
 import ast
+import importlib
+import importlib.util
 import json
 import os
 
@@ -91,4 +93,59 @@ def test_scripts_use_only_names_bench_defines():
                 used.extend((fname, a.name) for a in node.names)
     assert used, "no script uses bench.py"
     missing = [(f, n) for f, n in used if n not in defined]
+    assert not missing, missing
+
+
+def _lakeshed_uses(tree: ast.AST) -> list[tuple[str, str]]:
+    """``(module, name)`` for every ``from lakeshed… import <name>`` and
+    every ``<alias>.<name>`` where ``<alias>`` was bound to a lakeshed
+    module by an import anywhere in the file."""
+    used: list[tuple[str, str]] = []
+    aliases: dict[str, str] = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and (
+                node.module or "").split(".")[0] == "lakeshed":
+            for a in node.names:
+                used.append((node.module, a.name))
+                sub = f"{node.module}.{a.name}"
+                if importlib.util.find_spec(node.module) and _is_module(sub):
+                    aliases[a.asname or a.name] = sub
+        elif isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name.split(".")[0] == "lakeshed" and a.asname:
+                    aliases[a.asname] = a.name
+    for node in ast.walk(tree):
+        if (isinstance(node, ast.Attribute)
+                and isinstance(node.value, ast.Name)
+                and node.value.id in aliases):
+            used.append((aliases[node.value.id], node.attr))
+    return used
+
+
+def _is_module(dotted: str) -> bool:
+    try:
+        return importlib.util.find_spec(dotted) is not None
+    except ModuleNotFoundError:
+        return False
+
+
+def test_scripts_use_only_names_lakeshed_defines():
+    """Every ``from lakeshed… import <name>`` and every
+    ``<lakeshed-module alias>.<name>`` in scripts/ names an attribute the
+    module has (or a submodule) — a removed engine helper must not leave
+    a script that fails when it runs. Imports the modules only; no Spark
+    session."""
+    scripts = os.path.join(REPO, "scripts")
+    used: list[tuple[str, str, str]] = []
+    for fname in sorted(os.listdir(scripts)):
+        if fname.endswith(".py"):
+            with open(os.path.join(scripts, fname)) as fh:
+                tree = ast.parse(fh.read(), fname)
+            used += [(fname, m, n) for m, n in _lakeshed_uses(tree)]
+    assert used, "no script uses lakeshed"
+    missing = [
+        (f, m, n) for f, m, n in used
+        if not (hasattr(importlib.import_module(m), n)
+                or _is_module(f"{m}.{n}"))
+    ]
     assert not missing, missing

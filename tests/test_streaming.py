@@ -883,3 +883,43 @@ def test_wave26_hostile_changelog_lines_drop_dont_crash(spark, tmp_path):
         if len(ln.split(",")) == 3 and ln.split(",")[0] in ("I", "D")
         and _try_int32(ln.split(",")[1]) is not None)
     assert kept == model_kept
+
+
+def test_stateful_gates_never_write_session_config(spark, sf_dir,
+                                                   monkeypatch):
+    """The stateful stream gates size their state to 8 shuffle partitions
+    on a session of their own: the caller's session conf is never written
+    (a thread planning on that session meanwhile would pick up the gate's
+    count), and each gate's checkpoint holds exactly 8 state partitions
+    whatever the caller's own count is."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    import lakeshed.streaming.queries as sq
+
+    caller = spark.newSession()
+    caller.conf.set("spark.sql.shuffle.partitions", "5")
+    writes, ckpts = [], []
+    real_set = RuntimeConfig.set
+
+    def _spy(self, key, value):
+        writes.append((self is caller.conf, key, value))
+        return real_set(self, key, value)
+
+    real_run = sq._run_to_memory
+
+    def _run(*args, **kwargs):
+        ckpts.append(args[-2])  # (..., ckpt, prefix)
+        return real_run(*args, **kwargs)
+
+    monkeypatch.setattr(RuntimeConfig, "set", _spy)
+    monkeypatch.setattr(sq, "_run_to_memory", _run)
+    for gate in (sq.stream_windowed_rollup, sq.stream_sessionization,
+                 sq.stream_stream_join, sq.stream_dedup_events):
+        assert gate(caller, sf_dir).collect()
+    assert [w[1:] for w in writes if w[0]] == []
+    assert caller.conf.get("spark.sql.shuffle.partitions") == "5"
+    assert len(ckpts) == 4
+    for ckpt in ckpts:
+        parts = os.listdir(os.path.join(ckpt, "state", "0"))
+        assert sorted(int(p) for p in parts if p.isdigit()) == \
+            list(range(8)), ckpt

@@ -613,6 +613,37 @@ def test_metadata_only_count(spark, tmp_path):
     assert t.count_rows(version=v0) == 100
 
 
+def test_zorder_compaction_bounds_ignore_session_history(spark, tmp_path,
+                                                        monkeypatch):
+    """z-order compaction splits files at the data's exact quantiles, not
+    at a sample seeded by the id of the RDD it reads — so the same rows
+    compact to the same files however many RDDs the session made before,
+    and the sampling hint is never written to the caller's session."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    df = spark.range(0, 20_000).select(
+        F.pmod(F.xxhash64("id"), F.lit(10_000)).alias("a"),
+        F.pmod(F.xxhash64(F.col("id") + 1), F.lit(10_000)).alias("b"),
+    ).repartition(8)
+    writes = []
+    real_set = RuntimeConfig.set
+    monkeypatch.setattr(RuntimeConfig, "set", lambda self, k, v: (
+        writes.append((self is spark.conf, k)), real_set(self, k, v))[1])
+    layouts = []
+    for i, earlier_rdds in enumerate((0, 3, 7)):
+        for _ in range(earlier_rdds):
+            spark.sparkContext.parallelize([1]).count()
+        t = Catalog(spark, str(tmp_path / f"w{i}")).create_table(
+            "default.zz", df)
+        t.compact(target_size_bytes=12 * 1024, zorder_by=["a", "b"])
+        layouts.append(sorted(
+            (f.rows, f.lower_bounds["a"], f.upper_bounds["a"],
+             f.lower_bounds["b"], f.upper_bounds["b"])
+            for f in t.plan_files()))
+    assert layouts[0] == layouts[1] == layouts[2]
+    assert [k for mine, k in writes if mine] == []
+
+
 def test_compact_zorder_prunes_both_dimensions(spark, tmp_path):
     """D18+ — z-ordered rewrite: lexicographic sort_by=(a,b) clusters
     only `a` (a predicate on `b` alone still reads every file); the
@@ -1791,19 +1822,26 @@ def test_review_fixes_round8_wave2(cat, nation, spark):
     assert cat.table("db.Props2").properties()["comment"] == "driver's log"
 
 
-def test_quote_scanner_handles_escapes():
+def test_quote_scanner_handles_escapes(cat, spark, monkeypatch):
     """Backslash-escaped and doubled quotes must not desynchronize the
-    shared quote scanner (pure-python unit check)."""
-    from lakeshed.catalog import _split_where, _sub_outside_quotes
+    shared quote scanner, and a table name inside an escaped literal
+    stays data while the relation after it is rewritten."""
+    from lakeshed.catalog import _split_where
 
     head, pred = _split_where(r"msg = 'don\'t stop' where k = 1")
     assert head == r"msg = 'don\'t stop'" and pred == "k = 1"
     head, pred = _split_where("msg = 'it''s a where clause'")
     assert head == "msg = 'it''s a where clause'" and pred is None
-    out = _sub_outside_quotes(
-        r"\bnyc\.taxis\b", "VIEW", r"SELECT 'it\'s nyc.taxis' FROM nyc.taxis"
-    )
-    assert out == r"SELECT 'it\'s nyc.taxis' FROM VIEW"
+
+    cat.create_database("nyc")
+    cat.create_table("nyc.taxis", spark.createDataFrame([(1,)], "k int"))
+    sent = []
+    real = type(spark).sql
+    monkeypatch.setattr(type(spark), "sql", lambda self, text, *a, **kw: (
+        sent.append(text), real(self, text, *a, **kw))[1])
+    rows = cat.sql(r"SELECT 'it\'s nyc.taxis' FROM nyc.taxis").collect()
+    assert [r[0] for r in rows] == ["it's nyc.taxis"]
+    assert sent[-1] == r"SELECT 'it\'s nyc.taxis' FROM __lakeshed_nyc_taxis"
 
 
 def test_review_fixes_round8_wave3(cat, nation, spark):
@@ -2301,6 +2339,49 @@ def test_backtick_quoted_relation_names_resolve(cat, spark):
     # a backticked table name INSIDE a string literal stays data
     row = cat.sql("SELECT '`nyc.bt`' AS s").first()
     assert row.s == "`nyc.bt`"
+
+
+def test_struct_path_spelled_like_a_table_reads_the_struct(cat, spark):
+    """A struct path that spells a lakeshed table's name (``nyc.t.x``
+    over column ``nyc`` of ``nyc.s``) reads the struct field: a column
+    prefix names a relation only where the statement reads that relation
+    unaliased. Stock Spark returns these rows for the same tables."""
+    cat.create_database("nyc")
+    cat.create_table("nyc.t", spark.createDataFrame(
+        [(1, "a")], "k int, v string"))
+    cat.create_table("nyc.s", spark.createDataFrame(
+        [(5, ((7,),))], "k int, nyc struct<t: struct<x: int>>"))
+    assert [tuple(r) for r in cat.sql(
+        "SELECT nyc.t.x AS x FROM nyc.s").collect()] == [(7,)]
+    assert [tuple(r) for r in cat.sql(
+        "SELECT nyc.t.x AS x, u.v FROM nyc.s JOIN nyc.t u "
+        "ON nyc.s.k > u.k").collect()] == [(7, "a")]
+
+
+def test_select_touches_only_the_tables_it_reads(cat, spark, monkeypatch):
+    """A SELECT over one table of a 20-table warehouse probes that table
+    alone: no warehouse listing, no existence check of any other."""
+    cat.create_database("nyc")
+    df = spark.createDataFrame([(1,)], "k int")
+    for i in range(20):
+        cat.create_table(f"nyc.w{i}", df)
+    probed, listed = [], []
+    real_exists = LakeTable.exists
+    real_tables = Catalog.tables
+
+    def exists(self):
+        probed.append(os.path.relpath(self.path, cat.warehouse))
+        return real_exists(self)
+
+    def tables(self, database):
+        listed.append(database)
+        return real_tables(self, database)
+
+    monkeypatch.setattr(LakeTable, "exists", exists)
+    monkeypatch.setattr(Catalog, "tables", tables)
+    assert cat.sql("SELECT count(*) AS c FROM nyc.w7").first().c == 1
+    assert listed == []
+    assert set(probed) == {os.path.join("nyc", "w7")}
 
 
 def test_mutate_refs_warns_once_when_flock_unavailable(cat, spark,
