@@ -808,7 +808,7 @@ class _Ckpt:
         # re-read once per propagation round, then deleted by keep_only —
         # so codec latency matters and footprint does not (the same
         # reasoning behind Spark's lz4 shuffle default). Interleaved
-        # quiet-box A/B (scripts/codec_ab_probe.py, min-of-7):
+        # quiet-box A/B (recorded in OPTIMIZATION_r15.md §1, min-of-7):
         # llm_dedup_clusters 3.54 s snappy vs 3.68 s zstd (median
         # 3.73 vs 3.96) — the one write path where zstd showed a real,
         # consistent cost. Durable table data and fixtures keep the
@@ -1653,7 +1653,7 @@ def compact_span_index(table, *, ledger_retention_ms: int | None = None):
     head = table.head()
     head_commit, live = table._state(head)
     folded = (
-        table._read_files(live, head_commit)
+        table.read(head)
         .groupBy("h")
         .agg(
             F.sum("occurrences").alias("occurrences"),

@@ -1037,7 +1037,7 @@ def semantic_dedup(
     # r15 note (attempted and REVERTED): unrolling the per-pair dot into
     # a flat element_at multiply-add chain (dimension known from the
     # centroids) measured ~2x SLOWER than this HOF fold on an
-    # interleaved quiet A/B (scripts/semantic_pair_ab_probe.py, min
+    # interleaved quiet A/B (OPTIMIZATION_r15.md, additional changes, min
     # 2.97 -> 5.81 s) — the fold makes ONE native pass over the
     # primitive array; d scattered element_at accesses do not.
     tagged = scoped_persist(

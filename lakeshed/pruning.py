@@ -18,6 +18,18 @@ results — only skip I/O.
 The predicate mini-grammar (comparisons of a column vs a literal, combined
 with AND/OR/parens) mirrors what Iceberg's manifest evaluator can use;
 everything else falls through to "keep".
+
+Like Iceberg's, the evaluation is keyed by FIELD ID, not by name: a
+file's stats are keyed by the names its own schema version had when it
+was written. :func:`bind` resolves each predicate column from the read
+schema's name to its field id, then to the name and type that id has in
+the file's schema version (a dotted struct path resolves its head the
+same way and takes its leaf type from the struct type), so a rename, a
+name swap or a dropped-and-re-added column never reads another column's
+stats; a column the file's schema lacks binds to ``Unknown`` (keep).
+Comparisons then run in that type's domain only — ``file_may_match``
+requires the types, and a column without one never prunes: there is no
+untyped, shape-guessing fallback. ``LakeTable._prune`` is the one caller.
 """
 
 from __future__ import annotations
@@ -25,7 +37,7 @@ from __future__ import annotations
 import datetime as _dt
 import functools as _functools
 import re
-from dataclasses import dataclass
+from dataclasses import dataclass, replace as _dc_replace
 from typing import Any, Union
 
 
@@ -273,13 +285,12 @@ def _parse_bool(v: Any):
     return _BOOL_WORDS.get(str(v).strip().lower())
 
 
-def _coerce_typed(stat: str, value: Any, op: str,
-                  ctype: str) -> tuple[Any, Any] | None:
-    """Comparison domain when the column's COMMIT-LOG TYPE is known —
-    exact instead of shape-guessing (r12 review: the commit log carries
-    the schema, so pruning never needed to guess). ``ctype`` is the
-    normalized base of the Spark simpleString (``decimal(10,2)`` →
-    ``decimal``). None → conservative keep."""
+def _coerce(stat: str, value: Any, op: str,
+            ctype: str | None) -> tuple[Any, Any] | None:
+    """Bring a stringified stat and a literal into the comparison domain
+    of the column's type ``ctype`` (the normalized base of the file
+    schema's Spark simpleString: ``decimal(10,2)`` → ``decimal``).
+    None → conservative keep, also for a column with no known type."""
     if ctype in _NUMERIC_TYPES:
         try:
             fs = _num(stat)
@@ -335,114 +346,8 @@ def _coerce_typed(stat: str, value: Any, op: str,
     return None
 
 
-def _coerce(stat: str, value: Any, op: str = "=",
-            ctype: str | None = None) -> tuple[Any, Any] | None:
-    """Bring a stringified stat and a literal to a comparable domain.
-    With ``ctype`` (the column's commit-log type) the domain is exact —
-    see :func:`_coerce_typed`. Without it, fall back to shape-guessing:
-    numeric if both parse as numbers AND the numeric/lexicographic
-    orderings agree (stringified numbers compare WRONG
-    lexicographically: '9' > '10', and a STRING column's lex bounds do
-    not bound the numeric cast domain); else string vs string.
-
-    Temporal hazard: a timestamp column's stats stringify as
-    '1995-01-01 00:00:00' while a predicate may carry '1995-01-01' —
-    lexicographic compare would refute the match and wrongly prune the
-    file's midnight rows (Spark casts the literal, so they DO match).
-    When both sides parse as temporals but have different textual shapes,
-    the right comparison depends on the column's type, which manifest
-    stats don't record:
-      - '=' : datetime compare is safe for BOTH interpretations. If the
-        datetimes are equal the file is kept (keep is always safe); if
-        strictly unequal, the zero-padded 'YYYY-MM-DD[ HH:MM:SS[.f]]'
-        grammar makes lexicographic order agree with datetime order, so
-        a string-typed column can't match either.
-      - ranges / '!=' refutation: the interpretations can disagree
-        exactly at datetime-equality (midnight/prefix case), so return
-        None → conservative keep.
-    Same-shape temporal strings compare identically under both
-    interpretations, so the plain string path stays exact for them."""
-    if ctype is not None:
-        return _coerce_typed(stat, value, op, ctype)
-    # untyped fallback: boolean-repr stats (str(True) → 'True') and
-    # binary reprs ("b'...'") are python spellings OUTSIDE Spark's
-    # comparison domain — 'True' <lex 'true' wrongly refuted flag='true'
-    # on an all-true file (r12 review) → normalize bools, never prune
-    # binaries
-    if stat in ("True", "False"):
-        bv = _parse_bool(value)
-        if bv is None or op not in ("=", "!="):
-            return None
-        return stat == "True", bv
-    if stat.startswith(("b'", 'b"')):
-        return None
-    v = str(value)
-    try:
-        fs, fv = _num(stat), (value if isinstance(value, (int, float))
-                              and not isinstance(value, bool)
-                              else _num(v))
-    except ValueError:
-        pass
-    else:
-        # Numeric literal (quoted OR bare) against number-shaped stats
-        # (r11 wave 15, widened in r12): the column's type is unknown —
-        # a numeric column casts the literal ('9' > '30' numerically
-        # False) while a STRING column's stats are LEXICOGRAPHIC bounds
-        # that do not bound the numeric cast domain (lex ['1000','999']
-        # wrongly refuted x = 1000). Prune only when BOTH orderings
-        # agree; otherwise conservative keep. Production paths pass the
-        # commit-log column type and never pay this conservatism.
-        num_ord = (fs > fv) - (fs < fv)
-        str_ord = (stat > v) - (stat < v)
-        if num_ord != str_ord:
-            return None
-        return fs, fv
-    ts, tv = _parse_temporal(stat), _parse_temporal(v)
-    if ts is not None and tv is not None:
-        aware_s = ts.tzinfo is not None
-        aware_v = tv.tzinfo is not None
-        if aware_s or aware_v:
-            # offset-suffixed stats (tz-adjusted / externally written
-            # parquet — r11 review wave 15: these previously FAILED the
-            # temporal regex and fell to the lexicographic path). The
-            # column's type is unknown: for a TIMESTAMP column min/max
-            # bound the instants (datetime order), but for a STRING
-            # column holding mixed-offset text the min/max are
-            # LEXICOGRAPHIC bounds, which do not bound datetime order —
-            # a file holding '…T01:00:00+00:00' and '…T05:00:00+07:00'
-            # has lo_dt (01:00Z) above v_dt (Dec31 22:00Z) even though
-            # the literal string is exactly in the file (r11 ADVICE).
-            # So even for '=', prune only when BOTH interpretations
-            # agree on the ordering of (stat, value); otherwise
-            # conservative keep.
-            if op == "=" and aware_s and aware_v:
-                dt_ord = (ts > tv) - (ts < tv)
-                str_ord = (stat > v) - (stat < v)
-                if dt_ord != str_ord:
-                    return None
-                return ts, tv
-            return None
-        if ("T" in stat) != ("T" in v):
-            # mixed ' '/'T' separator styles: 'T' (0x54) sorts ABOVE ' '
-            # (0x20), so lexicographic order disagrees with datetime
-            # order even at equal lengths — e.g. stat '2024-01-01
-            # 00:00:02' vs literal '2024-01-01T00:00:01'. Neither the
-            # string nor the datetime comparison is safe under both
-            # column-type interpretations → conservative keep.
-            return None
-        if len(stat) != len(v):
-            # same separator style, different precision (the midnight/
-            # prefix case): within one style the zero-padded grammar
-            # makes lexicographic order agree with datetime order, so
-            # the docstring's '=' argument holds; ranges stay maybe.
-            if op == "=":
-                return ts, tv
-            return None
-    return stat, v
-
-
 def _cmp_maybe_match(op: str, lo: str | None, hi: str | None,
-                     value: Any, ctype: str | None = None) -> bool:
+                     value: Any, ctype: str | None) -> bool:
     """Can ANY row in [lo, hi] satisfy ``col op value``? Missing bound →
     unbounded on that side → maybe. NaN literals are never decidable
     from ordered bounds (every comparison with NaN is unordered — a
@@ -551,18 +456,15 @@ def bloom_may_contain(b64: str, value: str) -> bool:
 
 
 def _dict_may_match(op: str, vals: list[str], value: Any,
-                    ctype: str | None = None) -> bool | None:
+                    ctype: str | None) -> bool | None:
     """Evaluate an equality-family comparison against a file's COMPLETE
     distinct-value set (no nulls; null rows never satisfy = or != anyway).
     Returns None when the op isn't dictionary-decidable."""
     if op not in ("=", "!="):
         return None
     def _eq(stat: str) -> bool | None:
-        # op is threaded into _coerce: '!=' refutation needs equality to
-        # hold under BOTH type interpretations (mixed-shape temporal →
-        # None → not provably equal → keep). None propagates UP as
-        # undecidable: an uncomparable dict value is not PROVABLY unequal,
-        # so '=' must not prune on its account.
+        # None propagates UP as undecidable: an uncomparable dict value
+        # is not PROVABLY unequal, so '=' must not prune on its account.
         c = _coerce(stat, value, op, ctype)
         if c is None:
             return None
@@ -584,39 +486,41 @@ def file_may_match(node: Node, lower: dict[str, str], upper: dict[str, str],
                    null_counts: dict[str, int] | None = None,
                    rows: int | None = None,
                    blooms: dict[str, str] | None = None,
-                   types: dict[str, str] | None = None) -> bool:
-    """Conservative manifest evaluation: False ⇒ provably zero matching
-    rows in the file. Partition-dir values act as exact single-value
-    bounds for their column (pass the HIVE-DECODED values — escaped
-    ``%XX`` text compared raw wrongly pruned its own partition, r12
-    review; a ``None`` value is the null-sentinel dir: no comparison
-    can match it); ``dicts`` (complete per-file distinct sets, the
-    dictionary data-skipping index) decide = / != exactly where min/max
-    can only rule out ranges; ``null_counts`` + ``rows`` decide
-    IS [NOT] NULL (a file with zero nulls in the column cannot satisfy
-    IS NULL; an all-null file cannot satisfy IS NOT NULL) — the same
-    use Iceberg makes of its per-column null_value_counts. ``types``
-    (column → Spark simpleString from the file's commit-log schema)
-    makes the stat comparison domain EXACT instead of shape-guessed —
-    production call sites always pass it."""
+                   *, types: dict[str, str]) -> bool:
+    """Conservative manifest evaluation of one file: False ⇒ provably
+    zero matching rows in it. ``node`` must already be BOUND to the
+    file's schema (:func:`bind`): its columns are the names the file's
+    stats are keyed by, and ``types`` (required) maps each of them to
+    its Spark simpleString in the file's schema. A column with no type
+    never prunes — there is no untyped, shape-guessing fallback.
+    Partition-dir values act as exact single-value bounds for their
+    column (pass the HIVE-DECODED values — escaped ``%XX`` text compared
+    raw wrongly pruned its own partition; a ``None`` value is the
+    null-sentinel dir: no comparison can match it); ``dicts``
+    (complete per-file distinct sets, the dictionary data-skipping
+    index) decide = / != exactly where min/max can only rule out
+    ranges; ``null_counts`` + ``rows`` decide IS [NOT] NULL (a file with
+    zero nulls in the column cannot satisfy IS NULL; an all-null file
+    cannot satisfy IS NOT NULL) — the same use Iceberg makes of its
+    per-column null_value_counts."""
     if isinstance(node, Unknown):
         return True
     if isinstance(node, BoolOp):
         l = file_may_match(node.left, lower, upper, partition_values,
-                           dicts, null_counts, rows, blooms, types)
+                           dicts, null_counts, rows, blooms, types=types)
         r = file_may_match(node.right, lower, upper, partition_values,
-                           dicts, null_counts, rows, blooms, types)
+                           dicts, null_counts, rows, blooms, types=types)
         return (l and r) if node.kind == "and" else (l or r)
     if isinstance(node, InList):
         # flat loop — one frame for the whole list, however long
         return any(
             file_may_match(Comparison(node.col, "=", v), lower, upper,
                            partition_values, dicts, null_counts, rows,
-                           blooms, types)
+                           blooms, types=types)
             for v in node.values
         )
     assert isinstance(node, Comparison)
-    ctype = _norm_type(types.get(node.col)) if types else None
+    ctype = _norm_type(types.get(node.col))
     if node.op in ("isnull", "notnull"):
         nc = (null_counts or {}).get(node.col)
         if nc is None:
@@ -652,3 +556,88 @@ def _norm_type(t: str | None) -> str | None:
     if t is None:
         return None
     return t.strip().lower().split("(", 1)[0]
+
+
+# ------------------------------------------------------- field-id binding
+
+_INTEGRAL = ("tinyint", "smallint", "int", "bigint")
+
+
+def _stats_bound(file_type: str, read_type: str) -> bool:
+    """Do stats recorded under ``file_type`` bound the values a read
+    sees under ``read_type``? Only when the read cast keeps every value:
+    the same type, or integral widening. Any other change (int → string
+    compares lexicographically, decimal narrowing rounds) moves values
+    out of the stats' domain."""
+    if file_type == read_type:
+        return True
+    f, r = _norm_type(file_type), _norm_type(read_type)
+    return (f in _INTEGRAL and r in _INTEGRAL
+            and _INTEGRAL.index(f) <= _INTEGRAL.index(r))
+
+
+def _struct_field_type(t: str, name: str) -> str | None:
+    """Type of field ``name`` in a ``struct<a:int,b:decimal(10,2)>``
+    simpleString; None when ``t`` is not a struct or lacks the field."""
+    if not (t.startswith("struct<") and t.endswith(">")):
+        return None
+    depth, start, body = 0, 0, t[7:-1] + ","
+    for i, ch in enumerate(body):
+        if ch in "<(":
+            depth += 1
+        elif ch in ">)":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            n, _, ft = body[start:i].partition(":")
+            if n == name:
+                return ft
+            start = i + 1
+    return None
+
+
+def bind(node: Node, read_fields: list, file_fields: list
+         ) -> tuple[Node, dict[str, str]]:
+    """Bind a predicate over the READ schema's column names to one file
+    schema: ``(node, types)`` for :func:`file_may_match`, keyed the way
+    that schema's files key their stats. Fields are matched by field id
+    (objects with ``id``/``name``/``type``), so a rename or a dropped
+    and re-added column never reads another column's stats. A dotted
+    path ``s.x`` resolves its head ``s`` the same way and takes the
+    leaf type from the struct type, which must be unchanged between the
+    two schemas. A column the file schema lacks, or whose type changed
+    out of its stats' domain, becomes :class:`Unknown` (keep)."""
+    by_name = {f.name: f for f in read_fields}
+    by_id = {f.id: f for f in file_fields}
+    types: dict[str, str] = {}
+
+    def stat_key(col: str) -> str | None:
+        f, path = by_name.get(col), []
+        if f is None:
+            head, _, rest = col.partition(".")
+            f, path = by_name.get(head), rest.split(".")
+        old = by_id.get(f.id) if f is not None else None
+        if old is None:
+            return None
+        t = old.type
+        if path:
+            if old.type != f.type:
+                return None
+            for leaf in path:
+                t = _struct_field_type(t, leaf)
+                if t is None:
+                    return None
+        elif not _stats_bound(old.type, f.type):
+            return None
+        key = ".".join([old.name, *path])
+        types[key] = t
+        return key
+
+    def walk(n: Node) -> Node:
+        if isinstance(n, BoolOp):
+            return BoolOp(n.kind, walk(n.left), walk(n.right))
+        if isinstance(n, (Comparison, InList)):
+            key = stat_key(n.col)
+            return Unknown() if key is None else _dc_replace(n, col=key)
+        return n
+
+    return walk(node), types

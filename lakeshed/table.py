@@ -563,31 +563,32 @@ class LakeTable:
         out: list[Commit] = []
         v: int | None = version
         while v is not None and v not in stop:
-            cp = self._checkpoint_path(v)
-            if os.path.exists(cp):
-                try:
-                    with open(cp) as fh:
-                        out.append(Commit.from_json(json.load(fh)))
-                    break
-                except FileNotFoundError:
-                    # GC'd by a concurrent expire between the exists()
-                    # check and the open (r10 review wave 3): a
-                    # checkpoint is pure acceleration — fall through to
-                    # the raw commit chain
-                    pass
-                except (json.JSONDecodeError, KeyError, TypeError,
-                        ValueError, AttributeError) as e:
-                    # corruption surfaces as the TYPED error the read
-                    # path's contract promises (matching _lineage) —
-                    # never a raw json error (r10 review wave 5)
-                    raise CorruptCommitError(
-                        f"corrupt checkpoint file for {v} under "
-                        f"{self.log_dir}"
-                    ) from e
+            snap = self._read_checkpoint(v)
+            if snap is not None:
+                out.append(snap)
+                break
             c = self._read_commit(v)
             out.append(c)
             v = c.parent
         return list(reversed(out))
+
+    def _read_checkpoint(self, version: int) -> Commit | None:
+        """The checkpoint at ``version``, or None when there is none —
+        also when a concurrent expire GC'd it between the listing and
+        the open: a checkpoint is pure acceleration. Corruption raises
+        the TYPED error the read path's contract promises (matching
+        _lineage), never a raw json error."""
+        try:
+            with open(self._checkpoint_path(version)) as fh:
+                return Commit.from_json(json.load(fh))
+        except FileNotFoundError:
+            return None
+        except (json.JSONDecodeError, KeyError, TypeError, ValueError,
+                AttributeError) as e:
+            raise CorruptCommitError(
+                f"corrupt checkpoint file for {version} under "
+                f"{self.log_dir}"
+            ) from e
 
     def _write_checkpoint(self, version: int) -> None:
         """Materialize the full live state at ``version`` next to its
@@ -926,6 +927,22 @@ class LakeTable:
     _TRANSFORM = re.compile(
         r"^(years|months|days|hours)\((\w+)\)$|^bucket\((\d+),\s*(\w+)\)$"
     )
+    _TIME_FORMATS = {"years": "yyyy", "months": "yyyy-MM",
+                     "days": "yyyy-MM-dd", "hours": "yyyy-MM-dd-HH"}
+
+    @classmethod
+    def _transform(cls, entry: str) -> tuple[str, str, str, Any] | None:
+        """A transform partition-spec entry as (dir column, its type,
+        source column, date format or bucket count); None for an
+        identity entry, which names a schema column."""
+        m = cls._TRANSFORM.match(entry.replace(" ", ""))
+        if not m:
+            return None
+        if m.group(1):  # time transform
+            unit, src = m.group(1), m.group(2)
+            return (f"{src}_{unit[:-1]}", "string", src,
+                    cls._TIME_FORMATS[unit])
+        return f"{m.group(4)}_bucket", "bigint", m.group(4), int(m.group(3))
 
     def _apply_spec(self, df: DataFrame, spec: list[str]
                     ) -> tuple[DataFrame, list[str]]:
@@ -940,22 +957,14 @@ class LakeTable:
         min/max the clustering tightens (SURVEY §4 hidden partitioning)."""
         cols: list[str] = []
         for entry in spec:
-            m = self._TRANSFORM.match(entry.replace(" ", ""))
-            if not m:
+            tr = self._transform(entry)
+            if tr is None:
                 cols.append(entry)  # identity partition column
                 continue
-            if m.group(1):  # time transform
-                unit, src = m.group(1), m.group(2)
-                name = f"{src}_{unit[:-1]}"
-                fmt = {"years": "yyyy", "months": "yyyy-MM",
-                       "days": "yyyy-MM-dd", "hours": "yyyy-MM-dd-HH"}[unit]
-                df = df.withColumn(name, F.date_format(F.col(src), fmt))
-            else:  # bucket(n, col)
-                n, src = int(m.group(3)), m.group(4)
-                name = f"{src}_bucket"
-                df = df.withColumn(
-                    name, F.pmod(F.xxhash64(F.col(src)), F.lit(n))
-                )
+            name, _, src, arg = tr
+            df = df.withColumn(name, (
+                F.date_format(F.col(src), arg) if isinstance(arg, str)
+                else F.pmod(F.xxhash64(F.col(src)), F.lit(arg))))
             cols.append(name)
         return df, cols
 
@@ -1529,25 +1538,37 @@ class LakeTable:
             for k, v in LakeTable._partition_values(path).items()
         }
 
-    @staticmethod
-    def _schema_types(commit: "Commit"):
-        """Per-AddFile column→type lookup from the commit log's schema
-        map (memoized per schema version) — pruning compares stats in
-        the column's TRUE domain instead of shape-guessing (r12 review:
-        lexicographic bounds of a string column wrongly refuted numeric
-        predicates; percent-escaped timestamps wrongly pruned their own
-        partition)."""
-        memo: dict[int, dict[str, str]] = {}
+    def _prune(self, commit: Commit, files: list[AddFile],
+               node) -> list[AddFile]:
+        """The files among ``files`` whose commit-log stats cannot refute
+        ``node``, a parsed predicate over ``commit``'s schema — THE one
+        stats-pruning path (scan planning, DML candidate files, MERGE's
+        key-range prune). Each predicate column resolves by field id to
+        the name and type it had in the file's own schema version
+        (:func:`lakeshed.pruning.bind`), once per schema version, so a
+        renamed, dropped or re-added column never reads another
+        column's stats."""
+        from lakeshed.pruning import bind, file_may_match
 
-        def get(a: AddFile) -> dict[str, str]:
+        # transform-derived dirs (user_id_bucket=0) are no schema column:
+        # pseudo-fields with ids no schema field has let predicates on
+        # them prune by the dir value
+        dirs = [Field(-i, t[0], t[1]) for i, t in enumerate(
+            filter(None, map(self._transform, commit.partition_spec)), 1)]
+        cur = commit.schemas[str(commit.schema_version)] + dirs
+        bound: dict[int, tuple] = {}
+        kept = []
+        for a in files:
             sv = a.schema_version
-            if sv not in memo:
-                fields = (commit.schemas.get(str(sv))
-                          or commit.schemas.get(sv) or [])
-                memo[sv] = {f.name: f.type for f in fields}
-            return memo[sv]
-
-        return get
+            if sv not in bound:
+                bound[sv] = bind(node, cur, commit.schemas[str(sv)] + dirs)
+            n, types = bound[sv]
+            if file_may_match(n, a.lower_bounds, a.upper_bounds,
+                              self._partition_values_decoded(a.path),
+                              a.dicts, a.null_counts, a.rows, a.blooms,
+                              types=types):
+                kept.append(a)
+        return kept
 
     def plan_files(self, where: str | None = None,
                    version: int | None = None) -> list[AddFile]:
@@ -1555,22 +1576,14 @@ class LakeTable:
         .planTasks()``, Iceberg - An Introduction...ipynb:273): the live
         files a predicate can touch, after manifest-style stats pruning
         (lower/upper bounds + partition-dir values from the commit log)."""
-        from lakeshed.pruning import file_may_match, parse_predicate
+        from lakeshed.pruning import parse_predicate
 
         commit, live = self._state(
             self.head() if version is None else version
         )
         if where is None:
             return live
-        node = parse_predicate(where)
-        types = self._schema_types(commit)
-        return [
-            a for a in live
-            if file_may_match(node, a.lower_bounds, a.upper_bounds,
-                              self._partition_values_decoded(a.path),
-                              a.dicts, a.null_counts, a.rows, a.blooms,
-                              types(a))
-        ]
+        return self._prune(commit, live, parse_predicate(where))
 
     def scan(self, where: str | None = None,
              columns: Iterable[str] | None = None,
@@ -1875,17 +1888,10 @@ class LakeTable:
             return set()
         candidates = live
         if where_str is not None:
-            from lakeshed.pruning import file_may_match, parse_predicate
+            from lakeshed.pruning import parse_predicate
 
-            node = parse_predicate(where_str)
-            types = self._schema_types(commit)
-            candidates = [
-                a for a in live
-                if file_may_match(node, a.lower_bounds, a.upper_bounds,
-                                  self._partition_values_decoded(a.path),
-                                  a.dicts, a.null_counts, a.rows, a.blooms,
-                                  types(a))
-            ]
+            candidates = self._prune(commit, live,
+                                     parse_predicate(where_str))
             if not candidates:
                 return set()
         df = self._read_adds(commit, candidates, with_file_path=True)
@@ -1980,7 +1986,7 @@ class LakeTable:
             return self._commit("update", [], [], **ckw,
                                 summary={**sx, "updated-files": 0})
         hit_adds = [a for a in live if a.path in hit]
-        rewritten = self._read_files(hit_adds, head_commit)
+        rewritten = self._read_adds(head_commit, hit_adds)
         assigns = {
             c: (F.expr(e) if isinstance(e, str) else e) for c, e in set.items()
         }
@@ -2018,7 +2024,7 @@ class LakeTable:
         # three-valued logic: a NULL predicate must KEEP the row (SQL
         # deletes only where the condition is TRUE; ~NULL is NULL and a
         # bare where(~cond) would silently drop NULL-condition rows)
-        kept = self._read_files(hit_adds, head_commit).where(
+        kept = self._read_adds(head_commit, hit_adds).where(
             ~F.coalesce(cond, F.lit(False))
         )
         adds = self._write_files(
@@ -2026,9 +2032,6 @@ class LakeTable:
         )
         return self._commit("delete", adds, sorted(hit), **ckw,
                             summary={**sx, "deleted-files": len(hit)})
-
-    def _read_files(self, adds: list[AddFile], commit: Commit) -> DataFrame:
-        return self._read_adds(commit, adds)
 
     def merge(
         self,
@@ -2143,7 +2146,7 @@ class LakeTable:
                 # manifest math. At 100 TB the semi-join then scans only files
                 # whose key bounds overlap the batch — clustered/partitioned
                 # keys touch a sliver of the table instead of all of it.
-                from lakeshed.pruning import BoolOp, Comparison, file_may_match
+                from lakeshed.pruning import BoolOp, Comparison
 
                 brow = src.agg(*[
                     f for k in keys
@@ -2175,16 +2178,7 @@ class LakeTable:
                             c = Comparison(k, op, v)
                             node = c if node is None else BoolOp("and", node, c)
                     if node is not None:
-                        types = self._schema_types(head_commit)
-                        candidates = [
-                            a for a in live
-                            if file_may_match(node, a.lower_bounds,
-                                              a.upper_bounds,
-                                              self._partition_values_decoded(
-                                                  a.path),
-                                              a.dicts, blooms=a.blooms,
-                                              types=types(a))
-                        ]
+                        candidates = self._prune(head_commit, live, node)
             if candidates:
                 target = self._read_adds(head_commit, candidates,
                                          with_file_path=True)
@@ -2254,7 +2248,7 @@ class LakeTable:
             # not twice (it is exactly the COW rewrite set, so it's about to be
             # fully materialized anyway).
             if hit_adds:
-                tgt_hits = self._read_files(hit_adds, head_commit)
+                tgt_hits = self._read_adds(head_commit, hit_adds)
                 # evolved columns don't exist in the target files yet —
                 # surface them as typed NULLs so the rewrite projection and
                 # the key anti-join see the full evolved schema
@@ -2330,7 +2324,7 @@ class LakeTable:
                     a for a in live if a.path in pruned and a.path not in hit
                 ]
                 if bysrc_adds:
-                    extra = self._read_files(bysrc_adds, head_commit)
+                    extra = self._read_adds(head_commit, bysrc_adds)
                     for f in added_cols:
                         extra = extra.withColumn(f.name, F.lit(None).cast(f.type))
                     extra = extra.select(*[
@@ -2599,7 +2593,7 @@ class LakeTable:
             base = LakeTable(session_with(self.spark, {
                 "spark.sql.execution.rangeExchange.sampleSizePerPartition":
                     str(max(100, -(-rows // n)))}),
-                self.path)._read_files(live, head_commit)
+                self.path)._read_adds(head_commit, live)
             df = (
                 base.withColumn("__z", self._zorder_column(base, zcols))
                 .repartitionByRange(n, "__z")
@@ -2609,15 +2603,15 @@ class LakeTable:
         elif sort_by is not None:
             cols = [sort_by] if isinstance(sort_by, str) else list(sort_by)
             df = (
-                self._read_files(live, head_commit)
+                self._read_adds(head_commit, live)
                 .repartitionByRange(n, *cols)
                 .sortWithinPartitions(*cols)
             )
         elif head_commit.partition_spec:
-            df = self._read_files(live, head_commit)
+            df = self._read_adds(head_commit, live)
             dist = "hash"
         else:
-            df = self._read_files(live, head_commit).repartition(n)
+            df = self._read_adds(head_commit, live).repartition(n)
         adds = self._write_files(
             df, head_commit.partition_spec, head_commit.schema_version,
             distribution_mode=dist,
@@ -2949,21 +2943,9 @@ class LakeTable:
                 continue
             for a in adds:
                 referenced.add(a.path)
-            cp = self._checkpoint_path(v)
-            if os.path.exists(cp):
-                try:
-                    with open(cp) as fh:
-                        for a in Commit.from_json(json.load(fh)).add:
-                            referenced.add(a.path)
-                except FileNotFoundError:
-                    pass  # GC'd between exists() and open — a
-                    # checkpoint is pure acceleration (r10 wave 10)
-                except (json.JSONDecodeError, KeyError, TypeError,
-                        ValueError, AttributeError) as e:
-                    raise CorruptCommitError(
-                        f"corrupt checkpoint file for {v} under "
-                        f"{self.log_dir}"
-                    ) from e
+            snap = self._read_checkpoint(v)
+            if snap is not None:
+                referenced.update(a.path for a in snap.add)
         removed: list[str] = []
         for abs_p in glob.glob(
             os.path.join(self.path, "data", "**", "*.parquet"),
@@ -3080,10 +3062,9 @@ class LakeTable:
                 path, os.path.getsize(path), v,
                 len(c.add), 0, len(c.remove), _summaries(c.add),
             ))
-            cp = self._checkpoint_path(v)
-            if os.path.exists(cp):
-                with open(cp) as fh:
-                    snap = Commit.from_json(json.load(fh))
+            snap = self._read_checkpoint(v)
+            if snap is not None:
+                cp = self._checkpoint_path(v)
                 rows.append((
                     cp, os.path.getsize(cp), v,
                     0, len(snap.add), 0, _summaries(snap.add),
@@ -3106,16 +3087,11 @@ class LakeTable:
         """S7 — ``t.partitions`` (Berlin Buzzwords.ipynb:255): live files
         rolled up by partition value (derived from file paths)."""
         _, live = self._state(self.head())
-        spec_cols: set[str] = set()
-        rows = []
-        for a in live:
-            parts = {}
-            for seg in a.path.split(os.sep):
-                if "=" in seg:
-                    k, _, val = seg.partition("=")
-                    parts[k] = val
-                    spec_cols.add(k)
-            rows.append((json.dumps(parts, sort_keys=True), a.rows, a.bytes))
+        rows = [
+            (json.dumps(self._partition_values(a.path), sort_keys=True),
+             a.rows, a.bytes)
+            for a in live
+        ]
         agg: dict[str, list[int]] = {}
         for p, r, b in rows:
             cur = agg.setdefault(p, [0, 0, 0])

@@ -47,26 +47,25 @@ SF = os.environ.get("LAKESHED_TEST_SF", "/root/testdata/sf0.001")
 )
 def test_file_may_match(pred, lo, hi, expect):
     node = parse_predicate(pred)
-    # the column type rides along in production (wave 20): numeric
-    # pruning is exact when the commit-log schema says the column is
-    # numeric; the untyped fallback is tested separately below
+    # the column type is required: pruning compares in the domain of
+    # the file schema's type, exact for a numeric column
     types = {"x": "bigint", "y": "bigint"}
     assert file_may_match(node, {"x": lo}, {"x": hi}, {},
                           types=types) is expect
 
 
 def test_wave20_untyped_fallback_prunes_only_on_order_agreement():
-    """Without the column type, a numeric conclusion is drawn only when
-    the numeric and lexicographic orderings of (stat, literal) agree —
-    a STRING column's lex bounds do not bound the numeric cast domain
-    (r12 review: lex bounds ['1000','999'] wrongly refuted x = 1000
-    though the row '1000' is in the file)."""
+    """A STRING column's lex bounds do not bound the numeric cast domain
+    of a numeric literal (lex bounds ['1000','999'] once wrongly refuted
+    x = 1000 though the row '1000' is in the file); a numeric column
+    prunes numerically."""
     # the reviewer's reproduction: row '1000' present, lex lo='1000'
     assert file_may_match(
-        parse_predicate("x = 1000"), {"x": "1000"}, {"x": "999"}, {})
-    # agreement cases still prune untyped
+        parse_predicate("x = 1000"), {"x": "1000"}, {"x": "999"}, {},
+        types={"x": "string"})
     assert not file_may_match(
-        parse_predicate("x = 5"), {"x": "60"}, {"x": "70"}, {})
+        parse_predicate("x = 5"), {"x": "60"}, {"x": "70"}, {},
+        types={"x": "bigint"})
     # typed string column + numeric literal: Spark casts the COLUMN, so
     # lex bounds prove nothing → conservative keep
     assert file_may_match(
@@ -83,21 +82,29 @@ def test_is_null_pruning_uses_null_counts():
     prunes all-null files; missing stats stay conservative."""
     isnull = parse_predicate("x IS NULL")
     notnull = parse_predicate("x IS NOT NULL")
+    T = {"x": "bigint", "y": "bigint"}
     # zero nulls recorded → IS NULL unsatisfiable, IS NOT NULL fine
-    assert file_may_match(isnull, {}, {}, {}, None, {"x": 0}, 10) is False
-    assert file_may_match(notnull, {}, {}, {}, None, {"x": 0}, 10) is True
+    assert file_may_match(isnull, {}, {}, {}, None, {"x": 0}, 10,
+                          types=T) is False
+    assert file_may_match(notnull, {}, {}, {}, None, {"x": 0}, 10,
+                          types=T) is True
     # all-null file → the reverse
-    assert file_may_match(isnull, {}, {}, {}, None, {"x": 10}, 10) is True
-    assert file_may_match(notnull, {}, {}, {}, None, {"x": 10}, 10) is False
+    assert file_may_match(isnull, {}, {}, {}, None, {"x": 10}, 10,
+                          types=T) is True
+    assert file_may_match(notnull, {}, {}, {}, None, {"x": 10}, 10,
+                          types=T) is False
     # some nulls → both possible
-    assert file_may_match(isnull, {}, {}, {}, None, {"x": 3}, 10) is True
-    assert file_may_match(notnull, {}, {}, {}, None, {"x": 3}, 10) is True
+    assert file_may_match(isnull, {}, {}, {}, None, {"x": 3}, 10,
+                          types=T) is True
+    assert file_may_match(notnull, {}, {}, {}, None, {"x": 3}, 10,
+                          types=T) is True
     # no stats → keep
-    assert file_may_match(isnull, {}, {}, {}, None, {}, 10) is True
-    assert file_may_match(isnull, {}, {}, {}) is True
+    assert file_may_match(isnull, {}, {}, {}, None, {}, 10, types=T) is True
+    assert file_may_match(isnull, {}, {}, {}, types=T) is True
     # composes with AND
     both = parse_predicate("x IS NULL AND y = 1")
-    assert file_may_match(both, {}, {}, {}, None, {"x": 0}, 10) is False
+    assert file_may_match(both, {}, {}, {}, None, {"x": 0}, 10,
+                          types=T) is False
 
 
 def test_is_null_prunes_files_end_to_end(cat, spark):
@@ -123,21 +130,28 @@ def test_in_list_uses_dictionary_skipping():
     """IN over a dict-indexed column decides per value exactly."""
     node = parse_predicate("cat IN ('m', 'q')")
     d = {"cat": ["a", "z"]}
-    assert file_may_match(node, {"cat": "a"}, {"cat": "z"}, {}, d) is False
+    T = {"cat": "string"}
+    assert file_may_match(node, {"cat": "a"}, {"cat": "z"}, {}, d,
+                          types=T) is False
     d2 = {"cat": ["a", "q"]}
-    assert file_may_match(node, {"cat": "a"}, {"cat": "z"}, {}, d2) is True
+    assert file_may_match(node, {"cat": "a"}, {"cat": "z"}, {}, d2,
+                          types=T) is True
 
 
 def test_partition_value_acts_as_exact_bound():
     node = parse_predicate("p = 'b'")
-    assert file_may_match(node, {}, {}, {"p": "a"}) is False
-    assert file_may_match(node, {}, {}, {"p": "b"}) is True
+    T = {"p": "string"}
+    assert file_may_match(node, {}, {}, {"p": "a"}, types=T) is False
+    assert file_may_match(node, {}, {}, {"p": "b"}, types=T) is True
 
 
 def test_string_bounds():
     node = parse_predicate("name >= 'M'")
-    assert file_may_match(node, {"name": "AAA"}, {"name": "LZZ"}, {}) is False
-    assert file_may_match(node, {"name": "AAA"}, {"name": "ZOO"}, {}) is True
+    T = {"name": "string"}
+    assert file_may_match(node, {"name": "AAA"}, {"name": "LZZ"}, {},
+                          types=T) is False
+    assert file_may_match(node, {"name": "AAA"}, {"name": "ZOO"}, {},
+                          types=T) is True
 
 
 # ------------------------------------------------------------- table level
@@ -273,7 +287,8 @@ def test_pruning_is_conservative(vals, tree):
     sql = _to_sql(tree)
     node = parse_predicate(sql)
     keeps = file_may_match(
-        node, {"x": str(min(vals))}, {"x": str(max(vals))}, {}
+        node, {"x": str(min(vals))}, {"x": str(max(vals))}, {},
+        types={"x": "bigint"},
     )
     has_match = any(_eval(tree, v) for v in vals)
     if has_match:
@@ -294,7 +309,7 @@ def test_file_stats_multi_row_group_native_bounds(tmp_path):
     _, _, lo, hi, _, _, _ = _file_stats(p)
     assert lo["x"] == "9" and hi["x"] == "10"
     node = parse_predicate("x = 9")
-    assert file_may_match(node, lo, hi, {})
+    assert file_may_match(node, lo, hi, {}, types={"x": "bigint"})
 
 
 # ----------------------------------------------------- temporal coercion
@@ -306,46 +321,46 @@ def test_temporal_equality_mixed_shape_keeps_file():
     rows DO match — pruning must keep the file (r5 ADVICE medium)."""
     lo = {"ts": "1995-01-01 00:00:00"}
     hi = {"ts": "1995-06-30 23:59:59"}
-    assert file_may_match(parse_predicate("ts = '1995-01-01'"), lo, hi, {})
+    T = {"ts": "timestamp"}
+    assert file_may_match(parse_predicate("ts = '1995-01-01'"), lo, hi, {},
+                          types=T)
     # IN routes through the same '=' path
     assert file_may_match(
-        parse_predicate("ts IN ('1995-01-01', '2099-01-01')"), lo, hi, {}
-    )
+        parse_predicate("ts IN ('1995-01-01', '2099-01-01')"), lo, hi, {},
+        types=T)
     # and the dictionary path shares the coercion
     d = {"ts": ["1995-01-01 00:00:00", "1995-03-15 12:00:00"]}
     assert file_may_match(
-        parse_predicate("ts IN ('1995-01-01')"), lo, hi, {}, d
-    )
+        parse_predicate("ts IN ('1995-01-01')"), lo, hi, {}, d, types=T)
     # a value truly outside the range still prunes (datetime compare)
     assert not file_may_match(
-        parse_predicate("ts = '1994-12-31'"), lo, hi, {}
-    )
+        parse_predicate("ts = '1994-12-31'"), lo, hi, {}, types=T)
     assert not file_may_match(
-        parse_predicate("ts IN ('1994-01-01', '2001-01-01')"), lo, hi, {}, d
-    )
+        parse_predicate("ts IN ('1994-01-01', '2001-01-01')"), lo, hi, {}, d,
+        types=T)
 
 
 def test_temporal_mixed_shape_ranges_stay_conservative():
-    """Range ops on mixed-shape temporal strings are undecidable without
-    the column type (string vs timestamp interpretations disagree exactly
-    at the midnight/prefix case) — must keep."""
+    """Temporal-shaped text in a STRING column compares as text: the
+    string and timestamp interpretations disagree exactly at the
+    midnight/prefix case, and a datetime compare there would prune."""
     lo = {"c": "1995-01-01 00:00:00"}
     hi = {"c": "1995-01-01 00:00:00"}
-    # string column interpretation: rows '1995-01-01 00:00:00' > '1995-01-01'
-    # → a datetime-compare would wrongly prune; must keep
-    assert file_may_match(parse_predicate("c > '1995-01-01'"), lo, hi, {})
-    # != refutation likewise needs equality under BOTH interpretations
+    T = {"c": "string"}
+    # rows '1995-01-01 00:00:00' > '1995-01-01' as strings → a
+    # datetime-compare would wrongly prune; must keep
+    assert file_may_match(parse_predicate("c > '1995-01-01'"), lo, hi, {},
+                          types=T)
+    # != holds for the row '1995-01-01 00:00:00' as a string → keep
     d = {"c": ["1995-01-01 00:00:00"]}
     assert file_may_match(
-        parse_predicate("c != '1995-01-01'"), lo, hi, {}, d
-    )
+        parse_predicate("c != '1995-01-01'"), lo, hi, {}, d, types=T)
     # same-shape strings remain exactly decidable
     assert not file_may_match(
-        parse_predicate("c != '1995-01-01 00:00:00'"), lo, hi, {}, d
-    )
+        parse_predicate("c != '1995-01-01 00:00:00'"), lo, hi, {}, d,
+        types=T)
     assert not file_may_match(
-        parse_predicate("c > '1995-01-02 00:00:00'"), lo, hi, {}
-    )
+        parse_predicate("c > '1995-01-02 00:00:00'"), lo, hi, {}, types=T)
 
 
 def test_temporal_pruning_end_to_end(cat, spark):
@@ -439,7 +454,7 @@ def test_file_stats_null_count_requires_all_row_groups(tmp_path, monkeypatch):
     assert "x" not in lo and "x" not in hi
     # conservative: no stats → IS NULL keeps the file
     assert file_may_match(parse_predicate("x IS NULL"), lo, hi, {}, None,
-                          nulls, rows)
+                          nulls, rows, types={"x": "bigint"})
 
 
 def test_bloom_roundtrip_no_false_negatives():
@@ -464,19 +479,20 @@ def test_bloom_prunes_only_equality_on_strings():
 
     b = {"h": bloom_encode(["aaa", "bbb"], 1024)}
     lo, hi = {"h": "aaa"}, {"h": "zzz"}  # bounds straddle everything
+    T = {"h": "string"}
     assert file_may_match(parse_predicate("h = 'bbb'"), lo, hi, {},
-                          blooms=b) is True
+                          blooms=b, types=T) is True
     assert file_may_match(parse_predicate("h = 'absent'"), lo, hi, {},
-                          blooms=b) is False
+                          blooms=b, types=T) is False
     # != / ranges / IS NULL never consult the bloom
     assert file_may_match(parse_predicate("h != 'absent'"), lo, hi, {},
-                          blooms=b) is True
+                          blooms=b, types=T) is True
     assert file_may_match(parse_predicate("h > 'aaa'"), lo, hi, {},
-                          blooms=b) is True
+                          blooms=b, types=T) is True
     # AND composition: bloom miss on one conjunct prunes the file
     assert file_may_match(
         parse_predicate("h = 'absent' AND h > 'aaa'"), lo, hi, {},
-        blooms=b) is False
+        blooms=b, types=T) is False
 
 
 def test_temporal_iso_t_separator_never_prunes_wrongly():
@@ -488,14 +504,16 @@ def test_temporal_iso_t_separator_never_prunes_wrongly():
 
     lo = {"ts": "2024-01-01 00:00:00"}
     hi = {"ts": "2024-01-01 00:00:02"}
+    T = {"ts": "timestamp"}
     node = parse_predicate("ts = '2024-01-01T00:00:01'")
-    assert file_may_match(node, lo, hi, {}) is True
-    # dict path: an uncomparable entry is undecidable, not provably absent
+    assert file_may_match(node, lo, hi, {}, types=T) is True
+    # dict path: the entry is the same instant
     d = {"ts": ["2024-01-01 00:00:01"]}
-    assert file_may_match(node, lo, hi, {}, d) is True
-    # same-style strings still compare exactly (both refuted here)
-    assert file_may_match(
-        parse_predicate("ts = '2024-01-01 00:00:05'"), lo, hi, {}) is False
+    assert file_may_match(node, lo, hi, {}, d, types=T) is True
+    # a different instant is refuted in either separator style
+    for lit in ("2024-01-01 00:00:05", "2024-01-01T00:00:05"):
+        assert file_may_match(
+            parse_predicate(f"ts = '{lit}'"), lo, hi, {}, types=T) is False
 
 
 def test_bloom_bits_round_to_bytes():
@@ -515,32 +533,33 @@ def test_wave15_quoted_numeric_and_tz_stats_never_wrong_prune(cat, spark):
     while Spark's cast matched its rows); (b) offset-suffixed timestamp
     stats (tz-adjusted / externally written parquet) previously failed
     the temporal regex and fell to the lexicographic path."""
-    from lakeshed.pruning import _coerce, parse_predicate
+    from lakeshed.pruning import parse_predicate
 
-    # (a) unit: interpretations disagree -> conservative keep (None)
-    assert _coerce("9", "30") is None           # 9<30 num, '9'>'30' lex
-    assert _coerce("100", "200") == (100.0, 200.0)  # both agree: num pair
-    assert _coerce("030", "30", "=") is None    # equal num, unequal text
-    # (a) end-to-end: file with k in [9, 100] must match k = '30'
+    # (a) file with k in [9, 100] must match k = '30'
     assert file_may_match(
-        parse_predicate("k = '30'"), {"k": "9"}, {"k": "100"}, {})
+        parse_predicate("k = '30'"), {"k": "9"}, {"k": "100"}, {},
+        types={"k": "bigint"})
     # lexicographic pruning for string-typed data still works
     assert not file_may_match(
-        parse_predicate("k = 'zzz'"), {"k": "aaa"}, {"k": "mmm"}, {})
+        parse_predicate("k = 'zzz'"), {"k": "aaa"}, {"k": "mmm"}, {},
+        types={"k": "string"})
 
     # (b) tz-suffixed stats: '=' both-aware compares temporally; every
-    # mixed/range case keeps conservatively
+    # mixed-awareness case keeps conservatively
     lo = {"ts": "1995-01-01 00:00:00+00:00"}
     hi = {"ts": "1995-06-01 00:00:00+00:00"}
+    T = {"ts": "timestamp"}
     assert file_may_match(
-        parse_predicate("ts = '1995-01-01 00:00:00+00:00'"), lo, hi, {})
+        parse_predicate("ts = '1995-01-01 00:00:00+00:00'"), lo, hi, {},
+        types=T)
     assert not file_may_match(
-        parse_predicate("ts = '1996-01-01 00:00:00+00:00'"), lo, hi, {})
+        parse_predicate("ts = '1996-01-01 00:00:00+00:00'"), lo, hi, {},
+        types=T)
     # aware stat vs naive literal: keep (Spark would cast and match)
     assert file_may_match(
-        parse_predicate("ts = '1995-01-01'"), lo, hi, {})
+        parse_predicate("ts = '1995-01-01'"), lo, hi, {}, types=T)
     assert file_may_match(
-        parse_predicate("ts >= '1995-01-01 00:00:00'"), lo, hi, {})
+        parse_predicate("ts >= '1995-01-01 00:00:00'"), lo, hi, {}, types=T)
 
 
 def test_wave20_bigint_precision_nan_bool_inlist_and_depth():
@@ -573,22 +592,19 @@ def test_wave20_bigint_precision_nan_bool_inlist_and_depth():
     assert file_may_match(Comparison("k", "<=", nan),
                           {"k": "1"}, {"k": "5"}, {}, types={"k": "double"})
     assert file_may_match(Comparison("k", ">=", nan),
-                          {"k": "1"}, {"k": "5"}, {})
+                          {"k": "1"}, {"k": "5"}, {}, types={"k": "double"})
 
     # (c) boolean stats: all-true file matches flag = 'true'
     assert file_may_match(
         parse_predicate("flag = 'true'"), {"flag": "True"},
         {"flag": "True"}, {}, types={"flag": "boolean"})
-    assert file_may_match(  # untyped fallback normalizes too
-        parse_predicate("flag = 'true'"), {"flag": "True"},
-        {"flag": "True"}, {})
     assert not file_may_match(
         parse_predicate("flag = 'false'"), {"flag": "True"},
         {"flag": "True"}, {}, types={"flag": "boolean"})
     # binary repr stats never prune
     assert file_may_match(
         parse_predicate("payload = 'abc'"), {"payload": "b'abc'"},
-        {"payload": "b'abc'"}, {})
+        {"payload": "b'abc'"}, {}, types={"payload": "binary"})
 
     # (d) 3000-value IN list: flat node, no RecursionError, still prunes
     vals = ", ".join(str(i) for i in range(3000))
@@ -602,7 +618,8 @@ def test_wave20_bigint_precision_nan_bool_inlist_and_depth():
     # (e) a 2000-clause AND chain: conservative keep, not a crash
     chain = " AND ".join(f"x != {i}" for i in range(2000))
     assert file_may_match(parse_predicate(chain),
-                          {"x": "1"}, {"x": "5"}, {}) is True
+                          {"x": "1"}, {"x": "5"}, {},
+                          types={"x": "bigint"}) is True
 
 
 def test_wave20_partition_values_decoded_and_null_sentinel(cat, spark):
@@ -636,26 +653,22 @@ def test_wave16_mixed_offset_string_stats_never_wrong_prune():
     datetime order — a file containing '2024-01-01T01:00:00+00:00' and
     '2024-01-01T05:00:00+07:00' (= Dec31 22:00Z, the lexicographic max
     but datetime MIN) must not be pruned for an '=' on the latter
-    literal, which is exactly in the file. Prune only when string and
-    datetime orderings of (stat, value) agree."""
-    from lakeshed.pruning import _coerce, file_may_match, parse_predicate
+    literal, which is exactly in the file. A string column compares as
+    text."""
+    from lakeshed.pruning import file_may_match, parse_predicate
 
     lo = {"ts": "2024-01-01T01:00:00+00:00"}   # lexicographic min
     hi = {"ts": "2024-01-01T05:00:00+07:00"}   # lexicographic max
+    T = {"ts": "string"}
     # the literal IS in the file: lo_dt (01:00Z) > v_dt (Dec31 22:00Z)
-    # used to fire the prune; orderings disagree -> conservative keep
+    # would fire a datetime prune; the string compare keeps it
     assert file_may_match(
-        parse_predicate("ts = '2024-01-01T05:00:00+07:00'"), lo, hi, {})
-    # unit: disagreement -> None; agreement -> comparable datetime pair
-    assert _coerce("2024-01-01T01:00:00+00:00",
-                   "2024-01-01T05:00:00+07:00", "=") is None
-    c = _coerce("2024-01-01T01:00:00+00:00",
-                "2024-01-02T05:00:00+00:00", "=")
-    assert c is not None and c[0] < c[1]
-    # agreed orderings still prune: literal above both bounds under
-    # string AND datetime interpretations
+        parse_predicate("ts = '2024-01-01T05:00:00+07:00'"), lo, hi, {},
+        types=T)
+    # a literal above both bounds as text still prunes
     assert not file_may_match(
-        parse_predicate("ts = '2025-06-01T00:00:00+00:00'"), lo, hi, {})
+        parse_predicate("ts = '2025-06-01T00:00:00+00:00'"), lo, hi, {},
+        types=T)
 
 
 def test_wave22_date_column_truncates_time_bearing_literal(cat, spark):
@@ -779,3 +792,130 @@ def test_wave23_pruning_soundness_fuzz(cat, spark):
         assert got == want, f"predicate {i}: {p!r} scan={got} want={want}"
         checked += 1
     assert checked >= 100  # the generator must mostly produce valid SQL
+
+
+# ------------------------------------------- predicate columns by field id
+
+
+def _swapped(cat, spark, name):
+    """Two one-row files written as (k, a, b) = (1, 10, 500), (2, 20, 600);
+    then ``a`` and ``b`` swap names, so the read schema (k, b, a) reads
+    the files' ``b`` as ``a`` and a name-keyed stat lookup reads the
+    wrong column."""
+    df = spark.createDataFrame([(1, 10, 500), (2, 20, 600)],
+                               "k int, a int, b int").repartition(2, "k")
+    t = cat.create_table(f"db.{name}", df)
+    assert len(t.plan_files()) == 2
+    t.rename_column("a", "tmp")
+    t.rename_column("b", "a")
+    t.rename_column("tmp", "b")
+    return t
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_swapped_names_resolve_stats_by_field_id(cat, spark):
+    """Pruning after a name swap reads each predicate column's own stats:
+    every path returns what ``read().where`` returns."""
+    cat.create_database("db")
+    t = _swapped(cat, spark, "sw")
+    pred = "a = 500"
+    want = _rows(t.read().where(pred))
+    assert want == [(1, 10, 500)]
+    assert _rows(t.scan(pred)) == want
+    assert t.to_arrow(pred).to_pylist() == [{"k": 1, "b": 10, "a": 500}]
+    assert [a.rows for a in t.plan_files("b = 10")] == [1]
+
+    t.update({"k": "k + 100"}, where=pred)
+    assert _rows(t.read()) == [(2, 20, 600), (101, 10, 500)]
+
+    t = _swapped(cat, spark, "sw_del")
+    t.delete(pred)
+    assert _rows(t.read()) == [(2, 20, 600)]
+
+    t = _swapped(cat, spark, "sw_sql")
+    cat.sql("DELETE FROM db.sw_sql WHERE a = 600")
+    assert _rows(t.read()) == [(1, 10, 500)]
+
+    # MERGE on the swapped key: the key-range prune must find the file
+    # holding a = 500, or the update lands as a duplicate insert
+    t = _swapped(cat, spark, "sw_merge")
+    src = spark.createDataFrame([(7, 500, 11)], "k int, a int, b int")
+    t.merge(src, on="a")
+    assert _rows(t.read()) == [(2, 20, 600), (7, 11, 500)]
+
+
+def test_dropped_and_readded_column_never_reads_old_stats(cat, spark):
+    """A column dropped and added back is a new field id: files written
+    before hold no value for it (all NULL), whatever stats they carry
+    under the old name."""
+    cat.create_database("db")
+
+    def make(name):
+        t = cat.create_table(f"db.{name}", spark.createDataFrame(
+            [(1, 10), (2, 20)], "k int, a int").repartition(2, "k"))
+        t.drop_column("a")
+        t.add_column("a", "int")
+        return t
+
+    t = make("dr")
+    pred = "a IS NULL"
+    assert t.read().where(pred).count() == 2
+    assert t.scan(pred).count() == 2
+    assert t.to_arrow(pred).num_rows == 2
+    assert t.scan("a IS NOT NULL").count() == 0
+    t.update({"k": "k + 100"}, where=pred)
+    assert _rows(t.read()) == [(101, None), (102, None)]
+
+    t = make("dr_del")
+    t.delete(pred)
+    assert t.read().count() == 0
+
+    t = make("dr_sql")
+    cat.sql("DELETE FROM db.dr_sql WHERE a IS NULL AND k = 2")
+    assert _rows(t.read()) == [(1, None)]
+
+
+def test_renamed_column_prunes_by_its_old_stats(cat, spark):
+    """A renamed column keeps its stats: the files' ``a`` bounds prune a
+    predicate on its new name ``b``."""
+    t = cat.create_table("default.rn", spark.createDataFrame(
+        [(1, 10), (2, 20)], "k int, a int").repartition(2, "k"))
+    t.rename_column("a", "b")
+    assert len(t.plan_files()) == 2
+    assert [a.lower_bounds["a"] for a in t.plan_files("b = 10")] == ["10"]
+    assert t.scan("b = 10").count() == 1
+
+
+def test_type_change_out_of_stats_domain_keeps_file(cat, spark):
+    """Stats written under ``int`` do not bound the values read after the
+    column becomes a string ('10' < '5' as text): keep the file. Integral
+    widening keeps the stats usable."""
+    t = cat.create_table("default.tc", spark.createDataFrame(
+        [(1, 10)], "k int, a int").coalesce(1))
+    t.alter_column("a", type="string")
+    assert t.read().where("a < '5'").count() == 1
+    assert t.scan("a < '5'").count() == 1
+    w = cat.create_table("default.tw", spark.createDataFrame(
+        [(1, 10)], "k int, a int").coalesce(1))
+    w.alter_column("a", type="bigint")
+    assert w.plan_files("a = 11") == []
+    assert w.scan("a = 10").count() == 1
+
+
+def test_nested_predicate_prunes_by_struct_leaf_type(cat, spark):
+    """``s.x = 5`` resolves ``s`` by field id and takes the leaf type from
+    the struct type, so the stats compare as numbers: one of 1,000
+    one-row files is kept. Without a type, numeric literals against
+    number-shaped stats could prune only where numeric and text order
+    agree, which kept 441."""
+    df = (spark.range(1000)
+          .select("id", F.struct(F.col("id").alias("x")).alias("s"))
+          .repartitionByRange(1000, "id"))
+    t = cat.create_table("default.nest", df)
+    assert len(t.plan_files()) == 1000
+    kept = t.plan_files("s.x = 5")
+    assert len(kept) == 1 and kept[0].lower_bounds["s.x"] == "5"
+    assert _rows(t.scan("s.x = 5").select("id")) == [(5,)]

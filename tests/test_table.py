@@ -2713,6 +2713,28 @@ def test_corrupt_commit_and_checkpoint_raise_typed(cat, spark):
                                    retain_last=3)) > 0
 
 
+def test_corrupt_checkpoint_raises_typed_from_manifests(cat, spark):
+    """``manifests()`` reads checkpoints through the same reader as the
+    chain replay: a torn checkpoint raises CorruptCommitError, not a raw
+    json error."""
+    from lakeshed.table import CorruptCommitError
+
+    t = cat.create_table("default.mcp", spark.createDataFrame([(0,)],
+                                                              "k int"))
+    t.append(spark.createDataFrame([(1,)], "k int"))
+    cp = t._checkpoint_path(t.rewrite_manifests())
+    with open(cp) as fh:
+        whole = fh.read()
+    with open(cp, "w") as fh:
+        fh.write(whole[:15])
+    with pytest.raises(CorruptCommitError, match="checkpoint"):
+        t.manifests()
+    with open(cp, "w") as fh:
+        fh.write(whole)
+    assert sum(r.path.endswith(".checkpoint.json")
+               for r in t.manifests().collect()) == 1
+
+
 def test_backtick_using_column_list_and_merge_using(cat, spark):
     """r10 review wave 8: USING (cols) is a column list — a backticked
     column that spells a table name survives; MERGE ... USING `t`
