@@ -6,15 +6,19 @@ The reference's catalog is a REST/Hive service resolving
 ``<warehouse>/<database>/<table>`` roots a :class:`lakeshed.table.LakeTable`.
 
 ``Catalog.sql`` is the engine's analog of the reference's ``%%sql`` magic
-(``spark/ipython/startup/00-prettytables.py:60-81``): the lakehouse DDL/DML
-statements the notebooks use (CREATE DATABASE, CREATE/DROP/TRUNCATE TABLE,
-UPDATE, DELETE, DESCRIBE, CALL procedures) are routed to the table layer.
-Queries and MERGE take their table references from Spark's own SQL parser
-(``sqlParser().parsePlan``): each ``db.table`` it finds (and the
+(``spark/ipython/startup/00-prettytables.py:60-81``). Spark's own SQL
+parser (``sqlParser().parsePlan``) reads each statement once, and the
+statement's node picks the route: the lakehouse DDL/DML the notebooks use
+(CREATE DATABASE, CREATE/DROP/TRUNCATE TABLE, INSERT, UPDATE, DELETE,
+MERGE, ALTER TABLE, DESCRIBE, SHOW, CALL procedures) goes to the table
+layer with every name, type, property and expression taken off the node.
+Any other plan is a query: each ``db.table`` it reads (and the
 ``db.table.snapshots``-style metadata relations, S7, branches and time
 travel) reads through a temp view spliced in at the parsed span, and the
 query runs on stock Spark SQL — Catalyst stays the optimizer for every
-query (SURVEY §4: zero custom rules).
+query (SURVEY §4: zero custom rules). Only the Iceberg extensions Spark's
+grammar lacks (CREATE/DROP BRANCH, ADD/DROP PARTITION FIELD) are matched
+on tokens, those of Spark's own lexer.
 """
 
 from __future__ import annotations
@@ -56,7 +60,6 @@ class Catalog:
 
     def create_database(self, name: str, if_not_exists: bool = True) -> None:
         """D1 — CREATE DATABASE IF NOT EXISTS (Getting Started.ipynb:53)."""
-        name = name.replace("`", "")  # accept quoted spellings (r11 fuzz)
         p = os.path.join(self.warehouse, name)
         if os.path.isdir(p) and not if_not_exists:
             raise TableError(f"database {name!r} exists")
@@ -69,7 +72,7 @@ class Catalog:
         )
 
     def tables(self, database: str) -> list[str]:
-        p = os.path.join(self.warehouse, database.replace("`", ""))
+        p = os.path.join(self.warehouse, database)
         if not os.path.isdir(p):
             return []
         return sorted(
@@ -81,10 +84,7 @@ class Catalog:
 
     def _path(self, name: str) -> str:
         # THE resolution funnel: every route (table/_exists/create/drop)
-        # lands here, so stripping backticks once makes every
-        # statement-head regex's ticked captures resolve (r11 fuzz).
-        # Lakeshed names are \w-only, so quoting carries no information.
-        name = name.replace("`", "")
+        # lands here
         parts = name.split(".")
         if len(parts) == 1:
             parts = ["default", parts[0]]
@@ -161,31 +161,33 @@ class Catalog:
         else:
             self._conf[key] = value
 
-    def _dml_target(self, name: str) -> tuple[LakeTable, str | None]:
-        """Resolve a DML target that may carry an explicit
-        ``.branch_<name>`` suffix — Iceberg's branch-identifier WRITE
+    def _dml_target(self, parts: list[str]) -> tuple[LakeTable, str | None]:
+        """Resolve a DML target's parsed name parts, which may end in an
+        explicit ``.branch_<name>`` — Iceberg's branch-identifier WRITE
         surface (``INSERT INTO nyc.t.branch_audit ...``,
         ``UPDATE/DELETE/MERGE INTO nyc.t.branch_audit``), the write twin
-        of the S6 read relation. Returns (table, branch-or-None).
-        Identifier writes require the branch to EXIST (Iceberg rejects
-        writes to unknown branch refs) — auto-creation is the
-        ``spark.wap.branch`` pin's behavior, not the identifier's. A
-        table whose literal name matches wins over the suffix reading
-        when it exists (same disambiguation as the read path)."""
-        raw = name.replace("`", "")
-        m = re.match(r"(.+)\.branch_(\w+)$", raw)
-        if m and not self._exists(raw) and self._exists(m.group(1)):
-            t = self.table(m.group(1))
-            b = m.group(2)
-            if b != MAIN and b not in t.branches():
-                raise TableError(
-                    f"branch {b!r} does not exist on {m.group(1)!r}: "
-                    "explicit branch-identifier DML writes to an "
-                    "existing branch (CREATE BRANCH first; only the "
-                    "spark.wap.branch pin auto-creates)"
-                )
-            return t, b
-        return self.table(name), None
+        of the S6 read relation — through the read path's resolver
+        (:meth:`_lake_rel`), so a table whose literal name matches wins
+        over the suffix reading. A bare name is in ``default``. Returns
+        (table, branch-or-None). Identifier writes require the branch
+        to EXIST (Iceberg rejects writes to unknown branch refs) —
+        auto-creation is the ``spark.wap.branch`` pin's behavior, not
+        the identifier's."""
+        parts = _flat(parts)
+        t, _, suffix = self._lake_rel(
+            parts if len(parts) > 1 else ["default", *parts]) or (None,) * 3
+        if t is None or (suffix and not suffix.lower().startswith("branch_")):
+            # no such table, or a metadata relation: self.table raises
+            return self.table(".".join(parts)), None
+        b = None if suffix is None else suffix[len("branch_"):]
+        if b is not None and b != MAIN and b not in t.branches():
+            raise TableError(
+                f"branch {b!r} does not exist on {'.'.join(parts[:-1])!r}: "
+                "explicit branch-identifier DML writes to an "
+                "existing branch (CREATE BRANCH first; only the "
+                "spark.wap.branch pin auto-creates)"
+            )
+        return t, b
 
     def _run_dml(self, t: LakeTable, fn, explicit_branch: str | None = None):
         """Execute one DML statement with the D14 pins applied
@@ -334,377 +336,332 @@ class Catalog:
 
         f-string style parameterization (``WAP...ipynb:520`` interpolates
         snapshot ids) is supported via ``**fmt``.
+
+        Spark's own parser reads the statement once. A command node the
+        table layer owns routes to its handler in ``_ROUTES``, which takes
+        every name, flag, type, property and expression off the node;
+        any other plan runs as a query (:meth:`_run_select`). Text the
+        grammar rejects goes to :meth:`_unparsed`.
         """
         if fmt:
             statement = statement.format(**fmt)
-        # comment-strip ONCE, up front (r11 fuzz — generalizing the r10
-        # wave-14 DESCRIBE fix to every route): `low`'s whitespace
-        # collapse would let a `--` comment swallow the statement tail,
-        # and comments inside keyword gaps would break every \s+ in the
-        # statement-head regexes.
-        # _strip_comments blanks comments to spaces and is string-
-        # literal- and backtick-aware; stock spark.sql fall-throughs see
-        # semantically identical text.
-        # ... then collapse whitespace outside string literals so the
-        # statement-head regexes' single-space keyword gaps match any
-        # spelling (newlines, tabs, comment-blanked runs)
-        s = _collapse_ws(_strip_comments(statement))
-        s = s.strip().rstrip(";").strip()
-        low = " ".join(s.lower().split())
+        plan = self._parse(statement)
+        if plan is None:
+            return self._unparsed(statement)
+        return self._route(statement, plan)
 
-        m = re.match(r"create database (?:if not exists )?((?:`[\w.]+`|[\w.])+)", low)
-        if m:
-            self.create_database(m.group(1))
-            return None
-        m = re.match(
-            r"create table (if not exists )?((?:`[\w.]+`|[\w.])+)\s*"
-            r"(?:using \w+\s*)?(?:partitioned by \((.*?)\)\s*)?"
-            r"(?:tblproperties \((.*?)\)\s*)?as\s+(select\b.+)$",
-            s, re.IGNORECASE | re.DOTALL,
+    def _route(self, s: str, plan) -> DataFrame | None:
+        route = self._ROUTES.get(plan.nodeName())
+        return route(self, s, plan) if route else self._run_select(s, plan)
+
+    def _table_of(self, plan) -> LakeTable:
+        return self.table(".".join(_name_parts(plan)))
+
+    def _create_namespace(self, s: str, plan) -> None:
+        # D1; a dotted name is one directory (Berlin Buzzwords cell 4)
+        self.create_database(".".join(_name_parts(plan)),
+                             if_not_exists=plan.ifNotExists())
+
+    def _create_table(self, s: str, plan) -> None:
+        """D2 — CREATE TABLE (typed columns, PARTITIONED BY transforms,
+        TBLPROPERTIES; PyIceberg...ipynb:75, Table Maintenance:42) and
+        W1 — CTAS, the SQL twin of ``df.write.saveAsTable``."""
+        name = ".".join(_name_parts(plan))
+        if plan.ignoreIfExists() and self._exists(name):
+            return
+        ctas = plan.nodeName() == "CreateTableAsSelect"
+        self.create_table(
+            name,
+            df=self._run_select(s, plan.query(), sub=True) if ctas else None,
+            schema=None if ctas else plan.tableSchema().toDDL(),
+            partition_by=tuple(map(_spec_entry, _seq(plan.partitioning()))),
+            properties=_props(plan.tableSpec().properties()),
         )
-        if m:
-            # W1 — CTAS: the SQL twin of ``df.write.saveAsTable``
-            # (Getting Started.ipynb's create-then-insert collapsed to the
-            # statement a Spark SQL user types first). IF NOT EXISTS is a
-            # capture group, not a substring test — the SELECT text may
-            # legitimately contain those words.
-            ine, name, part, props, select = m.groups()
-            if ine and self._exists(name):
-                return None
-            self.create_table(
-                name,
-                df=self.sql(select),
-                partition_by=tuple(
-                    p.strip() for p in _split_top(part or "") if p.strip()
-                ),
-                properties=_parse_props(props),
-            )
-            return None
-        m = re.match(
-            r"create table (if not exists )?((?:`[\w.]+`|[\w.])+)\s*\((.*?)\)\s*"
-            r"(?:using \w+\s*)?(?:partitioned by \((.*?)\)\s*)?"
-            r"(?:tblproperties \((.*?)\)\s*)?$",
-            s, re.IGNORECASE | re.DOTALL,
+
+    def _drop_table(self, s: str, plan) -> None:
+        self.drop_table(".".join(_name_parts(plan)), if_exists=plan.ifExists())
+
+    def _truncate(self, s: str, plan) -> None:
+        self._table_of(plan).truncate()
+
+    def _describe(self, s: str, plan) -> DataFrame:
+        """DESCRIBE of a lakeshed table, any spelling, is its metadata
+        rows; a name that is not one (a temp view, say) goes to stock
+        Spark DESCRIBE."""
+        name = ".".join(_name_parts(plan))
+        if not self._exists(name):
+            return self._run_select(s, plan)
+        if (plan.nodeName() == "DescribeColumn"
+                or not plan.partitionSpec().isEmpty()):
+            # raising beats silently returning whole-table rows
+            raise TableError(
+                "DESCRIBE of a column or partition is not supported on "
+                "lakeshed tables; use DESCRIBE <table>")
+        return self.table(name).describe()
+
+    def _show_namespaces(self, s: str, plan) -> DataFrame:
+        if plan.pattern().isDefined() or _name_parts(plan):
+            return self._run_select(s, plan)
+        return self.spark.createDataFrame(
+            [(d,) for d in self.databases()], "namespace string")
+
+    def _show_tables(self, s: str, plan) -> DataFrame:
+        if plan.pattern().isDefined():
+            return self._run_select(s, plan)
+        db = ".".join(_name_parts(plan)) or "default"
+        return self.spark.createDataFrame(
+            [(db, t) for t in self.tables(db)],
+            "namespace string, tableName string",
         )
-        if m:
-            # D2 — CREATE TABLE (typed cols, PARTITIONED BY transform,
-            # TBLPROPERTIES) (PyIceberg...ipynb:75; Table Maintenance:42)
-            ine, name, cols, part, props = m.groups()
-            if ine and self._exists(name):
-                return None
-            self.create_table(
-                name,
-                schema=", ".join(_split_top(cols)),
-                partition_by=tuple(
-                    p.strip() for p in _split_top(part or "") if p.strip()
-                ),
-                properties=_parse_props(props),
-            )
-            return None
-        m = re.match(r"drop table (?:if exists )?((?:`[\w.]+`|[\w.])+)", low)
-        if m:
-            self.drop_table(m.group(1), if_exists=True)
-            return None
-        m = re.match(r"truncate table ((?:`[\w.]+`|[\w.])+)", low)
-        if m:
-            self.table(m.group(1)).truncate()
-            return None
-        # backticked spellings route to the SAME LakeTable.describe() as
-        # the plain ones (r10 review wave 7: letting `DESCRIBE `db.t``
-        # fall through to _run_select would DESCRIBE the temp view —
-        # a different shape than the metadata rows describe() emits).
-        # Any mix of backticks normalizes by stripping them; a name that
-        # is NOT a lakeshed table (a temp view, say) falls through to
-        # stock spark.sql DESCRIBE (r10 wave 9)
-        if low.startswith("desc"):
-            # `low` is safe here since r11: sql() comment-strips and
-            # collapses EVERY statement up front, which subsumes the
-            # r10 wave-14 per-branch recomputation this block used to
-            # carry (a -- comment can no longer swallow the tail).
-            # TABLE may combine with EXTENDED/FORMATTED (Spark accepts
-            # DESCRIBE TABLE EXTENDED t); without the combined prefix
-            # the word after TABLE parsed as the name, so 'extended'
-            # could shadow a real table of that name (r10 ADVICE)
-            m = re.match(
-                r"desc(?:ribe)?\s+"
-                r"(?:table\s+(?:extended\s+|formatted\s+)?"
-                r"|extended\s+|formatted\s+)?"
-                r"([`\w.]+)\s*(.*)$", low)
-            if m:
-                name = m.group(1).replace("`", "")
-                # DESCRIBE DATABASE/FUNCTION/QUERY operate on other
-                # object kinds even when a table spells that name
-                if (name.split(".")[0] not in
-                        ("database", "function", "query", "schema")
-                        and self._exists(name)):
-                    if m.group(2):
-                        # column-/PARTITION-describe on a lakeshed
-                        # table: not supported — raising beats silently
-                        # returning whole-table rows or misrouting to
-                        # the temp view
-                        raise TableError(
-                            f"DESCRIBE ... {m.group(2)!r} is not "
-                            "supported on lakeshed tables; use "
-                            "DESCRIBE <table>")
-                    return self.table(name).describe()
-        # not a lakeshed table (a temp view, say): fall through to
-        # stock spark.sql DESCRIBE for any spelling (r10 waves 10-14)
-        if low in ("show databases", "show namespaces"):
-            return self.spark.createDataFrame(
-                [(d,) for d in sorted(self.databases())],
-                "namespace string",
-            )
-        m = re.match(r"show tables(?: (?:in|from) ((?:`[\w.]+`|[\w.])+))?$", low)
-        if m:
-            db = (m.group(1) or "default").replace("`", "")
-            return self.spark.createDataFrame(
-                [(db, t) for t in sorted(self.tables(db))],
-                "namespace string, tableName string",
-            )
-        m = re.match(r"show\s+create\s+table\s+((?:`[\w.]+`|[\w.])+)$", s,
-                     re.IGNORECASE)
-        if m:
-            # DDL round-trip: the emitted statement re-executes through
-            # this same router to an equivalent table (tested)
-            t = self.table(m.group(1))
-            c = t._read_commit(t.head())
-            cols = ",\n  ".join(
-                f"{f.name} {f.type}" for f in t.schema_fields()
-            )
-            stmt = f"CREATE TABLE {m.group(1)} (\n  {cols})\nUSING lakeshed"
-            if c.partition_spec:
-                stmt += (
-                    "\nPARTITIONED BY ("
-                    + ", ".join(c.partition_spec) + ")"
-                )
-            if c.properties:
-                # SQL-escape embedded quotes (doubled) so the emitted
-                # DDL round-trips through the router's property parser
-                esc = lambda x: (str(x).replace("\\", "\\\\")  # noqa: E731
-                                 .replace("'", "''"))
-                stmt += "\nTBLPROPERTIES (" + ", ".join(
-                    f"'{esc(k)}'='{esc(v)}'"
-                    for k, v in sorted(c.properties.items())
-                ) + ")"
-            return self.spark.createDataFrame(
-                [(stmt,)], "createtab_stmt string"
-            )
-        m = re.match(r"show tblproperties ((?:`[\w.]+`|[\w.])+)$", low)
-        if m:
-            props = self.table(m.group(1)).properties()
-            return self.spark.createDataFrame(
-                sorted(props.items()), "key string, value string"
-            )
-        m = re.match(
-            r"update ((?:`[\w.]+`|[\w.])+) set (.+)$", s,
-            re.IGNORECASE | re.DOTALL,
+
+    def _show_create(self, s: str, plan) -> DataFrame:
+        """DDL round-trip: the emitted statement re-executes through
+        this same router to an equivalent table (tested)."""
+        name = ".".join(_name_parts(plan))
+        t = self.table(name)
+        c = t._read_commit(t.head())
+        cols = ",\n  ".join(
+            f"{_ident(f.name)} {f.type}" for f in t.schema_fields())
+        stmt = f"CREATE TABLE {name} (\n  {cols})\nUSING lakeshed"
+        if c.partition_spec:
+            stmt += "\nPARTITIONED BY (" + ", ".join(c.partition_spec) + ")"
+        if c.properties:
+            # SQL-escape embedded quotes (doubled) and backslashes so
+            # the emitted DDL reads back to the same values
+            esc = lambda x: (str(x).replace("\\", "\\\\")  # noqa: E731
+                             .replace("'", "''"))
+            stmt += "\nTBLPROPERTIES (" + ", ".join(
+                f"'{esc(k)}'='{esc(v)}'"
+                for k, v in sorted(c.properties.items())
+            ) + ")"
+        return self.spark.createDataFrame([(stmt,)], "createtab_stmt string")
+
+    def _show_properties(self, s: str, plan) -> DataFrame:
+        if plan.propertyKey().isDefined():
+            return self._run_select(s, plan)
+        return self.spark.createDataFrame(
+            sorted(self._table_of(plan).properties().items()),
+            "key string, value string",
         )
-        if m:
-            # split SET list from WHERE with a quote-aware scan — a lazy
-            # regex would cut at a "where" INSIDE a string literal
-            # (``SET msg = 'a where b'``)
-            body, where = _split_where(m.group(2))
-            assigns = {}
-            for part in _split_top(body):
-                col, _, expr = part.partition("=")
-                assigns[col.strip().strip("`")] = expr.strip()
-            # D14 — the wap pins scope DML too (WAP...ipynb cell 21
-            # DELETEs against the staged branch); an explicit
-            # .branch_<name> target outranks the pin (_dml_target)
-            t, xbr = self._dml_target(m.group(1))
-            self._run_dml(
-                t, lambda **kw: t.update(assigns, where=where, **kw),
-                explicit_branch=xbr,
-            )
+
+    def _update(self, s: str, plan) -> None:
+        assigns = {
+            ".".join(_parts(a.key().nameParts())): self._text(s, a.value())
+            for a in _seq(plan.assignments())
+        }
+        cond = plan.condition()
+        where = self._text(s, cond.get()) if cond.isDefined() else None
+        # D14 — the wap pins scope DML too (WAP...ipynb cell 21
+        # DELETEs against the staged branch); an explicit
+        # .branch_<name> target outranks the pin (_dml_target)
+        t, xbr = self._dml_target(_name_parts(plan))
+        self._run_dml(t, lambda **kw: t.update(assigns, where=where, **kw),
+                      explicit_branch=xbr)
+
+    def _delete(self, s: str, plan) -> None:
+        where = self._text(s, plan.condition())
+        t, xbr = self._dml_target(_name_parts(plan))
+        self._run_dml(t, lambda **kw: t.delete(where, **kw),
+                      explicit_branch=xbr)
+
+    def _insert(self, s: str, plan) -> None:
+        """W3/W4 — INSERT INTO ... VALUES | SELECT (Integrated
+        Audits...ipynb:471; PaimonStream.java:94) and INSERT OVERWRITE,
+        one ATOMIC commit swapping the live file set (readers pin the
+        old snapshot until it lands; time travel still reaches it)."""
+        if (not plan.partitionSpec().isEmpty() or plan.byName()
+                or not plan.userSpecifiedCols().isEmpty()):
+            raise TableError("INSERT takes no column list, PARTITION "
+                             "clause or BY NAME on lakeshed tables")
+        df = self._run_select(s, plan.query(), sub=True)
+        t, xbr = self._dml_target(_name_parts(plan.table()))
+        # SQL INSERT is positional (W2: df.write.insertInto, Table
+        # Maintenance...ipynb:77) — rename to the target schema
+        df = self._align_to_target(t, df, explicit_branch=xbr)
+        # D14 — spark.wap.id pin + write.wap.enabled stages the write
+        # (Integrated Audits...ipynb:191,461), the overwrite too
+        write = t.overwrite if plan.overwrite() else t.append
+        self._run_dml(t, lambda **kw: write(df, **kw), explicit_branch=xbr)
+
+    def _add_constraint(self, s: str, plan) -> None:
+        # Delta-style CHECK constraint, kept as the SQL it evaluates
+        c = plan.checkConstraint()
+        self._table_of(plan).add_constraint(c.name(), self._text(s, c.child()))
+
+    def _drop_constraint(self, s: str, plan) -> None:
+        t = self._table_of(plan)
+        if not (plan.ifExists() and plan.name() not in t.constraints()):
+            t.drop_constraint(plan.name())
+
+    def _set_properties(self, s: str, plan) -> None:
+        # D9 (WAP...ipynb:143; Table Maintenance...ipynb:109)
+        self._table_of(plan).set_properties(**_props(plan.properties()))
+
+    def _unset_properties(self, s: str, plan) -> None:
+        self._table_of(plan).unset_properties(*[
+            k.removeprefix(_KEY) for k in _seq(plan.propertyKeys())])
+
+    def _add_columns(self, s: str, plan) -> None:
+        # D8 (Getting Started.ipynb:183)
+        t = self._table_of(plan)
+        for c in _seq(plan.columnsToAdd()):
+            if c.path().isDefined():
+                raise TableError("ADD COLUMN of a nested field is not "
+                                 "supported on lakeshed tables")
+            comment = c.comment()
+            t.add_column(c.colName(), c.dataType().simpleString(),
+                         comment=comment.get() if comment.isDefined() else None,
+                         **_position(c.position()))
+
+    def _drop_columns(self, s: str, plan) -> None:
+        # field-id projection keeps old files readable; the id is never
+        # reused, and an unknown name raises unless IF EXISTS
+        t = self._table_of(plan)
+        for c in _seq(plan.columnsToDrop()):
+            name = ".".join(_parts(c.name()))
+            if not plan.ifExists() or name in {
+                    f.name for f in t.schema_fields()}:
+                t.drop_column(name)
+
+    def _rename_column(self, s: str, plan) -> None:
+        # D6 (Getting Started.ipynb:123)
+        self._table_of(plan).rename_column(
+            ".".join(_parts(plan.column().name())), plan.newName())
+
+    def _alter_columns(self, s: str, plan) -> None:
+        # D7 — TYPE, COMMENT, FIRST / AFTER (Getting Started.ipynb:147-171)
+        t = self._table_of(plan)
+        for c in _seq(plan.specs()):
+            if (c.newNullability().isDefined() or c.dropDefault()
+                    or c.newDefaultExpression().isDefined()):
+                raise TableError("ALTER COLUMN takes TYPE, COMMENT, FIRST "
+                                 "or AFTER on lakeshed tables")
+            typ, comment = c.newDataType(), c.newComment()
+            t.alter_column(
+                ".".join(_parts(c.column().name())),
+                type=typ.get().simpleString() if typ.isDefined() else None,
+                comment=comment.get() if comment.isDefined() else None,
+                **_position(c.newPosition()))
+
+    def _unparsed(self, s: str) -> DataFrame | None:
+        """Text Spark's grammar rejects. Iceberg's SQL extensions (see
+        :meth:`_alter_extension`) match on the tokens of Spark's own
+        lexer. TBLPROPERTIES keys Spark reserves (``owner``,
+        ``location``, ``provider``) are ordinary properties here: the
+        statement re-parses with its quoted keys under the ``_KEY``
+        disguise. Anything else goes to ``spark.sql`` unchanged, which
+        raises Spark's own error."""
+        toks = [(s[a:b], a, b) for a, b, hidden in self._tokens(s)
+                if not hidden]
+        while toks and toks[-1][0] == ";":
+            toks.pop()
+        words = [t.upper() for t, _, _ in toks]
+        i = 2  # ALTER TABLE <name> <action>, the name word(.word)*
+        while i + 2 < len(toks) and words[i + 1] == ".":
+            i += 2
+        if words[:2] == ["ALTER", "TABLE"] and self._alter_extension(
+                s, [t for t, _, _ in toks[2:i + 1:2]], toks[i + 1:]):
             return None
-        m = re.match(
-            r"delete from ((?:`[\w.]+`|[\w.])+) where (.+)$", s, re.IGNORECASE | re.DOTALL
-        )
-        if m:
-            t, xbr = self._dml_target(m.group(1))
-            self._run_dml(t, lambda **kw: t.delete(m.group(2), **kw),
-                          explicit_branch=xbr)
-            return None
-        m = re.match(
-            r"alter table ((?:`[\w.]+`|[\w.])+) add constraint (\w+) check \((.+)\)$",
-            s, re.IGNORECASE | re.DOTALL,
-        )
-        if m:
-            # Delta-style CHECK constraint (expression kept in original
-            # case — it is SQL evaluated against the data)
-            self.table(m.group(1)).add_constraint(m.group(2), m.group(3))
-            return None
-        m = re.match(
-            r"alter table ((?:`[\w.]+`|[\w.])+) drop constraint (\w+)$", s, re.IGNORECASE
-        )
-        if m:
-            self.table(m.group(1)).drop_constraint(m.group(2))
-            return None
-        m = re.match(
-            r"insert overwrite (?:table )?((?:`[\w.]+`|[\w.])+)\s+(select\b.+|values\b.+)$",
-            s, re.IGNORECASE | re.DOTALL,
-        )
-        if m:
-            # INSERT OVERWRITE — one ATOMIC commit swapping the live file
-            # set (Iceberg dynamic-overwrite semantics on an unpartitioned
-            # spec; readers pin the old snapshot until the commit lands,
-            # and time travel still reaches it)
-            tbl, rest = m.group(1), m.group(2)
-            df = (
-                self.sql(rest) if rest.lower().startswith("select")
-                else self.spark.sql(f"SELECT * FROM {rest}")
-            )
-            t, xbr = self._dml_target(tbl)
-            df = self._align_to_target(t, df, explicit_branch=xbr)
-            # same D14 staging contract as INSERT INTO below — the
-            # full-table swap must not bypass a pinned WAP audit
-            self._run_dml(t, lambda **kw: t.overwrite(df, **kw),
-                          explicit_branch=xbr)
-            return None
-        m = re.match(
-            # \b, not a literal space, after SELECT/VALUES: Spark
-            # accepts VALUES(1,'a') glued to the paren (r11 wave 6 —
-            # the spaced pattern silently fell through to spark.sql)
-            r"insert into (?:table )?((?:`[\w.]+`|[\w.])+)"
-            r" (select\b.+|values\b.+)$", s,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if m:
-            tbl, rest = m.group(1), m.group(2)
-            if rest.lower().startswith("select"):
-                # W4 — INSERT INTO SELECT (PaimonStream.java:94)
-                df = self.sql(rest)
-            else:
-                # W3 — INSERT VALUES (Integrated Audits...ipynb:471)
-                df = self.spark.sql(
-                    f"SELECT * FROM {rest}"  # VALUES (...) relation
-                )
-            t, xbr = self._dml_target(tbl)
-            # SQL INSERT is positional (W2: df.write.insertInto,
-            # Table Maintenance...ipynb:77) — rename to target schema
-            df = self._align_to_target(t, df, explicit_branch=xbr)
-            # D14 — spark.wap.id pin + write.wap.enabled stages the write
-            # (Integrated Audits...ipynb:191,461)
-            self._run_dml(t, lambda **kw: t.append(df, **kw),
-                          explicit_branch=xbr)
-            return None
-        m = re.match(
-            r"call\s+(?:[\w]+\.)*(\w+)\s*\((.*)\)$", s,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if m:
-            # Iceberg stored procedures — catalog-prefixed
-            # (``CALL demo.system.rewrite_data_files(...)``), positional
-            # OR named-arg (``table => 'x'``) forms; see _call_procedure.
-            return self._call_procedure(m.group(1).lower(), m.group(2))
-        if low.startswith("merge into "):
-            self._merge_into(s)
-            return None
-        m = re.match(
-            r"alter table ((?:`[\w.]+`|[\w.])+) create branch (?:if not exists )?(\w+)", low
-        )
-        if m:
+        disguised = _disguised(s, toks)
+        plan = disguised and self._parse(disguised)
+        if plan is None:
+            return self.spark.sql(s)
+        return self._route(disguised, plan)
+
+    def _alter_extension(self, s: str, name: list[str],
+                         toks: list[tuple[str, int, int]]) -> bool:
+        """Run ``ALTER TABLE <name> <act>`` when it is one of Iceberg's
+        SQL extensions — ``CREATE BRANCH [IF NOT EXISTS] b``, ``DROP
+        BRANCH b``, ``ADD`` / ``DROP PARTITION FIELD <transform>`` (D12,
+        Getting Started.ipynb:323; Berlin Buzzwords.ipynb:279); False
+        when it is not. ``toks``: the action's tokens of ``s``, as
+        ``(text, start, end)``."""
+        act = [x.upper() for x, _, _ in toks]
+        ine = act[2:5] == ["IF", "NOT", "EXISTS"]
+        if act[:2] == ["CREATE", "BRANCH"] and len(act) == 3 + 3 * ine:
+            op = "create_branch"
+        elif act[:2] == ["DROP", "BRANCH"] and len(act) == 3:
+            op = "drop_branch"
+        elif act[1:3] == ["PARTITION", "FIELD"] and len(act) > 3 \
+                and act[0] in ("ADD", "DROP"):
+            op = act[0].lower() + "_partition_field"
+        else:
+            return False
+        t = self.table(".".join(map(_unquote_ident, name)))
+        if op.endswith("_field"):
+            # spelled as CREATE TABLE's PARTITIONED BY spells it
+            field = s[toks[3][1]:toks[-1][2]]
+            spec = self._parse(f"CREATE TABLE t (c int) "
+                               f"PARTITIONED BY ({field})")
+            if spec is None:
+                raise TableError(f"not a partition field: {field!r}")
+            getattr(t, op)(_spec_entry(spec.partitioning().apply(0)))
+        elif op == "drop_branch":
+            t.drop_branch(_unquote_ident(toks[-1][0]))
+        else:
             try:
-                self.table(m.group(1)).create_branch(m.group(2))
+                t.create_branch(_unquote_ident(toks[-1][0]))
             except BranchExistsError:
                 # ONLY the already-exists case is the IF NOT EXISTS
-                # no-op; other TableErrors (uncommitted table, bad name)
-                # must surface regardless of the clause
-                if "if not exists" not in low:
+                # no-op; other TableErrors must surface regardless
+                if not ine:
                     raise
-            return None
-        m = re.match(r"alter table ((?:`[\w.]+`|[\w.])+) drop branch (\w+)", low)
-        if m:
-            self.table(m.group(1)).drop_branch(m.group(2))
-            return None
-        m = re.match(
-            r"alter table ((?:`[\w.]+`|[\w.])+) set tblproperties \((.*)\)$", s,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if m:
-            # D9 (WAP...ipynb:143; Table Maintenance...ipynb:109)
-            self.table(m.group(1)).set_properties(
-                **_parse_props(m.group(2))
-            )
-            return None
-        m = re.match(
-            r"alter table ((?:`[\w.]+`|[\w.])+) unset tblproperties \((.*)\)$", s,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if m:
-            names = [p.strip().strip("'\"") for p in _split_top(m.group(2))]
-            self.table(m.group(1)).unset_properties(*names)
-            return None
-        m = re.match(r"alter table ((?:`[\w.]+`|[\w.])+) add partition field (.+)$", low)
-        if m:
-            # D12 (Getting Started.ipynb:323; Berlin Buzzwords.ipynb:279)
-            self.table(m.group(1)).add_partition_field(m.group(2).strip())
-            return None
-        m = re.match(r"alter table ((?:`[\w.]+`|[\w.])+) drop partition field (.+)$", low)
-        if m:
-            self.table(m.group(1)).drop_partition_field(m.group(2).strip())
-            return None
-        m = re.match(
-            r"alter table ((?:`[\w.]+`|[\w.])+) alter column (\w+) comment (.+)$", s,
-            re.IGNORECASE,
-        )
-        if m:
-            self.table(m.group(1)).alter_column(
-                m.group(2), comment=m.group(3).strip().strip("'\"")
-            )
-            return None
-        m = re.match(
-            r"alter table ((?:`[\w.]+`|[\w.])+) alter column (\w+) (first|after (\w+))$",
-            low,
-        )
-        if m:
-            # D7 position form (Getting Started.ipynb:171)
-            if m.group(3) == "first":
-                self.table(m.group(1)).alter_column(m.group(2), first=True)
-            else:
-                self.table(m.group(1)).alter_column(
-                    m.group(2), after=m.group(4)
-                )
-            return None
-        m = re.match(r"alter table ((?:`[\w.]+`|[\w.])+) drop column (\w+)$", s,
-                     re.IGNORECASE)
-        if m:
-            # D6-D8 family — DROP COLUMN (field-id projection keeps old
-            # files readable; the id is never reused). Matched against
-            # the original-case statement: column names are case-
-            # sensitive in the schema, and drop_column now raises on an
-            # unknown name instead of committing a no-op.
-            self.table(m.group(1)).drop_column(m.group(2))
-            return None
-        m = re.match(
-            r"alter table ((?:`[\w.]+`|[\w.])+) rename column (\w+) to (\w+)", low
-        )
-        if m:
-            self.table(m.group(1)).rename_column(m.group(2), m.group(3))
-            return None
-        m = re.match(
-            r"alter table ((?:`[\w.]+`|[\w.])+) add column (\w+) ([\w<>,() ]+?)"
-            r"(?: after (\w+))?$", low
-        )
-        if m:
-            self.table(m.group(1)).add_column(
-                m.group(2), m.group(3).strip(), after=m.group(4)
-            )
-            return None
-        m = re.match(
-            r"alter table ((?:`[\w.]+`|[\w.])+) alter column (\w+) type ([\w<>,() ]+)", low
-        )
-        if m:
-            self.table(m.group(1)).alter_column(m.group(2), type=m.group(3))
-            return None
+        return True
 
-        # plain query: resolve db.table / db.table.<meta> names as temp views
-        return self._run_select(s)
+    def _tokens(self, s: str) -> list[tuple[int, int, bool]]:
+        """``(start, end, hidden)`` of each token Spark's own lexer reads
+        in ``s``; comments and whitespace are the hidden ones."""
+        jvm = self.spark._jvm
+        p = jvm.org.apache.spark.sql.catalyst.parser
+        lexer = p.SqlBaseLexer(p.UpperCaseCharStream(
+            jvm.org.antlr.v4.runtime.CharStreams.fromString(s)))
+        return [(t.getStartIndex(), t.getStopIndex() + 1, t.getChannel() != 0)
+                for t in lexer.getAllTokens()]
+
+    def _uncomment(self, text: str) -> str:
+        """``text`` with each comment blanked — ``pruning.parse_predicate``
+        reads no comments, so a predicate handed over with one would
+        silently stop pruning."""
+        if "--" not in text and "/*" not in text:
+            return text
+        return "".join(" " if hidden else text[a:b]
+                       for a, b, hidden in self._tokens(text))
+
+    def _text(self, s: str, e) -> str:
+        """An expression's text: its span of ``s`` with comments blanked,
+        or Spark's rendering where it has no span."""
+        span = self._expr_span(s, e)
+        return e.sql() if span is None else self._uncomment(
+            s[span[0]:span[1]])
+
+    def _expr_span(self, s: str, e) -> tuple[int, int] | None:
+        """``[start, end)`` of an expression's text in ``s``. A LIKE /
+        IN / BETWEEN / IS node's own span starts at its keyword, so the
+        span reaches back to the start of its left operand, and to each
+        ``(`` that operand's own span leaves out."""
+        span = _span(e)
+        if span is None:
+            return None
+        a, b = span
+        left = e
+        while not left.children().isEmpty():
+            left = left.children().apply(0)
+            a = min(a, (_span(left) or span)[0])
+        if a < span[0] and ")" in s[a:b]:
+            depth = least = 0
+            for x, y, _ in self._tokens(s[a:b]):
+                tok = s[a + x:a + y]
+                depth += (tok == "(") - (tok == ")")
+                least = min(least, depth)
+            for _ in range(-least):
+                a = s.rindex("(", 0, a)
+        return a, b
 
     # -------------------------------------------------------- procedures
 
-    def _call_procedure(self, proc: str, argstr: str) -> DataFrame | None:
-        """Dispatch an Iceberg stored procedure (D15-D19).
+    def _call_procedure(self, s: str, plan) -> DataFrame | None:
+        """Dispatch an Iceberg stored procedure (D15-D19), catalog-
+        prefixed or not (``CALL demo.system.rewrite_data_files(...)``).
 
         Both argument conventions the reference notebooks use are routed:
 
@@ -717,11 +674,15 @@ class Catalog:
           Spark Procedures.ipynb cells 9/13 — verbatim cells a reference
           user pastes).
 
-        ``TIMESTAMP '...'`` literals resolve to epoch-ms (naive = UTC,
-        same convention as ``TIMESTAMP AS OF``); ``map(...)`` literals
-        become dicts. Maintenance procedures return a 1-row result frame
-        like Iceberg's (the notebooks call ``.show()`` on it)."""
-        pos, named = _parse_call_args(argstr)
+        Maintenance procedures return a 1-row result frame like
+        Iceberg's (the notebooks call ``.show()`` on it)."""
+        proc = _name_parts(plan)[-1].lower()
+        pos, named = [], {}
+        for a in _seq(plan.args()):
+            if a.nodeName() == "NamedArgumentExpression":
+                named[a.key().lower()] = self._call_value(s, a.value())
+            else:
+                pos.append(self._call_value(s, a))
 
         def arg(name: str, idx: int, default: object = None) -> object:
             if name in named:
@@ -816,9 +777,29 @@ class Catalog:
             )
         raise TableError(f"unknown procedure {proc!r}")
 
+    def _call_value(self, s: str, e) -> object:
+        """One CALL argument as python: a literal's value, a ``TIMESTAMP
+        '...'`` literal as epoch ms (naive = UTC, like TIMESTAMP AS OF —
+        read off its text, not Spark's session-zone value), ``map(...)``
+        as a dict, anything else as its text."""
+        kind = e.nodeName()
+        if (kind == "UnresolvedFunction"
+                and _parts(e.nameParts())[-1].lower() == "map"):
+            items = [self._call_value(s, c) for c in _seq(e.children())]
+            if len(items) % 2:
+                raise TableError(f"map() needs key/value pairs: {e.sql()}")
+            return dict(zip(items[::2], items[1::2]))
+        if kind != "Literal":
+            return self._text(s, e)
+        if e.dataType().typeName().startswith("timestamp"):
+            text = self._text(s, e).rstrip()
+            return _ts_ms(text[text.index(text[-1]) + 1:-1])
+        v = e.value()
+        return v if v is None or isinstance(v, (bool, int)) else str(v)
+
     # -------------------------------------------------------- MERGE INTO
 
-    def _merge_into(self, s: str) -> None:
+    def _merge_into(self, s: str, plan) -> None:
         """W5/W6 as SQL text — ``MERGE INTO target [AS] t USING source
         [AS] s ON t.k = s.k WHEN MATCHED [AND cond] THEN UPDATE SET * |
         col = expr, ... | DELETE WHEN NOT MATCHED [AND cond] THEN INSERT
@@ -833,9 +814,6 @@ class Catalog:
         the ON equalities and each WHEN action's kind, condition and
         assignments. Column references are renamed by position to the
         ``t.``/``s.`` prefixes ``merge()`` evaluates against."""
-        plan = self._parse(s)
-        if plan is None or plan.nodeName() != "MergeIntoTable":
-            raise TableError(f"cannot parse MERGE INTO: {s[:80]!r}")
         talias, trel = _unalias(plan.targetTable())
         salias, src = _unalias(plan.sourceTable())
         if trel.nodeName() != "UnresolvedRelation":
@@ -843,26 +821,18 @@ class Catalog:
         tparts = _flat(_parts(trel.multipartIdentifier()))
         sparts: list[str] = []
         if src.nodeName() == "UnresolvedRelation":
+            # a lakeshed source reads through the view a SELECT would
+            # (the pins redirect it the same way)
             sparts = _flat(_parts(src.multipartIdentifier()))
-            src_name = ".".join(sparts)
-            if self._exists(src_name):
-                # the pins redirect catalog-table SOURCE reads exactly
-                # like plain SELECTs (a subquery source routed through
-                # _run_select already does)
-                t_src = self.table(src_name)
-                src_df = t_src.read(version=self._dml_read_version(t_src))
-            else:
-                src_df = self.spark.table(src_name)
+            hit = self._lake_rel(sparts)
+            src_df = self.spark.table(
+                self._view(hit[0], hit[2], None, "", set()) if hit
+                else ".".join(sparts))
         else:
-            # a subquery source: its text is the union of its nodes' spans
-            rels, nodes = _plan_walk(src)
-            spans = [sp for sp in map(_span, [n for _, n in nodes]
-                                      + [r for r, _, _ in rels]) if sp]
-            src_df = self._run_select(
-                s[min(a for a, _ in spans):max(b for _, b in spans)])
+            src_df = self._run_select(s, src, sub=True)
             salias = salias or "s"
 
-        t_obj, xbr = self._dml_target(".".join(tparts))
+        t_obj, xbr = self._dml_target(tparts)
         # validate/expand against the schema the merge will WRITE — a
         # pinned branch, explicit .branch_<name> target, or staged
         # wap-id chain may have evolved past main
@@ -904,7 +874,7 @@ class Catalog:
             renamed to ``t.col``/``s.col``. ``bare`` (WHEN NOT MATCHED BY
             SOURCE, evaluated on target-only rows): to ``col``, and a
             source column raises — there is no source row to read."""
-            span = _span(e)
+            span = self._expr_span(s, e)
             if span is None:
                 return e.sql()
             edits = []
@@ -923,7 +893,7 @@ class Catalog:
                 edits.append((sp[0] - span[0], sp[1] - span[0],
                               ("" if bare else sd + ".")
                               + ".".join(map(_ident, rest))))
-            return _splice(s[span[0]:span[1]], edits)
+            return self._uncomment(_splice(s[span[0]:span[1]], edits))
 
         def cond(action, bare: bool = False) -> str | None:
             c = action.condition()
@@ -1090,20 +1060,23 @@ class Catalog:
             made.add(view)
         return view
 
-    def _run_select(self, s: str) -> DataFrame:
-        """Run a query on stock Spark SQL with each lakeshed relation it
-        reads spliced out for a temp view. Spark's own parser finds the
-        relations — in FROM/JOIN, subqueries, CTE bodies, time travel
-        and hint arguments — so a name inside a string literal, a
-        comment or a column alias is never one. Qualified column
-        prefixes (``nyc.taxis.fare``) follow the relation only where it
-        is read unaliased; a struct path that merely spells a table name
-        stays as written. Text Spark cannot parse goes to ``spark.sql``
-        unchanged, which raises Spark's own error."""
-        plan = self._parse(s)
-        if plan is None:
-            return self.spark.sql(s)
+    def _run_select(self, s: str, plan, sub: bool = False) -> DataFrame:
+        """Run the query ``plan`` parsed from ``s`` on stock Spark SQL
+        with each lakeshed relation it reads spliced out for a temp
+        view. Spark's own parser found the relations — in FROM/JOIN,
+        subqueries, CTE bodies, time travel and hint arguments — so a
+        name inside a string literal, a comment or a column alias is
+        never one. Qualified column prefixes (``nyc.taxis.fare``) follow
+        the relation only where it is read unaliased; a struct path that
+        merely spells a table name stays as written. ``sub``: the query
+        is part of a larger statement (INSERT, CTAS, a MERGE source),
+        and its text is the union of its nodes' spans."""
         rels, nodes = _plan_walk(plan)
+        lo, hi = 0, len(s)
+        if sub:
+            spans = [sp for sp in map(_span, [n for _, n in nodes]
+                                      + [r for r, _, _ in rels]) if sp]
+            lo, hi = min(a for a, _ in spans), max(b for _, b in spans)
         edits: list[tuple[int, int, str]] = []
         made: set[str] = set()
         views: dict[tuple, str] = {}      # relation key -> view
@@ -1169,12 +1142,42 @@ class Catalog:
                         edits.append((a, b, ".".join(
                             [view] + [p if p == "*" else _ident(p)
                                       for p in tail])))
-        return self.spark.sql(_splice(s, edits))
+        return self.spark.sql(_splice(
+            s[lo:hi], [(a - lo, b - lo, t) for a, b, t in edits]))
+
+    # statement node -> handler; any other plan is a query
+    _ROUTES = {
+        "CreateNamespace": _create_namespace,
+        "CreateTable": _create_table,
+        "CreateTableAsSelect": _create_table,
+        "DropTable": _drop_table,
+        "TruncateTable": _truncate,
+        "DescribeRelation": _describe,
+        "DescribeColumn": _describe,
+        "ShowNamespacesCommand": _show_namespaces,
+        "ShowTables": _show_tables,
+        "ShowCreateTable": _show_create,
+        "ShowTableProperties": _show_properties,
+        "UpdateTable": _update,
+        "DeleteFromTable": _delete,
+        "InsertIntoStatement": _insert,
+        "MergeIntoTable": _merge_into,
+        "AddCheckConstraint": _add_constraint,
+        "DropConstraint": _drop_constraint,
+        "SetTableProperties": _set_properties,
+        "UnsetTableProperties": _unset_properties,
+        "AddColumns": _add_columns,
+        "DropColumns": _drop_columns,
+        "RenameColumn": _rename_column,
+        "AlterColumns": _alter_columns,
+        "Call": _call_procedure,
+    }
 
 
 def _parts(seq) -> list[str]:
     """A JVM ``Seq[String]`` of name parts as a list (one round trip)."""
-    return seq.mkString("\x1f").split("\x1f")
+    text = seq.mkString("\x1f")
+    return text.split("\x1f") if text else []
 
 
 def _flat(parts: list[str]) -> list[str]:
@@ -1189,7 +1192,11 @@ def _seq(seq) -> list:
 
 def _span(node) -> tuple[int, int] | None:
     """``[start, end)`` of the text a parsed node was read from; None
-    for the shared constants (``true``, ``false``) the parser reuses."""
+    for ``true`` and ``false``, one node each that the parser shares
+    between statements, so its origin belongs to another text."""
+    if node.nodeName() == "Literal" and \
+            node.dataType().typeName() == "boolean":
+        return None
     o = node.origin()
     a = o.startIndex()
     return (a.get(), o.stopIndex().get() + 1) if a.isDefined() else None
@@ -1264,350 +1271,92 @@ def _ts_ms(literal: str) -> int:
     return round(dt.timestamp() * 1000)
 
 
-def _call_value(v: str) -> object:
-    """One CALL argument value → python: quoted string, integer,
-    ``TIMESTAMP '...'`` (→ epoch ms, naive = UTC like TIMESTAMP AS OF),
-    or ``map('k','v', ...)`` (→ dict)."""
-    v = v.strip()
-    m = re.match(r"timestamp\s+'([^']+)'$", v, re.IGNORECASE)
-    if m:
-        return _ts_ms(m.group(1))
-    m = re.match(r"map\s*\((.*)\)$", v, re.IGNORECASE | re.DOTALL)
-    if m:
-        items = [_call_value(x) for x in _split_top(m.group(1))]
-        if len(items) % 2:
-            raise TableError(f"map() needs key/value pairs: {v!r}")
-        return dict(zip(items[::2], items[1::2]))
-    if len(v) >= 2 and v[0] == v[-1] and v[0] in "'\"":
-        return _unquote(v)
-    if re.match(r"-?\d+$", v):
-        return int(v)
-    return v
-
-
-def _unquote(x: str) -> str:
-    """Strip one layer of quotes and unescape: doubled quote chars
-    ('it''s') and backslash escapes round-trip (SHOW CREATE emits both).
-    The ONE unescaper shared by CALL argument values and TBLPROPERTIES —
-    a fix applied to one must not diverge from the other."""
-    x = x.strip()
-    if len(x) >= 2 and x[0] == x[-1] and x[0] in "'\"":
-        inner = x[1:-1].replace(x[0] * 2, x[0])
-        return re.sub(r"\\(.)", r"\1", inner)
-    return x
-
-
-def _parse_call_args(argstr: str) -> tuple[list[object], dict[str, object]]:
-    """Split a CALL argument list into (positional, named) — named uses
-    Iceberg's ``name => value`` arrows; values parsed by :func:`_call_value`."""
-    pos: list[object] = []
-    named: dict[str, object] = {}
-    for part in _split_top(argstr):
-        m = re.match(r"(\w+)\s*=>\s*(.+)$", part, re.DOTALL)
-        if m:
-            named[m.group(1).lower()] = _call_value(m.group(2))
-        else:
-            pos.append(_call_value(part))
-    return pos, named
-
-
-def _block_comment_end(t: str, i: int) -> int:
-    """Index just past the ``*/`` matching the block comment (or hint)
-    opening at ``i`` — nesting-aware (Spark 3.0+ bracketed comments
-    nest); an unterminated block runs to end of text. THE one depth
-    walker `_quoted_spans` and `_bt_masks` share (r11 wave 6: two
-    copies of this loop were one drift away from the wave-2 class of
-    span-corruption bug)."""
-    depth, j = 1, i + 2
-    n = len(t)
-    while j < n and depth:
-        if t.startswith("/*", j):
-            depth += 1
-            j += 2
-        elif t.startswith("*/", j):
-            depth -= 1
-            j += 2
-        else:
-            j += 1
-    return j
-
-
-def _hint_end(t: str, i: int) -> int:
-    """Index just past the ``*/`` closing the /*+ hint opening at ``i``
-    — the hint-body walk ``_bt_masks`` uses, mirroring construct-by-
-    construct what ``_quoted_spans`` lexes in-line (r11 wave 9: the two
-    previously used _block_comment_end here, which is backtick-blind,
-    so ``BROADCAST(`a*/b`)`` ended the hint early for one walker only
-    and desynced every downstream span). Spark lexes hint bodies as a
-    normal token stream, so a backticked identifier is atomic (its
-    ``*/`` is identifier text); a nested plain ``/* */`` block is
-    consumed atomically via the shared depth walker; a nested ``/*+``
-    nests. String literals are the caller's concern: _quoted_spans
-    records them in-line, and _bt_masks receives them pre-masked (a
-    literal's ``*/`` is already spaces). An unterminated hint runs to
-    end of text."""
-    depth, j = 1, i + 3
-    n = len(t)
-    while j < n and depth:
-        c = t[j]
-        if c == "`":
-            k = t.find("`", j + 1)
-            j = (n - 1 if k < 0 else k) + 1
-        elif t.startswith("/*+", j):
-            depth += 1
-            j += 3
-        elif t.startswith("/*", j):
-            j = _block_comment_end(t, j)
-        elif t.startswith("*/", j):
-            depth -= 1
-            j += 2
-        else:
-            j += 1
-    return j
-
-
-def _quoted_spans(s: str) -> list[tuple[int, int]]:
-    """(start, end) spans of single-/double-quoted literals in ``s``.
-    The ONE quote scanner every helper shares. Handles backslash escapes
-    (``'it\\'s'``) and SQL doubled quotes (``'it''s'`` scans as two
-    adjacent literals — same spans for our purposes).
-
-    Positional precedence with comments, hints and backticked
-    identifiers (r11 review wave 3): whichever construct OPENS first
-    consumes its span, so an apostrophe inside ``-- don't`` or inside
-    ``` `a'b` ``` is NOT a literal opener. The pre-r11 quotes-first scan
-    let a quote inside a comment open a phantom literal that masked the
-    comment's terminator — _strip_comments then leaked comment text
-    into the statement."""
-    spans: list[tuple[int, int]] = []
-    quote, start = None, 0
-    hint = 0  # /*+ hint */ nesting depth — see the /* branch below
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if quote:
-            if ch == "\\":
-                i += 2
-                continue
-            if ch == quote:
-                spans.append((start, i + 1))
-                quote = None
-        elif ch in "'\"":
-            quote, start = ch, i
-        elif ch == "`":
-            j = s.find("`", i + 1)
-            i = (n - 1 if j < 0 else j) + 1
-            continue
-        elif ch == "-" and i + 1 < n and s[i + 1] == "-" and not hint:
-            # `--` INSIDE a hint body is hint text, not a line comment
-            # (r11 wave 8): _bt_masks consumes the whole hint atomically
-            # via _block_comment_end, so treating `--` as a comment here
-            # desynchronized the two walkers — literals AFTER the hint
-            # lost quote protection and _strip_comments truncated at a
-            # `--` inside a post-hint literal.
-            j = s.find("\n", i)
-            i = n if j < 0 else j + 1
-            continue
-        elif ch == "/" and i + 1 < n and s[i + 1] == "*":
-            if s[i + 2:i + 3] == "+":
-                # /*+ HINT — TRANSPARENT to this scan (r11 wave 7): a
-                # hint argument naming a lakeshed relation must be
-                # rewritten along with the query (BROADCAST(nyc.t) has
-                # to follow the FROM clause's temp-view rename or Spark
-                # drops the hint), so only the STRING LITERALS inside a
-                # hint are protected (wave 4: FOO('a  b') payloads must
-                # not be collapsed or rewritten) — the scan lexes the
-                # body with the depth tracked so the closing */ is
-                # consumed at the same position _hint_end walks to for
-                # _bt_masks (r11 wave 9: the two walkers must agree
-                # construct-by-construct, not just end-to-end).
-                hint += 1
-                i += 2
-                continue
-            # plain comment — ATOMIC nesting-aware skip, in or out of a
-            # hint (r11 waves 4/9: ending at the first */ corrupted
-            # inner blocks; lexing a hint-nested comment char-by-char
-            # let an apostrophe inside it open a phantom literal)
-            i = _block_comment_end(s, i)
-            continue
-        elif hint and ch == "*" and i + 1 < n and s[i + 1] == "/":
-            hint -= 1
-            i += 2
-            continue
-        i += 1
-    if quote:
-        spans.append((start, n))
-    return spans
-
-
-def _mask_quotes(s: str) -> str:
-    """``s`` with every quoted literal replaced by spaces (same length)
-    — run detection regexes on the mask, slice/replace on the original."""
-    out = list(s)
-    for a, b in _quoted_spans(s):
-        for i in range(a, b):
-            out[i] = " "
-    return "".join(out)
-
-
-def _collapse_ws(s: str) -> str:
-    """Whitespace runs OUTSIDE string literals and backticked
-    identifiers collapsed to one space (case and content untouched) —
-    the router's statement-head regexes use single literal spaces
-    between keywords, so newlines and comment-blanked gaps must
-    normalize before matching (r11 fuzz), but a run inside ``'a  b'``
-    is data and ``` `a  b` ``` is a (hostile but legal) identifier.
-    Quote spans come from the raw text, backtick spans from the
-    quote-masked text (the shared :func:`_backtick_spans` scanner)."""
-    qspans = _quoted_spans(s)
-    ms_l = list(s)  # mask derived from the spans already in hand —
-    for a, b in qspans:  # calling _mask_quotes would re-scan (wave 5)
-        for i in range(a, b):
-            ms_l[i] = " "
-    protected = qspans + _backtick_spans("".join(ms_l))
-    # DEFENSIVE overlap merge: the r11 wave-3 interleaved lexer makes
-    # these span sets disjoint by construction (ticks win by position,
-    # and the backtick scan runs on the quote-masked text) — but an
-    # overlap once duplicated spliced text and corrupted statements
-    # (wave 2), so the 6-line invariant net stays against scanner drift
-    merged: list[tuple[int, int]] = []
-    for a, b in sorted(protected):
-        if merged and a < merged[-1][1]:
-            merged[-1] = (merged[-1][0], max(merged[-1][1], b))
-        else:
-            merged.append((a, b))
-    out, pos = [], 0
-    for a, b in merged:
-        out.append(re.sub(r"\s+", " ", s[pos:a]))
-        out.append(s[a:b])
-        pos = b
-    out.append(re.sub(r"\s+", " ", s[pos:]))
-    return "".join(out)
-
-
-def _backtick_spans(ms: str) -> list[tuple[int, int]]:
-    """Spans of backtick-quoted identifiers in a QUOTE-MASKED text
-    (an unterminated tick runs to end of text). Comment-blind by
-    design: callers that must interleave comment classification (a
-    backtick inside ``/* */`` is comment text) go through
-    :func:`_bt_masks`, the authoritative combined walker — this helper
-    serves the positions-only consumers (r11 review: three hand-rolled
-    copies of this walk risked drifting apart)."""
-    spans: list[tuple[int, int]] = []
-    i, n = 0, len(ms)
-    while i < n:
-        if ms[i] == "`":
-            j = ms.find("`", i + 1)
-            j = n - 1 if j < 0 else j
-            spans.append((i, j + 1))
-            i = j + 1
-        else:
-            i += 1
-    return spans
-
-
-def _strip_comments(s: str) -> str:
-    """``s`` with /* */ and -- comments blanked to spaces — string
-    literals and backticked identifiers are opaque (a ``--`` inside
-    either is data, not a comment). Derived FROM :func:`_bt_masks`
-    rather than re-walking the text: comment positions are exactly
-    where the combined walker's mcs diverges from the quote mask."""
-    ms = _mask_quotes(s)
-    mcs, _ = _bt_masks(ms)
-    return "".join(
-        " " if a != b else c for a, b, c in zip(ms, mcs, s)
-    )
-
-
-def _bt_masks(ms: str) -> tuple[str, str]:
-    """One left-to-right pass over quote-masked text classifying block
-    comments, line comments and backticked identifiers TOGETHER — a
-    ``--`` inside an identifier is identifier text, a backtick inside a
-    comment is comment text (r10 waves 11-12; two-regex ordering gets
-    one or the other wrong). Returns (mcs, mscan): comments blanked
-    with identifiers intact, and both blanked for position scanning."""
-    mcs = list(ms)
-    mscan = list(ms)
-    i, n = 0, len(ms)
-    while i < n:
-        ch = ms[i]
-        if ch == "`":
-            j = ms.find("`", i + 1)
-            j = n - 1 if j < 0 else j
-            for k in range(i, j + 1):
-                mscan[k] = " "
-            i = j + 1
-        elif ch == "/" and i + 1 < n and ms[i + 1] == "*":
-            # A /*+ HINT is syntactically a comment but a Spark
-            # directive: keep it in mcs (so _strip_comments preserves
-            # it verbatim) while blanking it in mscan (so position/
-            # keyword scans skip its text) — r11 waves 3/7. Its end is
-            # found by _hint_end (backtick-aware, r11 wave 9), plain
-            # comments by the nesting-aware shared walker (wave 4).
-            hint = i + 2 < n and ms[i + 2] == "+"
-            j = _hint_end(ms, i) if hint else _block_comment_end(ms, i)
-            for k in range(i, j):
-                if hint:
-                    mscan[k] = " "
-                else:
-                    mcs[k] = mscan[k] = " "
-            i = j
-        elif ch == "-" and i + 1 < n and ms[i + 1] == "-":
-            j = ms.find("\n", i)
-            j = n if j < 0 else j
-            for k in range(i, j):
-                mcs[k] = mscan[k] = " "
-            i = j
-        else:
-            i += 1
-    return "".join(mcs), "".join(mscan)
-
-
-def _split_where(s: str) -> tuple[str, str | None]:
-    """Split ``<expr list> [WHERE <pred>]`` at the first top-level WHERE
-    keyword OUTSIDE quotes/parens; returns (head, predicate-or-None)."""
-    masked = _mask_quotes(s)
-    low = masked.lower()
-    depth = 0
-    for i, ch in enumerate(masked):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif (depth == 0 and low.startswith("where", i)
-              and (i == 0 or not (low[i - 1].isalnum() or low[i - 1] == "_"))
-              and (i + 5 == len(low)
-                   or not (low[i + 5].isalnum() or low[i + 5] == "_"))):
-            return s[:i].strip(), s[i + 5:].strip() or None
-    return s.strip(), None
-
-
 def _split_top(s: str) -> list[str]:
-    """Split on commas not nested in parens/quotes (UPDATE SET lists) —
-    comma positions come from the quote-masked text (shared scanner, so
-    escaped quotes behave identically everywhere)."""
-    masked = _mask_quotes(s)
+    """Split a ``rewrite_data_files`` sort order on the commas outside
+    parens (``a DESC, zorder(b, c)``) — data, not SQL."""
     out, depth, start = [], 0, 0
-    for i, ch in enumerate(masked):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
+    for i, ch in enumerate(s):
+        depth += (ch == "(") - (ch == ")")
+        if ch == "," and depth == 0:
             out.append(s[start:i])
             start = i + 1
     out.append(s[start:])
     return [p for p in (x.strip() for x in out) if p]
 
 
-def _parse_props(s: str | None) -> dict[str, str]:
-    """TBLPROPERTIES list — 'k'='v', 'k2'='v2' — to a dict; doubled
-    quotes inside quoted values unescape via the shared :func:`_unquote`
-    (round-trips SHOW CREATE)."""
-    out: dict[str, str] = {}
-    for part in _split_top(s or ""):
-        if not part.strip():
+# Spark's parser rejects the TBLPROPERTIES keys it reserves (owner,
+# location, provider); lakeshed stores them like any other, so a
+# statement carrying one re-parses with this prefix inside every quoted
+# key and the property handlers take it off again
+_KEY = "__lakeshed_key__:"
+
+# parsed nodes that carry a name, and the method that returns its parts
+_NAMED = {
+    "UnresolvedRelation": "multipartIdentifier",
+    "UnresolvedTable": "multipartIdentifier",
+    "UnresolvedTableOrView": "multipartIdentifier",
+    "UnresolvedNamespace": "multipartIdentifier",
+    "UnresolvedIdentifier": "nameParts",
+    "UnresolvedProcedure": "nameParts",
+}
+
+
+def _name_parts(plan) -> list[str]:
+    """The name parts of the table (namespace, procedure) a statement
+    names: the first named node down its first children; [] for none."""
+    node = plan
+    while node.nodeName() not in _NAMED:
+        kids = node.children()
+        if kids.isEmpty():
+            return []
+        node = kids.apply(0)
+    return _parts(getattr(node, _NAMED[node.nodeName()])())
+
+
+def _props(m) -> dict[str, str]:
+    """A parsed property map as a dict, each key out of its ``_KEY``
+    disguise."""
+    return {kv._1().removeprefix(_KEY): kv._2() for kv in _seq(m.toSeq())}
+
+
+def _disguised(s: str, toks: list[tuple[str, int, int]]) -> str | None:
+    """``s`` with ``_KEY`` inside each quoted key of a TBLPROPERTIES
+    list (``toks``: its tokens as ``(text, start, end)``), or None when
+    it has none."""
+    edits = []
+    for i, (t, _, _) in enumerate(toks):
+        if t.upper() != "TBLPROPERTIES":
             continue
-        k, _, v = part.partition("=")
-        out[_unquote(k)] = _unquote(v)
-    return out
+        depth = 0
+        for j in range(i + 1, len(toks)):
+            x, a, _ = toks[j]
+            depth += (x == "(") - (x == ")")
+            if depth == 0:
+                break
+            if depth == 1 and toks[j - 1][0] in ("(", ",") and x[0] in "'\"":
+                edits.append((a + 1, a + 1, _KEY))
+    return _splice(s, edits) if edits else None
+
+
+def _spec_entry(transform) -> str:
+    """A parsed PARTITIONED BY transform as a partition-spec entry: the
+    column for identity, else Spark's ``name(args)`` with the name
+    lower-cased (``bucket(4, a)``)."""
+    name, text = transform.name().lower(), transform.toString()
+    return text[len(name) + 1:-1] if name == "identity" \
+        else name + text[len(name):]
+
+
+def _unquote_ident(t: str) -> str:
+    """One identifier token's name: a backticked one unquoted."""
+    return t[1:-1].replace("``", "`") if t.startswith("`") else t
+
+
+def _position(opt) -> dict[str, object]:
+    """A parsed ``FIRST`` / ``AFTER c`` (a Scala ``Option``) as the
+    ``add_column`` / ``alter_column`` keywords."""
+    if opt.isEmpty():
+        return {}
+    p = opt.get().position()
+    return {"first": True} if p.toString() == "FIRST" else {
+        "after": p.column()}

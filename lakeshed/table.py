@@ -1598,7 +1598,8 @@ class LakeTable:
         ``read().where(...)`` — only I/O differs. At 100 TB this prunes at
         METADATA cost, before Spark's own partition/row-group pruning."""
         v = self.head() if version is None else version
-        commit, _ = self._state(v)
+        # the schema from v's own commit: plan_files walks the chain once
+        commit = self._read_commit(v)
         kept = self.plan_files(where, version=v)
         df = self._read_adds(commit, kept)
         if where is not None:
@@ -1665,7 +1666,7 @@ class LakeTable:
                 )
 
         v = self.head() if version is None else version
-        commit, _ = self._state(v)
+        commit = self._read_commit(v)
         kept = self.plan_files(where, version=v)
         cur = commit.schemas[str(commit.schema_version)]
         out_fields = list(cur)

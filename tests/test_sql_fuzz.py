@@ -13,11 +13,14 @@ canonical spelling's result (value-compare, not just "did not raise":
 a spelling that silently falls through to stock spark.sql on a temp
 view would return differently-shaped data and fail here).
 
-Mutation sensitivity (verified during development, r11): reverting the
-router's top-of-``sql()`` comment-strip (the generalization of the r10
-wave-14 DESCRIBE fix) fails the comment-bearing spellings of every
-class below; dropping backtick tolerance from any statement-head name
-pattern fails that class's ticked spellings.
+Mutation sensitivity: the router reads every statement through Spark's
+own parser and takes names, values and predicates off the parsed node,
+so comments, case and quoting never reach a statement-head pattern.
+Handing DML a predicate's raw span (comments and all) instead of its
+comment-blanked text turns stats pruning off for the comment-bearing
+spellings (``test_comment_inside_predicate_keeps_pruning``); the
+comment- and hint-shaped statements below run end to end where they once
+asserted on the deleted hand-written lexer.
 
 r12 (VERDICT r11 #8 — grow the corpus instead of bolting on regexes):
 generative classes for stateful DML CHAINS (random statement sequences
@@ -136,6 +139,22 @@ def _rows(cat: Catalog, name: str = "nyc.fz"):
     return sorted(
         (r.k, r.v) for r in cat.table(name).read().collect()
     )
+
+
+@pytest.fixture()
+def views(spark):
+    """Make the temp views a statement text reads (``t``, ``s``, ``x``)
+    from ``name=(ddl, rows)``; dropped after the test."""
+    made: list[str] = []
+
+    def make(**rows) -> None:
+        for name, (ddl, data) in rows.items():
+            spark.createDataFrame(data, ddl).createOrReplaceTempView(name)
+            made.append(name)
+
+    yield make
+    for name in made:
+        spark.catalog.dropTempView(name)
 
 
 def _spy_spark_sql(monkeypatch, spark) -> list[str]:
@@ -332,24 +351,26 @@ def test_fuzz_time_travel(fcat, spark):
         assert cat.sql(stmt).first().c == canon, stmt
 
 
-def test_quoted_comments_and_hints(fcat, spark):
+def test_quoted_comments_and_hints(fcat, spark, monkeypatch, views):
     """r11 review wave 3: an apostrophe inside a comment must not open
     a phantom string literal (pre-fix it masked the comment terminator
     and leaked comment text into the statement), and /*+ ... */
     optimizer hints — syntactically comments, semantically Spark
-    directives — must survive the router's comment strip."""
-    from lakeshed.catalog import _collapse_ws, _strip_comments
-
+    directives — must reach Spark."""
     cat = fcat
     _reset(cat, spark)
+    views(t=("k int, a int, b int", [(3, 1, 2), (1, 1, 2), (2, 1, 2)]),
+          s=("k int", [(1,), (2,)]))
+    sent = _spy_spark_sql(monkeypatch, spark)
 
     s = "SELECT k FROM t WHERE k > 0 -- don't touch\nORDER BY k"
-    assert _collapse_ws(_strip_comments(s)) == \
-        "SELECT k FROM t WHERE k > 0 ORDER BY k"
+    assert [r.k for r in cat.sql(s).collect()] == [1, 2, 3]
     s = "-- can't parse\nSELECT a, b FROM t"
-    assert _collapse_ws(_strip_comments(s)).strip() == "SELECT a, b FROM t"
+    assert cat.sql(s).columns == ["a", "b"]
     hint = "SELECT /*+ BROADCAST(s) */ t.k FROM t JOIN s ON t.k = s.k"
-    assert _strip_comments(hint) == hint
+    df = cat.sql(hint)
+    assert sent[-1] == hint
+    assert "Broadcast" in df._jdf.queryExecution().executedPlan().toString()
 
     # end-to-end: quoted comment on a routed statement
     assert cat.sql(
@@ -442,29 +463,30 @@ def test_fuzz_ctas(fcat, spark):
             ["a", "b"], stmt
 
 
-def test_nested_comments_and_hint_payloads(fcat, spark, monkeypatch):
-    """r11 review wave 4: bracketed comments nest in Spark 3.0+ — the
-    strip must track depth, not stop at the first */ — and a preserved
-    /*+ hint's payload (string literals, spacing, relation-name-shaped
-    text) must be opaque to every rewrite and collapse."""
-    from lakeshed.catalog import _collapse_ws, _strip_comments
-
+def test_nested_comments_and_hint_payloads(fcat, spark, monkeypatch,
+                                           views):
+    """r11 review wave 4: bracketed comments nest in Spark 3.0+ — a
+    comment ends at its own */, not the first — and a /*+ hint's
+    payload (string literals, spacing, relation-name-shaped text) must
+    be opaque to every rewrite."""
     cat = fcat
     _reset(cat, spark)
+    views(t=("k int", [(1,), (2,)]))
+    sent = _spy_spark_sql(monkeypatch, spark)
 
-    # nested block comments strip wholly
+    # nested block comments are one comment
     s = "SELECT 1 AS x /* outer /* inner */ tail */ FROM t"
-    assert _collapse_ws(_strip_comments(s)) == "SELECT 1 AS x FROM t"
+    assert [tuple(r) for r in cat.sql(s).collect()] == [(1,), (1,)]
     assert cat.sql(
         "SELECT count(*) AS c /* o /* i */ t */ FROM nyc.fz"
     ).first().c == 3
 
-    # hint payloads survive strip + collapse verbatim
+    # hint payloads reach Spark verbatim
     h = "SELECT /*+ FOO('a  b') */ k FROM t"
-    assert _collapse_ws(_strip_comments(h)) == h
+    assert cat.sql(h).count() == 2
+    assert sent[-1] == h
     # ...and are invisible to relation rewriting: the literal inside the
     # hint's arguments stays a literal, and the query still runs
-    sent = _spy_spark_sql(monkeypatch, spark)
     assert cat.sql(
         "SELECT /*+ F('nyc.fz') */ 1 FROM nyc.fz").count() == 3
     assert sent[-1] == "SELECT /*+ F('nyc.fz') */ 1 FROM __lakeshed_nyc_fz"
@@ -509,14 +531,13 @@ def test_wave6_glued_values_qualified_ticks_paren_literal(fcat, spark):
 
 
 def test_hint_relation_args_follow_relation_rewrite(fcat, spark,
-                                                     monkeypatch):
+                                                     monkeypatch, views):
     """r11 review wave 7: a hint argument naming a lakeshed relation
     must follow the FROM clause's temp-view rename (or Spark drops the
     hint) — while string literals inside hints stay protected."""
-    from lakeshed.catalog import _collapse_ws, _strip_comments
-
     cat = fcat
     _reset(cat, spark)
+    views(t=("k int", [(1,), (2,)]))
     sent = _spy_spark_sql(monkeypatch, spark)
 
     # relation-shaped hint args are rewritten with the query...
@@ -526,7 +547,8 @@ def test_hint_relation_args_follow_relation_rewrite(fcat, spark,
         "SELECT /*+ BROADCAST(__lakeshed_nyc_fz) */ 1 FROM __lakeshed_nyc_fz")
     # ...but quoted payloads inside hints remain opaque
     h = "SELECT /*+ FOO('a  b') */ k FROM t"
-    assert _collapse_ws(_strip_comments(h)) == h
+    assert cat.sql(h).count() == 2
+    assert sent[-1] == h
     assert cat.sql(
         "SELECT /*+ F('nyc.fz') */ 1 FROM nyc.fz").count() == 3
     assert sent[-1] == "SELECT /*+ F('nyc.fz') */ 1 FROM __lakeshed_nyc_fz"
@@ -542,33 +564,27 @@ def test_hint_relation_args_follow_relation_rewrite(fcat, spark,
     assert df.count() == 2
 
 
-def test_wave8_hint_comment_desync_and_merge_scoping(fcat, spark):
-    """r11 review wave 8. (a) ``--`` inside a /*+ hint body is hint
-    text: _quoted_spans treating it as a line-comment opener
-    desynchronized it from _bt_masks (which consumes the hint
-    atomically), so literals AFTER the hint lost quote protection —
-    `'x  y'` collapsed and `'it -- matters'` was truncated mid-literal.
-    (b) MERGE target-spelling normalization is scoped to the tail after
-    the source clause — identifiers inside the USING subquery that
-    merely SPELL the target name stay untouched. (c) A spelling whose
+def test_wave8_hint_comment_desync_and_merge_scoping(fcat, spark,
+                                                    monkeypatch, views):
+    """r11 review wave 8. (a) A plain comment nested in a /*+ hint body
+    ends where Spark's lexer ends it, and literals AFTER the hint keep
+    their text (``'p  q'`` is not collapsed). (b) MERGE target-spelling
+    normalization is scoped to the tail after the source clause —
+    identifiers inside the USING subquery that merely SPELL the target
+    name stay untouched. (c) A spelling whose
     leading identifier names a source/target column is a struct path,
     not a table ref — the rewrite is skipped. (d) The subquery
     balanced-paren scan blanks backticked identifiers, so a paren
     inside `x(y` cannot swallow the ON/WHEN tail."""
-    from lakeshed.catalog import _collapse_ws, _quoted_spans, _strip_comments
-
     cat = fcat
     _reset(cat, spark)
+    views(t=("k int", [(1,)]))
+    sent = _spy_spark_sql(monkeypatch, spark)
 
-    # (a) helper level: post-hint literals keep quote protection
-    s = "SELECT /*+ F(a--b) */ 'x  y' AS v FROM t"
-    assert _collapse_ws(_strip_comments(s)) == s
-    assert _quoted_spans(s) == [(22, 28)]
-    s2 = "SELECT /*+ F(a--b) */ 'it -- matters' AS v FROM t"
-    assert _collapse_ws(_strip_comments(s2)) == s2
-    # nested plain block inside a hint tracks depth past its */
+    # (a) nested plain block inside a hint tracks depth past its */
     s3 = "SELECT /*+ F(/* x */a) */ 'p  q' AS v FROM t"
-    assert _collapse_ws(_strip_comments(s3)) == s3
+    assert cat.sql(s3).first().v == "p  q"
+    assert sent[-1] == s3
 
     # (d) backticked alias containing a paren inside the USING subquery
     cat.sql(
@@ -847,47 +863,35 @@ def test_fuzz_branch_and_timestamp_travel(fcat, spark):
         assert cat.sql(stmt).first().c == canon_b, stmt
 
 
-def test_wave9_hint_nested_comment_and_shadow_guard_with_ticks(fcat, spark):
+def test_wave9_hint_nested_comment_and_shadow_guard_with_ticks(
+        fcat, spark, monkeypatch, views):
     """r11 review wave 9. (a) A plain /* */ comment nested inside a /*+
-    hint is consumed atomically — lexing it char-by-char let an
-    apostrophe inside it open a phantom literal that corrupted post-hint
-    literals (a wave-8 regression). (b) A backticked identifier whose
-    text contains */ does not end the hint early for either walker
-    (_quoted_spans and _bt_masks now share construct-by-construct hint
-    lexing via _hint_end). (c) The column-shadow guard holds even when
+    hint is one comment — an apostrophe inside it opens no phantom
+    literal that would corrupt post-hint literals. (b) A backticked
+    identifier whose text contains */ does not end the hint early, in a
+    query or in a MERGE source subquery. (c) The column-shadow guard holds even when
     the tail contains a backtick: the whole-ticked catalog-less-tail
     spelling no longer carries a plain alternative under the wrong
     guard lead."""
-    from lakeshed.catalog import (
-        _bt_masks,
-        _collapse_ws,
-        _mask_quotes,
-        _quoted_spans,
-        _strip_comments,
-    )
-
     cat = fcat
     _reset(cat, spark)
+    views(t=("k int", [(1,)]), x=("k int", [(1,)]))
+    sent = _spy_spark_sql(monkeypatch, spark)
 
     # (a) apostrophe inside a hint-nested plain comment
     s = "SELECT /*+ F(/* don't */ a) */ 'x  y' AS v FROM t"
-    assert _quoted_spans(s) == [(31, 37)]
-    assert _collapse_ws(_strip_comments(s)) == s
+    assert cat.sql(s).first().v == "x  y"
+    assert sent[-1] == s
 
-    # (b) `a*/b` inside a hint: both walkers reach the real closing */
+    # (b) `a*/b` inside a hint: the hint ends at the real closing */
     h = "SELECT /*+ F(`a*/b`) */ 'x  y' AS v FROM t"
-    assert _quoted_spans(h) == [(24, 30)]
-    assert _collapse_ws(_strip_comments(h)) == h
-    # ...and the MERGE paren scan's mask still closes the subquery
+    assert cat.sql(h).first().v == "x  y"
+    assert sent[-1] == h
+    # ...and a MERGE source subquery holding it still closes
     w = "(SELECT /*+ F(`a*/b(`) */ k FROM x) tail"
-    sc = _bt_masks(_mask_quotes(w))[1]
-    depth = 0
-    for i, ch in enumerate(sc):
-        depth += ch == "("
-        depth -= ch == ")"
-        if depth == 0:
-            break
-    assert w[i] == ")" and w[i + 1:].strip() == "tail"
+    cat.sql(f"MERGE INTO nyc.fz t USING {w} ON t.k = tail.k "
+            "WHEN MATCHED THEN UPDATE SET v = 'M'")
+    assert (1, "M") in _rows(cat)
 
     # (c) has_tick via t.`k` must not re-admit the plain nyc.fz spelling
     # past the shadow guard (source column `nyc` shadows it)
@@ -1209,3 +1213,128 @@ def test_fuzz_branch_constraint_chains(fcat, spark):
         # main never saw a branch write in any chain
         main, br = state("nyc.bca")
         assert all(k < 40 or (40 <= k < 60) for k, _ in main), main
+
+
+# ------------------------------------------------- one parse per statement
+
+
+def test_names_keep_their_case(fcat, spark):
+    """Column and branch names in ALTER TABLE keep the case they are
+    written in, as table names do on every route."""
+    cat = fcat
+    t = cat.create_table("nyc.cased", spark.createDataFrame(
+        [(1, 2.0)], "VendorID int, fare double"))
+    cat.sql("ALTER TABLE nyc.cased ADD COLUMN TripDistance double")
+    assert [f.name for f in t.schema_fields()] == \
+        ["VendorID", "fare", "TripDistance"]
+    cat.sql("ALTER TABLE nyc.cased ALTER COLUMN VendorID TYPE bigint")
+    assert t.schema_fields()[0].type == "bigint"
+    cat.sql("ALTER TABLE nyc.cased RENAME COLUMN VendorID TO vendor_id")
+    assert t.schema_fields()[0].name == "vendor_id"
+    cat.sql("ALTER TABLE nyc.cased CREATE BRANCH Audit")
+    assert set(t.branches()) == {"main", "Audit"}
+    # the pin lands on the branch the DDL made, auto-creating no other
+    cat.set_conf("spark.wap.branch", "Audit")
+    try:
+        cat.sql("INSERT INTO nyc.cased VALUES (2, 3.0, 1.5)")
+    finally:
+        cat.set_conf("spark.wap.branch", None)
+    assert set(t.branches()) == {"main", "Audit"}
+    assert t.read(branch="Audit").count() == 2
+
+
+def test_if_exists_clauses_are_honoured(fcat, spark):
+    """DROP TABLE and CREATE DATABASE raise on a missing table and an
+    existing database; their IF [NOT] EXISTS forms are no-ops."""
+    from lakeshed.table import TableError
+
+    cat = fcat
+    with pytest.raises(TableError):
+        cat.sql("CREATE DATABASE nyc")
+    cat.sql("CREATE DATABASE IF NOT EXISTS nyc")
+    with pytest.raises(TableError):
+        cat.sql("DROP TABLE nyc.missing")
+    cat.sql("DROP TABLE IF EXISTS nyc.missing")
+    cat.sql("CREATE TABLE nyc.gone (k int)")
+    cat.sql("DROP TABLE nyc.gone")
+    assert not cat._exists("nyc.gone")
+
+
+def test_each_statement_is_parsed_once(fcat, spark, monkeypatch):
+    """Spark's parser reads a statement once, whatever its route — the
+    query inside an INSERT, a CTAS or a MERGE source included."""
+    cat = fcat
+    _reset(cat, spark)
+    seen: list[str] = []
+    real = Catalog._parse
+
+    def spy(self, text):
+        seen.append(text)
+        return real(self, text)
+
+    monkeypatch.setattr(Catalog, "_parse", spy)
+    for stmt in (
+        "SELECT count(*) AS c FROM nyc.fz WHERE k > 1",
+        "MERGE INTO nyc.fz t USING (SELECT 2 AS k, 'B' AS v) s "
+        "ON t.k = s.k WHEN MATCHED THEN UPDATE SET v = s.v",
+        "UPDATE nyc.fz SET v = 'U' WHERE k = 1",
+        "CALL demo.system.rewrite_data_files(table => 'nyc.fz')",
+        "INSERT INTO nyc.fz SELECT k + 10, v FROM nyc.fz",
+        "CREATE TABLE nyc.once AS SELECT * FROM nyc.fz",
+    ):
+        seen.clear()
+        cat.sql(stmt)
+        assert seen == [stmt]
+
+
+def test_comment_inside_predicate_keeps_pruning(fcat, spark, monkeypatch):
+    """A comment inside an UPDATE or DELETE predicate changes nothing:
+    the stats pruning keeps the same candidate files as for the
+    comment-free text (handed over raw, the predicate would not parse
+    for pruning and every file would be a candidate)."""
+    from lakeshed.table import LakeTable
+
+    cat = fcat
+    t = cat.create_table("nyc.cm", spark.createDataFrame(
+        [(0, "a")], "k int, v string"))
+    for k in (10, 20, 30):
+        t.append(spark.createDataFrame([(k, "a")], "k int, v string"))
+    kept: list[int] = []
+    real = LakeTable._prune
+
+    def spy(self, *a):
+        out = real(self, *a)
+        kept.append(len(out))
+        return out
+
+    monkeypatch.setattr(LakeTable, "_prune", spy)
+    for stmts, files in (
+        (["UPDATE nyc.cm SET v = 'u' WHERE k = 20",
+          "UPDATE nyc.cm SET v = 'u' WHERE k = /* c */ 20",
+          "UPDATE nyc.cm SET v = 'u' WHERE k -- c\n = 20"], 1),
+        (["DELETE FROM nyc.cm WHERE k = 5",
+          "DELETE FROM nyc.cm WHERE k = /* c */ 5"], 0),
+    ):
+        kept.clear()
+        for stmt in stmts:
+            cat.sql(stmt)
+        assert kept == [files] * len(stmts), stmts
+    assert sorted((r.k, r.v) for r in t.read().collect()) == \
+        [(0, "a"), (10, "a"), (20, "u"), (30, "a")]
+
+
+def test_predicates_keep_their_left_operand(fcat, spark):
+    """A LIKE / IN / BETWEEN node's own span starts at its keyword: MERGE
+    and DELETE conditions still read from the left operand on, a
+    parenthesized one included."""
+    cat = fcat
+    src = "(SELECT 1 AS k, 'X1' AS v UNION ALL SELECT 2, 'Y2') s"
+    for cond, want in (("s.v LIKE 'X%'", [(1, "X1"), (2, "b"), (3, "c")]),
+                       ("t.k IN (2, 3)", [(1, "a"), (2, "Y2"), (3, "c")])):
+        _reset(cat, spark)
+        cat.sql(f"MERGE INTO nyc.fz t USING {src} ON t.k = s.k "
+                f"WHEN MATCHED AND {cond} THEN UPDATE SET v = s.v")
+        assert _rows(cat) == want, cond
+    _reset(cat, spark)
+    cat.sql("DELETE FROM nyc.fz WHERE (k + 1) BETWEEN 3 AND 4")
+    assert _rows(cat) == [(1, "a")]

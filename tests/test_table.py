@@ -1823,15 +1823,18 @@ def test_review_fixes_round8_wave2(cat, nation, spark):
 
 
 def test_quote_scanner_handles_escapes(cat, spark, monkeypatch):
-    """Backslash-escaped and doubled quotes must not desynchronize the
-    shared quote scanner, and a table name inside an escaped literal
-    stays data while the relation after it is rewritten."""
-    from lakeshed.catalog import _split_where
-
-    head, pred = _split_where(r"msg = 'don\'t stop' where k = 1")
-    assert head == r"msg = 'don\'t stop'" and pred == "k = 1"
-    head, pred = _split_where("msg = 'it''s a where clause'")
-    assert head == "msg = 'it''s a where clause'" and pred is None
+    """Backslash-escaped and doubled quotes end no literal early: a
+    WHERE inside one is data, not the UPDATE's predicate, and a table
+    name inside an escaped literal stays data while the relation after
+    it is rewritten."""
+    cat.create_database("db")
+    t = cat.create_table("db.msgs", spark.createDataFrame(
+        [(1, "a"), (2, "b")], "k int, msg string"))
+    cat.sql(r"UPDATE db.msgs SET msg = 'don\'t stop' where k = 1")
+    assert sorted((r.k, r.msg) for r in t.read().collect()) == \
+        [(1, "don't stop"), (2, "b")]
+    cat.sql("UPDATE db.msgs SET msg = 'it''s a where clause'")
+    assert {r.msg for r in t.read().collect()} == {"it's a where clause"}
 
     cat.create_database("nyc")
     cat.create_table("nyc.taxis", spark.createDataFrame([(1,)], "k int"))
@@ -2054,13 +2057,17 @@ def test_catalog_prefix_strip_spares_struct_paths(cat, spark):
 
 def test_call_value_unescapes_doubled_quotes(cat, spark):
     """r9 ADVICE (low): quoted CALL argument values round-trip SQL
-    doubled quotes ('it''s' → it's), like _parse_props already does."""
-    from lakeshed.catalog import _parse_call_args
-    pos, named = _parse_call_args("table => 'db.it''s', retain_last => 2")
-    assert named["table"] == "db.it's"
-    assert named["retain_last"] == 2
-    pos2, _ = _parse_call_args("'a''b''c'")
-    assert pos2 == ["a'b'c"]
+    doubled quotes ('it''s' → it's), like TBLPROPERTIES values do."""
+    cat.create_database("db")
+    df = spark.createDataFrame([(1,)], "k int")
+    for name in ("db.it's", "db.a'b'c"):
+        cat.create_table(name, df).append(df)
+    out = cat.sql("CALL system.expire_snapshots("
+                  "table => 'db.it''s', retain_last => 2)")
+    assert out.first()["deleted_snapshots_count"] == 0
+    out = cat.sql("CALL system.rewrite_manifests('db.a''b''c')")
+    assert out.first()["checkpointed_version"] == \
+        cat.table("db.a'b'c").head()
 
 
 def test_both_pins_raise_without_wap_enabled_property(cat, spark):
@@ -3012,18 +3019,16 @@ def test_stale_low_head_hint_never_allocates_below_parent(cat, spark):
 
 def test_collapse_ws_quote_inside_backticks(cat, spark):
     """r11 review: a quote character inside a backticked identifier
-    makes the quote-span and backtick-span scans overlap; the splice
-    must merge them instead of emitting the contained region twice."""
-    from lakeshed.catalog import _collapse_ws
-
-    for stmt in ("SELECT k AS `it's` FROM t",
-                 "SELECT `a 'x' b` FROM t"):
-        assert _collapse_ws(stmt) == stmt, stmt
-    # since the r11 wave-3 interleaved lexer the tick span wins by
-    # position, the apostrophe never opens a phantom literal, and the
-    # tail collapses normally
-    assert _collapse_ws("SELECT  k  AS `it's`  FROM\n t") == \
-        "SELECT k AS `it's` FROM t"
+    opens no string literal — the statement reaches Spark intact."""
+    spark.createDataFrame([(1, 2)], "k int, `a 'x' b` int") \
+        .createOrReplaceTempView("t")
+    try:
+        for stmt, col in (("SELECT k AS `it's` FROM t", "it's"),
+                          ("SELECT `a 'x' b` FROM t", "a 'x' b"),
+                          ("SELECT  k  AS `it's`  FROM\n t", "it's")):
+            assert cat.sql(stmt).columns == [col], stmt
+    finally:
+        spark.catalog.dropTempView("t")
     # end-to-end through the router: the statement reaches spark intact
     row = cat.sql("SELECT 'v' AS `it's`").first()
     assert row["it's"] == "v"
@@ -3174,3 +3179,26 @@ def test_head_hint_write_is_atomic_under_contention(cat, spark, monkeypatch):
         th.join()
     assert not errs
     assert t._read_head_hint() == max(vals)
+
+
+def test_scan_and_to_arrow_walk_the_commit_log_once(cat, spark, monkeypatch):
+    """A pruned scan / to_arrow replays the commit chain once — the plan
+    — and takes the schema from the read version's own commit."""
+    t = cat.create_table("default.walks", spark.createDataFrame(
+        [(1, "a")], "k int, v string"))
+    t.append(spark.createDataFrame([(2, "b")], "k int, v string"))
+    walks: list[int] = []
+    real = LakeTable._chain
+
+    def spy(self, version, *a, **kw):
+        walks.append(version)
+        return real(self, version, *a, **kw)
+
+    monkeypatch.setattr(LakeTable, "_chain", spy)
+    per_read = []
+    for read in (lambda: t.scan("k = 1").count(),
+                 lambda: t.to_arrow("k = 1").num_rows):
+        walks.clear()
+        assert read() == 1
+        per_read.append(len(walks))
+    assert per_read == [1, 1]
