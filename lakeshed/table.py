@@ -944,6 +944,15 @@ class LakeTable:
                     cls._TIME_FORMATS[unit])
         return f"{m.group(4)}_bucket", "bigint", m.group(4), int(m.group(3))
 
+    @classmethod
+    def _spec_sources(cls, spec: list[str], identity: bool = False
+                      ) -> set[str]:
+        """Lower-cased source columns of ``spec``'s entries (of its
+        identity entries only, with ``identity``). Lower-cased because
+        Spark resolves them case-insensitively in :meth:`_apply_spec`."""
+        return {(e if tr is None else tr[2]).lower() for e in spec
+                if (tr := cls._transform(e)) is None or not identity}
+
     def _apply_spec(self, df: DataFrame, spec: list[str]
                     ) -> tuple[DataFrame, list[str]]:
         """Resolve a partition spec to concrete partition columns.
@@ -1199,23 +1208,46 @@ class LakeTable:
         return max(f.id for fields in schemas.values() for f in fields) + 1
 
     def _evolve(self, operation: str, new_fields: list[Field],
-                summary: dict[str, Any]) -> Commit:
+                summary: dict[str, Any], rename: tuple[str, str] | None = None
+                ) -> Commit:
         head = self.head()
         head_commit = self._read_commit(head)
         sv = head_commit.schema_version + 1
         schemas = dict(head_commit.schemas)
         schemas[str(sv)] = new_fields
+        spec = None
+        if rename is not None:
+            # spec entries name their source column: the rename rewrites
+            # them in the same commit, or every later write would
+            # partition by a column the schema no longer has
+            spec = [self._rename_source(e, *rename)
+                    for e in head_commit.partition_spec]
         # pinned: sv and the schemas dict were derived from `head` — a
         # concurrent schema commit would otherwise be overwritten with
         # two commits claiming the same schema_version (field-id chaos)
         return self._commit(
             operation, [], [], schema_version=sv, schemas=schemas,
-            summary=summary, **self._pinned(head),
+            partition_spec=spec, summary=summary, **self._pinned(head),
         )
+
+    @classmethod
+    def _rename_source(cls, entry: str, old: str, new: str) -> str:
+        """Partition-spec ``entry`` with source column ``old`` named
+        ``new``; other entries unchanged."""
+        if old.lower() not in cls._spec_sources([entry]):
+            return entry
+        tr = cls._transform(entry)
+        if tr is None:
+            return new
+        if isinstance(tr[3], int):
+            return f"bucket({tr[3]}, {new})"
+        unit = next(u for u, f in cls._TIME_FORMATS.items() if f == tr[3])
+        return f"{unit}({new})"
 
     def rename_column(self, old: str, new: str) -> Commit:
         """D6 — metadata-only rename by field id (Getting Started.ipynb:123);
-        existing data files are untouched and re-mapped at read time."""
+        existing data files are untouched and re-mapped at read time.
+        Partition-spec entries on the column follow the rename."""
         fields = [
             Field(f.id, new if f.name == old else f.name, f.type, f.nullable,
                   f.comment)
@@ -1223,7 +1255,8 @@ class LakeTable:
         ]
         if all(f.name != new for f in fields):
             raise TableError(f"no column {old!r}")
-        return self._evolve("rename-column", fields, {"rename": f"{old}->{new}"})
+        return self._evolve("rename-column", fields,
+                            {"rename": f"{old}->{new}"}, rename=(old, new))
 
     def alter_column(
         self, name: str, *, type: str | None = None,  # noqa: A002
@@ -1287,6 +1320,11 @@ class LakeTable:
             # rename/alter raise on unknown columns; a silent no-op
             # commit here would hide a typo'd (or wrong-case) name
             raise TableError(f"no column {name!r}")
+        spec = self._read_commit(self.head()).partition_spec
+        if name.lower() in self._spec_sources(spec):
+            raise TableError(
+                f"column {name!r} is a partition source ({', '.join(spec)});"
+                " drop its partition field first")
         fields = [f for f in self.schema_fields() if f.name != name]
         return self._evolve("drop-column", fields, {"drop": name})
 
@@ -1513,6 +1551,27 @@ class LakeTable:
             parts.append(adapted)
         return reduce(DataFrame.unionByName, parts)
 
+    def _read_rewrite(self, commit: Commit, adds: list[AddFile]) -> DataFrame:
+        """A copy-on-write rewrite set, read with one scan split per file.
+
+        Spark packs small files into one split up to ``maxSplitBytes``, a
+        figure that also depends on the core count; a rewrite read that
+        way writes rows of many input files into one output file, whose
+        key range then spans theirs, and the table's key clustering (and
+        with it stats pruning) is gone after one batch. An open cost of a
+        whole split per file leaves each file alone in its split, so each
+        touched file becomes at most one output file (files above
+        ``maxPartitionBytes`` still split). Set on a clone: the caller's
+        session conf is never written. A partitioned table's rewrite is
+        hash-partitioned by partition value right after the read, which
+        keeps no split together, so it is read the packed way."""
+        if commit.partition_spec:
+            return self._read_adds(commit, adds)
+        split = self.spark.conf.get("spark.sql.files.maxPartitionBytes")
+        return LakeTable(session_with(self.spark, {
+            "spark.sql.files.openCostInBytes": split}),
+            self.path)._read_adds(commit, adds)
+
     # ----------------------------------------------------- pruned scanning
 
     @staticmethod
@@ -1684,7 +1743,10 @@ class LakeTable:
         # reads back as the literal '__HIVE_DEFAULT_PARTITION__', and an
         # int partition infers BIGINT) — map the sentinel to NULL and
         # always cast to the schema type, like Spark's partition recovery
-        ident_parts = {e for e in commit.partition_spec if "(" not in e}
+        # by field id: a file written before a rename carries the old
+        # name in its dirs, and the spec carries the new one
+        idents = self._spec_sources(commit.partition_spec, identity=True)
+        ident_ids = {f.id for f in cur if f.name.lower() in idents}
 
         def _sel(from_fields: list[Field]) -> str:
             by_id = {f.id: f for f in from_fields}
@@ -1697,7 +1759,7 @@ class LakeTable:
                     )
                 else:
                     expr = f'"{old.name}"'
-                    if old.name in ident_parts:
+                    if f.id in ident_ids:
                         expr = (
                             f"CAST(NULLIF(CAST({expr} AS VARCHAR), "
                             f"'__HIVE_DEFAULT_PARTITION__') AS "
@@ -1876,25 +1938,26 @@ class LakeTable:
     # ------------------------------------------------------------- row DML
 
     def _match_files(self, cond: Column, live: list[AddFile],
-                     commit: Commit, where_str: str | None = None) -> set[str]:
-        """Relative paths of live files containing ≥1 row matching ``cond``.
+                     commit: Commit, where_str: str | None = None
+                     ) -> tuple[int, set[str]]:
+        """(candidate file count, relative paths of the live files
+        containing ≥1 row matching ``cond``).
 
         Two-stage copy-on-write planning, like Iceberg/Delta DML: (1)
         manifest-style stats pruning drops files the predicate provably
-        misses (metadata-only, when the predicate arrived as SQL text);
-        (2) a distributed scan + filter + distinct on the hidden
-        ``_metadata.file_path`` column finds the true hit set — the only
-        thing collected is the (metadata-scale) file-name list."""
-        if not live:
-            return set()
+        misses (metadata-only, when the predicate arrived as SQL text),
+        leaving the candidates; (2) a distributed scan + filter + distinct
+        on the hidden ``_metadata.file_path`` column finds the true hit
+        set — the only thing collected is the (metadata-scale) file-name
+        list."""
         candidates = live
-        if where_str is not None:
+        if where_str is not None and live:
             from lakeshed.pruning import parse_predicate
 
             candidates = self._prune(commit, live,
                                      parse_predicate(where_str))
-            if not candidates:
-                return set()
+        if not candidates:
+            return 0, set()
         df = self._read_adds(commit, candidates, with_file_path=True)
         matched = (
             df.where(cond)
@@ -1902,7 +1965,8 @@ class LakeTable:
             .distinct()
             .collect()
         )
-        return {self._uri_to_rel(r["__file"]) for r in matched}
+        return len(candidates), {self._uri_to_rel(r["__file"])
+                                 for r in matched}
 
     def _uri_to_rel(self, p: str) -> str:
         """``_metadata.file_path`` → the table-relative path AddFile
@@ -1979,15 +2043,16 @@ class LakeTable:
             raise TableError(
                 f"UPDATE references unknown column(s) {sorted(unknown)}"
             )
-        hit = self._match_files(
+        n_cand, hit = self._match_files(
             cond, live, head_commit,
             where_str=where if isinstance(where, str) else None,
         )
+        sx["candidate-files"] = n_cand
         if not hit:
             return self._commit("update", [], [], **ckw,
                                 summary={**sx, "updated-files": 0})
         hit_adds = [a for a in live if a.path in hit]
-        rewritten = self._read_adds(head_commit, hit_adds)
+        rewritten = self._read_rewrite(head_commit, hit_adds)
         assigns = {
             c: (F.expr(e) if isinstance(e, str) else e) for c, e in set.items()
         }
@@ -2014,10 +2079,11 @@ class LakeTable:
         cond = F.expr(where) if isinstance(where, str) else where
         read_v, ckw, sx = self._dml_commit_args(branch, wap_id)
         head_commit, live = self._state(read_v)
-        hit = self._match_files(
+        n_cand, hit = self._match_files(
             cond, live, head_commit,
             where_str=where if isinstance(where, str) else None,
         )
+        sx["candidate-files"] = n_cand
         if not hit:
             return self._commit("delete", [], [], **ckw,
                                 summary={**sx, "deleted-files": 0})
@@ -2025,7 +2091,7 @@ class LakeTable:
         # three-valued logic: a NULL predicate must KEEP the row (SQL
         # deletes only where the condition is TRUE; ~NULL is NULL and a
         # bare where(~cond) would silently drop NULL-condition rows)
-        kept = self._read_adds(head_commit, hit_adds).where(
+        kept = self._read_rewrite(head_commit, hit_adds).where(
             ~F.coalesce(cond, F.lit(False))
         )
         adds = self._write_files(
@@ -2092,7 +2158,18 @@ class LakeTable:
 
         Scale: source is deduped with one window shuffle, target-file
         discovery is a semi-join (broadcast when the source is small —
-        typical for a micro-batch), and only hit files rewrite.
+        typical for a micro-batch), and only hit files rewrite. On an
+        unpartitioned table the rewrite keeps file boundaries: each hit
+        file is read as its own scan split (:meth:`_read_rewrite`) and
+        becomes at most one file inside its old key range, and the
+        batch's inserts are range-partitioned on the key into files of
+        about one live file's rows each. A key-clustered table (a
+        ``compact(sort_by=key)``) so stays clustered from batch to batch,
+        and the key-range prune keeps touching a few files. Under Spark's
+        split packing and the source's hash partitions each output file
+        would span the packed files' or the batch's whole key range, and
+        after one uniform batch every merge would rewrite most of the
+        table. Partitioned tables keep their hash distribution.
         """
         keys = [on] if isinstance(on, str) else list(on)
         read_v, ckw, sx = self._dml_commit_args(branch, wap_id)
@@ -2141,6 +2218,7 @@ class LakeTable:
 
             hit: set[str] = set()
             candidates = live
+            src_rows = 0
             if live:
                 # stats-prune candidate files by the source's key range before
                 # the semi-join: one tiny agg over the cached micro-batch, then
@@ -2149,11 +2227,12 @@ class LakeTable:
                 # keys touch a sliver of the table instead of all of it.
                 from lakeshed.pruning import BoolOp, Comparison
 
-                brow = src.agg(*[
+                brow = src.agg(F.count(F.lit(1)).alias("__n"), *[
                     f for k in keys
                     for f in (F.min(F.col(k)).alias(f"__lo_{k}"),
                               F.max(F.col(k)).alias(f"__hi_{k}"))
                 ]).first()
+                src_rows = brow["__n"]
                 node = None
                 if brow[f"__lo_{keys[0]}"] is None:  # empty source batch
                     candidates = []
@@ -2249,7 +2328,7 @@ class LakeTable:
             # not twice (it is exactly the COW rewrite set, so it's about to be
             # fully materialized anyway).
             if hit_adds:
-                tgt_hits = self._read_adds(head_commit, hit_adds)
+                tgt_hits = self._read_rewrite(head_commit, hit_adds)
                 # evolved columns don't exist in the target files yet —
                 # surface them as typed NULLs so the rewrite projection and
                 # the key anti-join see the full evolved schema
@@ -2325,7 +2404,7 @@ class LakeTable:
                     a for a in live if a.path in pruned and a.path not in hit
                 ]
                 if bysrc_adds:
-                    extra = self._read_adds(head_commit, bysrc_adds)
+                    extra = self._read_rewrite(head_commit, bysrc_adds)
                     for f in added_cols:
                         extra = extra.withColumn(f.name, F.lit(None).cast(f.type))
                     extra = extra.select(*[
@@ -2359,6 +2438,23 @@ class LakeTable:
                         for c in target_cols
                     ])
                 )
+                if live and not head_commit.partition_spec:
+                    # the batch's inserts go to key-range files of their
+                    # own, about one live file's worth of rows each (and
+                    # never more files than a shuffle has partitions, on
+                    # a table of tiny files): left in the source's
+                    # partitioning, every insert file spans the batch's
+                    # whole key range. At one file Spark takes no sample,
+                    # so the bounds never depend on the session's history
+                    # (above one they come from its sample). The count is
+                    # of every source row, matched ones too, so an
+                    # upsert-heavy batch splits finer than it needs to.
+                    total = sum(a.rows for a in live)
+                    k = -(-src_rows * len(live) // max(total, 1))
+                    cap = int(self.spark.conf.get(
+                        "spark.sql.shuffle.partitions"))
+                    inserts = inserts.repartitionByRange(
+                        max(1, min(k, cap)), *keys)
                 rewritten_parts.append(inserts)
 
             if rewritten_parts:
@@ -2372,7 +2468,8 @@ class LakeTable:
             src.unpersist()
             if tgt_hits is not None:
                 tgt_hits.unpersist()
-        summary: dict[str, Any] = {"matched-files": len(hit)}
+        summary: dict[str, Any] = {"candidate-files": len(candidates),
+                                   "matched-files": len(hit)}
         if added_cols:
             summary["evolved-columns"] = ",".join(
                 f.name for f in added_cols

@@ -415,6 +415,206 @@ def test_merge_prunes_candidates_and_inserts_outside_range(cat, spark):
     assert t.read().count() == 30
 
 
+def test_dml_summary_records_candidate_files(cat, spark):
+    """MERGE, UPDATE and DELETE record their planning decision: the files
+    left after the stats prune (``candidate-files``) beside the files the
+    scan found rows in, read back through the snapshots table."""
+    t = cat.create_table("default.cand", spark.createDataFrame(
+        [(i, "a") for i in range(10)], "k int, v string").coalesce(1))
+    for lo in (100, 200):
+        t.append(spark.createDataFrame(
+            [(i, "a") for i in range(lo, lo + 10)],
+            "k int, v string").coalesce(1))
+    # [105, 999] overlaps two files; only the 100s file holds key 105
+    t.merge(spark.createDataFrame([(105, "m"), (999, "n")], "k int, v string"),
+            on="k")
+    t.update({"v": "'u'"}, where="k >= 5 AND k < 150")
+    t.delete("k = 7")
+    t.delete("k = 5000")
+    rows = t.snapshots().orderBy("snapshot_id").collect()[-4:]
+    got = [(r["operation"], r["summary"]["candidate-files"],
+            r["summary"].get("matched-files") or r["summary"].get(
+                "updated-files") or r["summary"].get("deleted-files"))
+           for r in rows]
+    # the merge wrote a new file for 100s + 999; DELETE of 5000 prunes all
+    assert got == [("merge", "2", "1"), ("update", "2", "2"),
+                   ("delete", "1", "1"), ("delete", "0", "0")]
+
+
+def test_merge_keeps_key_clustering(cat, spark):
+    """Copy-on-write MERGE keeps a key-clustered table clustered: each
+    file a merge rewrites becomes at most one file inside its own key
+    range, not one of a few files spanning all the small hit files Spark
+    packed into a split, and a batch's inserts land in a key-range file of
+    their own, not in the source's hash partitions, each spanning the
+    batch's whole key range. So across recent-key upserts and a uniform
+    late correction the files stay key-disjoint and a read of the newest
+    keys plans a few files; the rows equal a replay of the batches."""
+    import random
+
+    rng = random.Random(41)
+    n0, span = 8_000, 600
+    t = cat.create_table("default.clustered", spark.range(n0).select(
+        F.col("id").cast("int").alias("k"),
+        F.sha2(F.col("id").cast("string"), 256).alias("v")).repartition(3))
+    total = sum(a.bytes for a in t.plan_files())
+    t.compact(target_size_bytes=total // 16 + 1, sort_by="k")
+    state = {r.k: r.v for r in t.read().collect()}
+    head, seq = n0, 0
+
+    def key_range(a):
+        return int(a.lower_bounds["k"]), int(a.upper_bounds["k"])
+
+    def batch(late):
+        nonlocal head, seq
+        rows = []
+        if late:  # updates and deletes over the whole key space
+            for k in rng.sample(sorted(state), 400):
+                rows.append((k, "late", "D" if rng.random() < 0.3 else "U"))
+        else:
+            for k in range(head, head + 200):  # inserts at the head
+                rows.append((k, f"i{k}", "I"))
+            for k in rng.sample([k for k in sorted(state)
+                                 if k >= head - span], 80):
+                rows.append((k, f"u{k}", "D" if rng.random() < 0.25 else "U"))
+            rows.append((head + 3, "gone", "D"))  # I then D nets to delete
+            head += 200
+        out = []
+        for k, v, op in rows:
+            seq += 1
+            out.append((k, v, op, seq))
+            if op == "D":
+                state.pop(k, None)
+            else:
+                state[k] = v
+        return out
+
+    for late in (False, False, False, True, False, False, False):
+        live = {a.path: a for a in t.plan_files()}
+        rows = batch(late)
+        c = t.merge(
+            spark.createDataFrame(rows, "k int, v string, op string, seq int"),
+            on="k", when_matched_update={"v": "s.v"},
+            when_matched_delete="s.op = 'D'",
+            when_not_matched_insert="op <> 'D'", source_order="seq")
+        removed = [key_range(live[p]) for p in c.remove]
+        keys = sorted({r[0] for r in rows})
+        per_removed = [0] * len(removed)
+        for a in c.add:
+            lo, hi = key_range(a)
+            inside = [i for i, (rlo, rhi) in enumerate(removed)
+                      if rlo <= lo and hi <= rhi]
+            if inside:
+                per_removed[inside[0]] += 1
+            else:  # the batch's insert file
+                assert not late and head - 200 <= lo and hi < head, (lo, hi)
+        assert max(per_removed, default=0) <= 1, per_removed
+        if not late:
+            # only files whose stats range holds a key of the batch
+            for rlo, rhi in removed:
+                assert any(rlo <= k <= rhi for k in keys), (rlo, rhi)
+            # the span reaches over at most three batches' insert files
+            assert len(c.remove) <= 4, removed
+        files = sorted(key_range(a) for a in t.plan_files())
+        assert all(a[1] < b[0] for a, b in zip(files, files[1:])), files
+        newest = t.plan_files(f"k >= {head - span} AND k < {head}")
+        assert len(newest) <= 4, [key_range(a) for a in newest]
+    assert {r.k: r.v for r in t.read().collect()} == state
+
+
+def test_merge_inserts_split_into_key_disjoint_files(cat, spark):
+    """A batch of more inserts than a live file holds is range-partitioned
+    on the key into several files, each about one live file's rows, whose
+    key ranges do not overlap each other or the table's; never into more
+    files than a shuffle has partitions, though: 400 inserts into a table
+    of one 2-row file would otherwise write 200."""
+    t = cat.create_table("default.ranged", spark.range(200).selectExpr(
+        "CAST(id AS INT) AS k", "'a' AS v").repartitionByRange(4, "k"))
+    assert len(t.plan_files()) == 4
+    # 150 source rows over 4 files of 50 rows: k = ceil(150 / 50) = 3
+    c = t.merge(spark.range(1000, 1150).selectExpr(
+        "CAST(id AS INT) AS k", "'n' AS v").repartition(5), on="k")
+    assert c.remove == [] and 2 <= len(c.add) <= 3
+    ranges = sorted((int(a.lower_bounds["k"]), int(a.upper_bounds["k"]))
+                    for a in t.plan_files())
+    assert all(a[1] < b[0] for a, b in zip(ranges, ranges[1:])), ranges
+    assert ranges[-len(c.add)][0] == 1000 and ranges[-1][1] == 1149
+    assert t.read().count() == 350
+
+    tiny = cat.create_table("default.tiny", spark.createDataFrame(
+        [(0, "a"), (1, "b")], "k int, v string").coalesce(1))
+    c = tiny.merge(spark.range(2, 402).selectExpr("CAST(id AS INT) AS k",
+                                                  "'n' AS v"), on="k")
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert 1 <= len(c.add) <= cap
+    assert tiny.read().count() == 402
+
+
+def test_rename_partition_source_rewrites_spec(cat):
+    """RENAME COLUMN of a partition source rewrites the spec entries on it
+    (identity and transform, matched case-insensitively like Spark
+    resolves them) in the same commit, so later writes and rewrites still
+    partition, and the files written before the rename still read back
+    their NULL and zero-padded identity values; DROP COLUMN of a spec
+    source raises."""
+    cat.create_database("nyc")
+    cat.sql("""
+        CREATE TABLE nyc.t (VendorID BIGINT, ts TIMESTAMP, zone STRING)
+        USING lakeshed PARTITIONED BY (days(TS), bucket(4, VendorID), zone)
+    """)
+    cat.sql("INSERT INTO nyc.t VALUES (1, TIMESTAMP '2024-03-01 10:00:00', 'a'),"
+            " (4, TIMESTAMP '2024-03-01 11:00:00', NULL),"
+            " (5, TIMESTAMP '2024-03-01 12:00:00', '01')")
+    t = cat.table("nyc.t")
+    cat.sql("ALTER TABLE nyc.t RENAME COLUMN VendorID TO vendor_id")
+    assert t._read_commit(t.head()).partition_spec == [
+        "days(TS)", "bucket(4, vendor_id)", "zone"]
+    cat.sql("INSERT INTO nyc.t VALUES (3, TIMESTAMP '2024-03-01 12:00:00', 'a')")
+    t.rename_column("ts", "pickup")
+    c = t.rename_column("zone", "area")  # schema and spec in one commit
+    assert c.partition_spec == ["days(pickup)", "bucket(4, vendor_id)", "area"]
+    assert [f.name for f in c.schemas[str(c.schema_version)]] == [
+        "vendor_id", "pickup", "area"]
+    # the files' dirs still say zone=: the client scan finds them by id
+    rows = sorted(tuple(r) for r in t.read().collect())
+    assert sorted(tuple(r.values()) for r in t.to_arrow().to_pylist()) == rows
+    assert [r[2] for r in rows] == ["a", "a", None, "01"]
+    cat.sql("INSERT INTO nyc.t VALUES (2, TIMESTAMP '2024-03-02 11:00:00', 'b')")
+    cat.sql("CALL system.rewrite_data_files(table => 'nyc.t')")
+    got = cat.sql("SELECT vendor_id, area FROM nyc.t ORDER BY vendor_id")
+    assert [tuple(r) for r in got.collect()] == [
+        (1, "a"), (2, "b"), (3, "a"), (4, None), (5, "01")]
+    assert len(t.plan_files("vendor_id = 2")) == 1
+    for col in ("vendor_id", "pickup", "area"):
+        with pytest.raises(TableError, match="partition source"):
+            t.drop_column(col)
+    cat.sql("ALTER TABLE nyc.t DROP PARTITION FIELD area")
+    t.drop_column("area")
+    assert [f.name for f in t.schema_fields()] == ["vendor_id", "pickup"]
+
+
+def test_dml_never_writes_session_config(cat, spark, monkeypatch):
+    """MERGE, UPDATE and DELETE never write the caller's session conf: a
+    library call that sets (even set-and-restores) a conf key races every
+    other thread sharing the SparkSession. Per-read settings live on a
+    clone of the session."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    t = cat.create_table("default.dml_conf", spark.createDataFrame(
+        [(i, "a") for i in range(20)], "k int, v string").repartition(2))
+    writes = []
+    real_set = RuntimeConfig.set
+    monkeypatch.setattr(RuntimeConfig, "set", lambda self, k, v: (
+        writes.append((self is spark.conf, k)), real_set(self, k, v))[1])
+    t.merge(spark.createDataFrame([(1, "m"), (50, "n")], "k int, v string"),
+            on="k")
+    t.update({"v": "'u'"}, where="k < 5")
+    t.delete("k = 7")
+    assert [k for mine, k in writes if mine] == []
+    assert t.read().count() == 20
+    assert {r.k: r.v for r in t.read().collect()}[1] == "u"
+
+
 def test_sql_ddl_create_props_partition(cat, spark):
     """D2/D9/D12/D7 SQL forms: CREATE TABLE with transforms + props,
     SET/UNSET TBLPROPERTIES, ADD/DROP PARTITION FIELD, column reposition."""
