@@ -576,6 +576,26 @@ def _stats_bound(file_type: str, read_type: str) -> bool:
             and _INTEGRAL.index(f) <= _INTEGRAL.index(r))
 
 
+def stat_value(stat: str, file_type: str, read_type: str) -> Any:
+    """A file's stringified bound as a value of the column's comparison
+    domain (number, string, datetime), or None when the stats do not
+    bound the values a read under ``read_type`` sees
+    (:func:`_stats_bound`) or the type has no order here."""
+    if not _stats_bound(file_type, read_type):
+        return None
+    t = _norm_type(file_type)
+    if t in _NUMERIC_TYPES:
+        try:
+            return _num(stat)
+        except ValueError:
+            return None
+    if t == "string":
+        return stat
+    if t in _TEMPORAL_TYPES:
+        return _parse_temporal(stat)
+    return None
+
+
 def _struct_field_type(t: str, name: str) -> str | None:
     """Type of field ``name`` in a ``struct<a:int,b:decimal(10,2)>``
     simpleString; None when ``t`` is not a struct or lacks the field."""

@@ -31,6 +31,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import MapType
 
 from lakeshed.table import LakeTable
 
@@ -227,10 +228,22 @@ def diff_versions(table: LakeTable, v_from: int, v_to: int | None = None
     new_rows = table._read_adds(lookup, added)
     old_rows = table._read_adds(lookup, removed)
     cols = new_rows.columns
+    # EXCEPT cannot compare maps: both legs carry a map column as its
+    # sorted entries, turned back into the map after the diff
+    maps = [f.name for f in new_rows.schema.fields
+            if isinstance(f.dataType, MapType)]
+    if maps:
+        new_rows, old_rows = (df.withColumns({
+            c: F.array_sort(F.map_entries(F.col(f"`{c}`"))) for c in maps
+        }) for df in (new_rows, old_rows))
     inserts = new_rows.exceptAll(old_rows).select(
         F.lit("insert").alias("_change_type"), *cols
     )
     deletes = old_rows.exceptAll(new_rows).select(
         F.lit("delete").alias("_change_type"), *cols
     )
-    return inserts.unionByName(deletes)
+    out = inserts.unionByName(deletes)
+    if maps:
+        out = out.withColumns({
+            c: F.map_from_entries(F.col(f"`{c}`")) for c in maps})
+    return out

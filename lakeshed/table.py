@@ -163,6 +163,24 @@ def _schema_from_df(df: DataFrame, start_id: int = 1) -> list[Field]:
     ]
 
 
+def _one_partition(df: DataFrame) -> bool:
+    """Does ``df`` plan to a single partition? The count is taken only
+    when the physical plan holds no exchange, no subquery and no cached
+    relation: building such a plan's RDD runs no job, whereas an adaptive
+    plan runs its shuffle stages when executed."""
+    plan = df._jdf.queryExecution().executedPlan()
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if ("Exchange" in name or "Subquery" in name or "Adaptive" in name
+                or "InMemory" in name or node.subqueries().nonEmpty()):
+            return False
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return plan.execute().getNumPartitions() == 1
+
+
 def _ddl(fields: list[Field]) -> str:
     return ", ".join(f"`{f.name}` {f.type}" for f in fields)
 
@@ -279,6 +297,22 @@ class Commit:
 _MAX_DICT = 64
 
 
+def _min_max(st) -> tuple[Any, Any]:
+    """A column chunk's min and max. pyarrow cannot convert the stats of
+    a decimal stored as an int32/int64 (what Spark writes up to
+    precision 18); those are scaled from the raw integers."""
+    try:
+        return st.min, st.max
+    except NotImplementedError:
+        from decimal import Decimal
+
+        scale = json.loads(st.logical_type.to_json()).get("scale")
+        if scale is None:
+            raise
+        return (Decimal(st.min_raw).scaleb(-scale),
+                Decimal(st.max_raw).scaleb(-scale))
+
+
 def _file_stats(abs_path: str, dict_cols: tuple = (),
                 bloom_cols: tuple = (), bloom_bits: int = 8192,
                 ) -> tuple[int, int, dict, dict, dict, dict, dict]:
@@ -319,10 +353,11 @@ def _file_stats(abs_path: str, dict_cols: tuple = (),
             if st is None or not st.has_min_max:
                 mm_incomplete.add(name)
             else:
-                if name not in mins or st.min < mins[name]:
-                    mins[name] = st.min
-                if name not in maxs or st.max > maxs[name]:
-                    maxs[name] = st.max
+                lo, hi = _min_max(st)
+                if name not in mins or lo < mins[name]:
+                    mins[name] = lo
+                if name not in maxs or hi > maxs[name]:
+                    maxs[name] = hi
             if st is None or st.null_count is None:
                 nc_incomplete.add(name)
             else:
@@ -1492,7 +1527,14 @@ class LakeTable:
         """Scan a specific file list under ``commit``'s schema; optionally
         carries a ``__file`` column captured from ``_metadata.file_path``
         INSIDE each file-group scan (the hidden column does not survive a
-        union, so DML planning must grab it before groups merge)."""
+        union, so DML planning must grab it before groups merge).
+
+        Each file group is read with the schema the commit log holds for
+        its schema version, minus the identity-partition columns its
+        directories hold, as ``to_arrow`` does: every data file is written
+        by ``_write_files`` from a frame cast to the log's types, so that
+        schema is the files' physical one, and building the read runs no
+        schema-inference job."""
         cur_fields = commit.schemas[str(commit.schema_version)]
         if not adds:
             ddl = _ddl(cur_fields)
@@ -1535,9 +1577,10 @@ class LakeTable:
         ):
             from_fields = commit.schemas[str(sv)]
             field_by_name = {f.name: f for f in from_fields}
-            df = self.spark.read.parquet(
-                *[os.path.join(self.path, a.path) for a in grp]
-            )
+            in_dirs = {k for k, _ in pvals}
+            df = self.spark.read.schema(
+                _ddl([f for f in from_fields if f.name not in in_dirs])
+            ).parquet(*[os.path.join(self.path, a.path) for a in grp])
             if with_file_path:
                 df = df.withColumn("__file", F.col("_metadata.file_path"))
             for k, v in pvals:
@@ -1552,7 +1595,8 @@ class LakeTable:
         return reduce(DataFrame.unionByName, parts)
 
     def _read_rewrite(self, commit: Commit, adds: list[AddFile]) -> DataFrame:
-        """A copy-on-write rewrite set, read with one scan split per file.
+        """A copy-on-write rewrite set, read so that a file some column's
+        stats range sets apart from the rest keeps a scan split of its own.
 
         Spark packs small files into one split up to ``maxSplitBytes``, a
         figure that also depends on the core count; a rewrite read that
@@ -1560,17 +1604,71 @@ class LakeTable:
         key range then spans theirs, and the table's key clustering (and
         with it stats pruning) is gone after one batch. An open cost of a
         whole split per file leaves each file alone in its split, so each
-        touched file becomes at most one output file (files above
+        set-apart file becomes at most one output file (files above
         ``maxPartitionBytes`` still split). Set on a clone: the caller's
-        session conf is never written. A partitioned table's rewrite is
-        hash-partitioned by partition value right after the read, which
+        session conf is never written. Files whose ranges overlap on every
+        column have no clustering to keep, and are read the packed way, so
+        a rewrite of many small overlapping files (streaming appends) runs
+        a few tasks and writes a few files. A partitioned table's rewrite
+        is hash-partitioned by partition value right after the read, which
         keeps no split together, so it is read the packed way."""
         if commit.partition_spec:
             return self._read_adds(commit, adds)
-        split = self.spark.conf.get("spark.sql.files.maxPartitionBytes")
-        return LakeTable(session_with(self.spark, {
-            "spark.sql.files.openCostInBytes": split}),
-            self.path)._read_adds(commit, adds)
+        apart = self._set_apart(commit, adds)
+        parts = []
+        if len(apart) < len(adds):
+            parts.append(self._read_adds(
+                commit, [a for a in adds if a.path not in apart]))
+        if apart:
+            split = self.spark.conf.get("spark.sql.files.maxPartitionBytes")
+            parts.append(LakeTable(session_with(self.spark, {
+                "spark.sql.files.openCostInBytes": split}),
+                self.path)._read_adds(
+                    commit, [a for a in adds if a.path in apart]))
+        return reduce(DataFrame.unionByName, parts)
+
+    @staticmethod
+    def _set_apart(commit: Commit, adds: list[AddFile]) -> set[str]:
+        """Paths of the files among ``adds`` whose stats range on some
+        column meets no other file's range on it. Bounds are compared in
+        the column's type under ``commit``'s schema, resolved by field id;
+        a column some file has no usable range for sets no file apart."""
+        from lakeshed.pruning import stat_value
+
+        if len(adds) < 2:
+            return {a.path for a in adds}
+        by_id = {sv: {f.id: f for f in flds}
+                 for sv, flds in commit.schemas.items()}
+        apart: set[str] = set()
+        for f in commit.schemas[str(commit.schema_version)]:
+            spans = []
+            for a in adds:
+                old = by_id[str(a.schema_version)].get(f.id)
+                if old is None:
+                    break
+                lo, hi = (
+                    stat_value(b[old.name], old.type, f.type)
+                    if old.name in b else None
+                    for b in (a.lower_bounds, a.upper_bounds)
+                )
+                if lo is None or hi is None:
+                    break
+                spans.append((lo, hi, a.path))
+            else:
+                try:
+                    spans.sort(key=lambda s: s[0])
+                    reach = None  # the highest bound left of each span
+                    for i, (lo, hi, path) in enumerate(spans):
+                        if ((reach is None or reach < lo)
+                                and (i + 1 == len(spans)
+                                     or hi < spans[i + 1][0])):
+                            apart.add(path)
+                        reach = hi if reach is None else max(reach, hi)
+                except TypeError:  # datetimes with and without an offset
+                    continue
+                if len(apart) == len(adds):
+                    break
+        return apart
 
     # ----------------------------------------------------- pruned scanning
 
@@ -2156,14 +2254,22 @@ class LakeTable:
           evaluates first. An unconditional update must rewrite every
           live file — pass the condition to let stats pruning bound it.
 
-        Scale: source is deduped with one window shuffle, target-file
-        discovery is a semi-join (broadcast when the source is small —
-        typical for a micro-batch), and only hit files rewrite. On an
-        unpartitioned table the rewrite keeps file boundaries: each hit
-        file is read as its own scan split (:meth:`_read_rewrite`) and
-        becomes at most one file inside its old key range, and the
-        batch's inserts are range-partitioned on the key into files of
-        about one live file's rows each. A key-clustered table (a
+        Scale: source is deduped with one window shuffle, or with none
+        when it plans to a single partition (a one-file micro-batch does):
+        one partition already satisfies the window's clustering, and the
+        cached source then stays one partition, so each broadcast of it
+        is a one-task job. Target-file discovery is a semi-join
+        (broadcast when the source is small — typical for a micro-batch),
+        and only hit files rewrite. The rewrite set is not cached: the
+        rewrite join and the insert anti-join (key column only) each read
+        it from parquet, which costs less than the jobs that would
+        materialise a cache. On an unpartitioned table the rewrite keeps
+        file boundaries: each hit file that some column's stats range
+        sets apart from the others is read as its own scan split
+        (:meth:`_read_rewrite`) and becomes at most one file inside its
+        old key range, and the batch's inserts are range-partitioned on
+        the key into files of about one live file's rows each. A
+        key-clustered table (a
         ``compact(sort_by=key)``) so stays clustered from batch to batch,
         and the key-range prune keeps touching a few files. Under Spark's
         split packing and the source's hash partitions each output file
@@ -2203,6 +2309,11 @@ class LakeTable:
 
         src = source
         if source_order is not None:
+            if _one_partition(src):
+                # one partition satisfies the window's clustering, so the
+                # dedup needs no shuffle and the cached source stays one
+                # partition: each broadcast of it is a one-task job
+                src = src.coalesce(1)
             w = Window.partitionBy(*keys).orderBy(F.col(source_order).desc())
             src = (
                 src.withColumn("__rn", F.row_number().over(w))
@@ -2210,10 +2321,8 @@ class LakeTable:
                 .drop("__rn")
             )
         src = src.cache()
-        tgt_hits: DataFrame | None = None
         # try/finally: a mid-merge failure (constraint violation,
-        # commit conflict) must not leak the cached source or the
-        # persisted target-hits past the call
+        # commit conflict) must not leak the cached source past the call
         try:
 
             hit: set[str] = set()
@@ -2323,10 +2432,6 @@ class LakeTable:
                 return frame
 
             rewritten_parts: list[DataFrame] = []
-            # One persisted frame serves both the rewrite join and the insert
-            # anti-join below — the touched slice is scanned from parquet once,
-            # not twice (it is exactly the COW rewrite set, so it's about to be
-            # fully materialized anyway).
             if hit_adds:
                 tgt_hits = self._read_rewrite(head_commit, hit_adds)
                 # evolved columns don't exist in the target files yet —
@@ -2336,9 +2441,7 @@ class LakeTable:
                     tgt_hits = tgt_hits.withColumn(
                         f.name, F.lit(None).cast(f.type)
                     )
-                tgt_hits = tgt_hits.persist()
-                tgt = tgt_hits
-                joined = tgt.alias("t").join(
+                joined = tgt_hits.alias("t").join(
                     src.alias("s"),
                     reduce(lambda a, b: a & b,
                            [F.col(f"t.`{k}`") == F.col(f"s.`{k}`") for k in keys]),
@@ -2466,8 +2569,6 @@ class LakeTable:
                 )
         finally:
             src.unpersist()
-            if tgt_hits is not None:
-                tgt_hits.unpersist()
         summary: dict[str, Any] = {"candidate-files": len(candidates),
                                    "matched-files": len(hit)}
         if added_cols:

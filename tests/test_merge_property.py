@@ -70,3 +70,36 @@ def test_merge_equals_python_replay(spark, tmp_path_factory, initial, events):
     got = {r.k: r.v for r in t.read().collect()}
     assert got == replay(initial, events)
     t.drop()
+
+def test_one_partition_dedup_equals_shuffled_dedup(spark, tmp_path):
+    """A one-partition source is deduped without a shuffle; the same
+    changelog batch merged as one partition and as ``repartition(7)``
+    (deduped by the window's shuffle) leaves the same table, equal to the
+    replay, over keys that arrive I-then-D, D-then-I and repeatedly."""
+    import random
+
+    from lakeshed.table import _one_partition
+
+    rng = random.Random(11)
+    initial = {k: f"i{k}" for k in range(0, 40, 2)}
+    events = [(rng.choice("ID"), rng.randrange(40), f"e{n}")
+              for n in range(160)]
+    events[40:40] = [("I", 50, "a"), ("D", 51, "b"), ("D", 50, "c"),
+                     ("I", 51, "d"), ("D", 2, "e"), ("I", 2, "f")]
+    rows = [(k, v, op, seq) for seq, (op, k, v) in enumerate(events)]
+    path = str(tmp_path / "batch")
+    spark.createDataFrame(rows, "k int, v string, op string, seq int") \
+        .coalesce(1).write.parquet(path)
+    one = spark.read.parquet(path)
+    many = one.repartition(7)
+    assert _one_partition(one) and not _one_partition(many)
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    got = []
+    for name, batch in (("one", one), ("many", many)):
+        t = cat.create_table(f"default.{name}", spark.createDataFrame(
+            sorted(initial.items()), "k int, v string").repartition(3))
+        t.merge(batch, on="k", when_matched_update={"v": "s.v"},
+                when_matched_delete="s.op = 'D'",
+                when_not_matched_insert="op <> 'D'", source_order="seq")
+        got.append({r.k: r.v for r in t.read().collect()})
+    assert got[0] == got[1] == replay(initial, events)

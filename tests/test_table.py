@@ -522,6 +522,33 @@ def test_merge_keeps_key_clustering(cat, spark):
     assert {r.k: r.v for r in t.read().collect()} == state
 
 
+def test_rewrite_packs_files_no_column_sets_apart(cat, spark):
+    """A copy-on-write rewrite keeps a scan split of its own only for a
+    file that some column's stats range sets apart from the other touched
+    files; files whose ranges overlap on every column have no clustering
+    to keep and are read packed, so an UPDATE over many small overlapping
+    files writes fewer files than it read."""
+    t = cat.create_table("default.packed", spark.range(480).selectExpr(
+        "CAST((id * 7919) % 1000 AS INT) AS k", "'a' AS v",
+        "CAST(id % 5 AS DOUBLE) AS x").repartition(24))
+    for lo in (5000, 6000):
+        t.append(spark.range(lo, lo + 20).selectExpr(
+            "CAST(id AS INT) AS k", "'a' AS v", "CAST(id % 5 AS DOUBLE) AS x")
+            .coalesce(1))
+    commit, live = t._state(t.head())
+    apart = t._set_apart(commit, live)
+    assert len(live) == 26 and len(apart) == 2
+    assert all(int(a.lower_bounds["k"]) >= 5000
+               for a in live if a.path in apart)
+    c = t.update({"v": "'u'"})
+    ranges = [(int(a.lower_bounds["k"]), int(a.upper_bounds["k"]))
+              for a in c.add]
+    assert sorted(r for r in ranges if r[0] >= 5000) == [
+        (5000, 5019), (6000, 6019)]
+    assert len(ranges) - 2 < 24
+    assert t.read().where("v = 'u'").count() == 520
+
+
 def test_merge_inserts_split_into_key_disjoint_files(cat, spark):
     """A batch of more inserts than a live file holds is range-partitioned
     on the key into several files, each about one live file's rows, whose
@@ -591,6 +618,173 @@ def test_rename_partition_source_rewrites_spec(cat):
     cat.sql("ALTER TABLE nyc.t DROP PARTITION FIELD area")
     t.drop_column("area")
     assert [f.name for f in t.schema_fields()] == ["vendor_id", "pickup"]
+
+
+def _cell(col: str, v):
+    """One cell from Spark, from Arrow or from the model as a comparable
+    value: the array of structs as tuples of field values, the map as
+    sorted pairs (Arrow returns a map as a list of pairs)."""
+    if col == "arr" and v is not None:
+        return tuple(tuple(e.values()) if isinstance(e, dict) else tuple(e)
+                     for e in v)
+    if col == "m" and v is not None:
+        return tuple(sorted(v.items() if isinstance(v, dict) else v))
+    return v
+
+
+def test_reads_use_the_logged_schema_through_evolution(cat, spark):
+    """Every reader agrees with a plain-Python model of the table while its
+    files span schema versions and layouts: an identity partition field
+    added after files exist (older files hold the column in their data,
+    newer ones in their directories, one of them the NULL value), a
+    rename, a drop and re-add under the same name, an int → bigint retype,
+    decimal, timestamp_ntz, array<struct> and map columns, and a
+    mixed-case column read under ``spark.sql.caseSensitive=true``."""
+    import datetime as dt
+    import random
+    from decimal import Decimal
+
+    from lakeshed.session import session_with
+    from lakeshed.streaming import diff_versions
+
+    rng = random.Random(23)
+    schema = {"k": "int", "Name": "string", "amt": "decimal(10,2)",
+              "ts": "timestamp_ntz", "arr": "array<struct<a:int,b:string>>",
+              "m": "map<string,int>", "zone": "string", "n": "int",
+              "old": "string"}
+    model: dict[int, dict] = {}
+
+    def frame(keys, zones):
+        data = []
+        for k in keys:
+            r = {"k": k, "Name": f"N{k}",
+                 "amt": Decimal(rng.randrange(-10**6, 10**6)) / 100,
+                 "ts": dt.datetime(2024, 1, 1) + dt.timedelta(
+                     seconds=rng.randrange(10**7), microseconds=k % 10**6),
+                 "arr": [(k % 1000, f"b{k}"), (None, None)],
+                 "m": {f"m{k}": k % 1000, "x": None},
+                 "zone": rng.choice(zones),
+                 "n": k * 10 if schema["n"] == "int" else f"s{k}",
+                 "old": f"o{k}", "note": f"o{k}"}
+            model[k] = {c: r[c] for c in schema}
+            data.append(tuple(r[c] for c in schema))
+        return spark.createDataFrame(
+            data, ", ".join(f"{c} {t}" for c, t in schema.items()))
+
+    t = cat.create_table("default.logged", frame(range(6), ["z1", "z2"])
+                         .coalesce(1))
+    t.add_partition_field("zone")
+    t.append(frame(range(6, 12), ["z1", None, "01"]).repartition(2))
+    t.rename_column("old", "note")
+    schema = {("note" if c == "old" else c): ty for c, ty in schema.items()}
+    for m in model.values():
+        m["note"] = m.pop("old")
+    t.append(frame(range(12, 15), ["z2", None]))
+    v_mid = t.head()
+    before = {k: {**m, "n": None} for k, m in model.items()}
+    t.drop_column("n")
+    t.add_column("n", "string")
+    del schema["n"]
+    schema["n"] = "string"
+    for m in model.values():
+        m["n"] = None  # the re-added column is a new field
+    t.append(frame(range(15, 18), ["z1"]))
+    t.alter_column("k", type="bigint")
+    schema["k"] = "bigint"
+    t.append(frame([2**40, 2**40 + 1], ["z3", None]))
+    t.update({"Name": "'upd'"}, where="k = 3 OR k = 13")
+    model[3]["Name"] = model[13]["Name"] = "upd"
+    t.delete("k = 7")
+    del model[7]
+    assert len({a.schema_version for a in t.plan_files()}) >= 3
+    cols = list(schema)
+
+    def want(rows, keep=lambda m: True):
+        return sorted(tuple(_cell(c, m[c]) for c in cols)
+                      for m in rows if keep(m))
+
+    def got(df):
+        assert df.columns == cols
+        return sorted(tuple(_cell(c, v) for c, v in zip(cols, r))
+                      for r in df.collect())
+
+    assert got(t.read()) == want(model.values())
+    assert got(t.scan("k >= 9")) == want(model.values(),
+                                         lambda m: m["k"] >= 9)
+    arrow = t.to_arrow("k >= 9")
+    assert arrow.column_names == cols
+    assert sorted(tuple(_cell(c, r[c]) for c in cols)
+                  for r in arrow.to_pylist()) == want(
+        model.values(), lambda m: m["k"] >= 9)
+    assert t.count_rows() == len(model)
+    exact = LakeTable(session_with(spark, {"spark.sql.caseSensitive": "true"}),
+                      t.path)
+    assert got(exact.read()) == want(model.values())
+    assert got(exact.scan("Name = 'upd'")) == want(
+        model.values(), lambda m: m["Name"] == "upd")
+
+    # both legs of the diff read under the head's schema: n is NULL on
+    # every row from before its re-add
+    diff = diff_versions(t, v_mid)
+    assert diff.columns == ["_change_type", *cols]
+    changes = sorted((r[0], *(_cell(c, v) for c, v in zip(cols, r[1:])))
+                     for r in diff.collect())
+    assert changes == sorted(
+        [("insert", *row) for row in want(
+            [m for k, m in model.items() if before.get(k) != m])]
+        + [("delete", *row) for row in want(
+            [m for k, m in before.items() if model.get(k) != m])])
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted by a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, "job budget")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_merge_and_read_job_budget(cat, spark, tmp_path):
+    """A micro-batch MERGE and a read-back run few Spark jobs.
+
+    - Building ``read()`` or ``scan(p)`` runs none: each file group is
+      read with the schema the commit log holds, so no schema-inference
+      job runs (1 job each before).
+    - A MERGE of a one-file ``source_order`` batch runs at most 9: 2 for
+      the dedup and the key-range aggregate, 3 to find the hit files and
+      4 to write. Before, it ran 15: the dedup window shuffled the batch
+      into the session's shuffle partitions (4 jobs for the aggregate),
+      two reads inferred their schema, and the persisted rewrite set and
+      the many-partition cached source cost jobs of their own.
+
+    The batch holds an I-then-D key, which must net to a delete."""
+    t = cat.create_table("default.budget", spark.range(4000).selectExpr(
+        "CAST(id AS INT) AS k", "CAST(id % 7 AS STRING) AS v").repartition(3))
+    total = sum(a.bytes for a in t.plan_files())
+    t.compact(target_size_bytes=total // 4 + 1, sort_by="k")
+    assert len(t.plan_files()) == 4
+    path = str(tmp_path / "batch")
+    rows = [(5, "u", "U", 1), (4000, "n", "I", 2), (4001, "gone", "I", 3),
+            (4001, "gone", "D", 4), (3000, "x", "D", 5)]
+    spark.createDataFrame(rows, "k int, v string, op string, seq int") \
+        .coalesce(1).write.parquet(path)
+    batch = spark.read.parquet(path)
+    assert _jobs(spark, t.read) == 0
+    assert _jobs(spark, lambda: t.scan("k >= 3500")) == 0
+    assert _jobs(spark, lambda: t.merge(
+        batch, on="k", when_matched_update={"v": "s.v"},
+        when_matched_delete="s.op = 'D'",
+        when_not_matched_insert="op <> 'D'", source_order="seq")) <= 9
+    got = {r.k: r.v for r in t.read().collect()}
+    assert len(got) == 4000 and got[5] == "u" and got[4000] == "n"
+    assert 4001 not in got and 3000 not in got
 
 
 def test_dml_never_writes_session_config(cat, spark, monkeypatch):
